@@ -245,11 +245,13 @@ object Bench {
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var used = 0
     // Membership pinned (see PinnedLineKeys); slowest-first ordering
-    // kept for humans; budget guard kept as a deterministic backstop.
+    // kept for humans; budget guard kept as a deterministic backstop,
+    // and every pinned key it drops is named on a BENCHTRIM line.
     results.toSeq.filter(r => PinnedLineKeys(r._1)).sortBy(-_._2)
       .foreach { case (k, v) =>
         val e = s""""$k":${fmt(v)}"""
         if (used + e.length + 1 <= budget) { entries += e; used += e.length + 1 }
+        else println(s"BENCHTRIM $k")
       }
     val json = head + entries.mkString(",") + tail
     // Belt and braces against build-tool log decoration: the JSON goes to

@@ -7,6 +7,13 @@ import graft.operators._
   * Each operator module contributes a `queries` map (key → DataFrame
   * builder over a scale-factor dir) and an `oracles` map (key →
   * equivalent DuckDB SQL). SURVEY.md §2 is the inventory this aggregates.
+  *
+  * Query sessions must be built with `GraftExtensions`
+  * (`.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions`): it is the one place
+  * the native functions (dot_f, dotfx, l2fx, heavy_hitters, topk_by,
+  * kmv_bottomk, bottomk_distinct_by) and the as-of join strategy are
+  * registered, and no query registers them itself.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,7 +79,7 @@ case class DotProductF(left: Expression, right: Expression)
 }
 
 object DotProductF {
-  /** Arity-checked builder shared by GraftExtensions and register():
+  /** Arity-checked builder GraftExtensions registers:
     * wrong argument counts fail analysis cleanly instead of throwing
     * IndexOutOfBounds from inside the builder. */
   def build(exprs: Seq[Expression]): DotProductF = {
@@ -93,11 +92,6 @@ object DotProductF {
           "docroot" -> "https://spark.apache.org/docs/latest"))
     DotProductF(exprs.head, exprs(1))
   }
-
-  /** Register `dot_f(arr, arr)` for SQL / expr() use in a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", build, "built-in")
 }
 
 /** Native Catalyst expression: FIXED-POINT dot product of two
@@ -187,9 +181,4 @@ object DotFixedF {
           "docroot" -> "https://spark.apache.org/docs/latest"))
     DotFixedF(exprs.head, exprs(1))
   }
-
-  /** Register `dotfx(arr, arr)` for SQL / expr() use in a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dotfx", build, "built-in")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, Literal}
@@ -152,9 +151,4 @@ object HeavyHittersAgg {
     }
     HeavyHittersAgg(exprs.head, k).toAggregateExpression()
   }
-
-  /** Register `heavy_hitters(col, k)` for SQL / expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters", build, "built-in")
 }

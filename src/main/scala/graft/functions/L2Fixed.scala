@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -86,7 +85,7 @@ case class L2FixedF(left: Expression, right: Expression)
 }
 
 object L2FixedF {
-  /** Arity-checked builder shared by GraftExtensions and register(). */
+  /** Arity-checked builder GraftExtensions registers. */
   def build(exprs: Seq[Expression]): L2FixedF = {
     if (exprs.length != 2)
       throw new org.apache.spark.sql.AnalysisException(
@@ -97,9 +96,4 @@ object L2FixedF {
           "docroot" -> "https://spark.apache.org/docs/latest"))
     L2FixedF(exprs.head, exprs(1))
   }
-
-  /** Register `l2fx(arr, arr)` for SQL / expr() use in a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2fx", build, "built-in")
 }

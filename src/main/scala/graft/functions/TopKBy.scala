@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnsafeProjection, UnsafeRow}
@@ -142,11 +141,6 @@ object TopKByAgg {
     }
     TopKByAgg(exprs(0), exprs(1), k).toAggregateExpression()
   }
-
-  /** Register `topk_by` for SQL / expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by", build, "built-in")
 }
 
 /** Bounded bottom-k-DISTINCT aggregate
@@ -310,9 +304,4 @@ object BottomKDistinctByAgg {
     }
     BottomKDistinctByAgg(exprs(0), exprs(1), k).toAggregateExpression()
   }
-
-  /** Register `bottomk_distinct_by` for SQL / expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottomk_distinct_by", build, "built-in")
 }

@@ -139,6 +139,11 @@ object DedupOps {
     * bounding any bucket's join cost to O(bucket), not O(bucket²). */
   private val MinhashBandCap = 1000
 
+  /** Rows per task of the dedup_components partitioner
+    * (Ckpt.Loop.partitioner): ~20k edges per task. The bounded graph
+    * loops use 500k (GraphOps.FixpointRowsPerTask). */
+  private val ComponentsRowsPerTask = 20000L
+
   /** Banded MinHash index of a corpus: (doc_id, m1..m16, band, bh).
     *
     * Formulated as explode + 16 codegen'd min() aggregates (one
@@ -400,21 +405,13 @@ object DedupOps {
       // along edges and pointer-jumps (label(x) ← label(label(x)),
       // O(log diameter) rounds); per-round checkpoint truncates
       // lineage so round N never recomputes rounds 1..N-1 — durable
-      // (`spark.graft.components.checkpointDir`) when configured, else
+      // (`spark.graft.checkpointDir`, see Ckpt) when configured, else
       // localCheckpoint. Convergence = zero labels changed this round,
       // counted exactly over a co-partitioned (narrow) self-join; a
       // floating-point label SUM would silently absorb a small
       // last-round decrease once totals pass 2^53 (~1e8 docs), exiting
       // before the fixpoint.
-      import org.apache.spark.HashPartitioner
-      // Per-key conf kept as an override; the engine-wide switch is
-      // spark.graft.checkpointDir (Ckpt), adopted round 10 across all
-      // fixpoint operators after the round-9 worker-kill probe.
-      val ckptDir = s.conf
-        .getOption("spark.graft.components.checkpointDir")
-        .filter(_.nonEmpty)
-        .orElse(Ckpt.dir(s))
-      ckptDir.foreach(Ckpt.ensure(s, _))
+      val loop = Ckpt.loop(s)
       val edges = simhashPairs(Tables.documents(s, d)).select(col("a"), col("b"))
       // Durable runs reliably checkpoint the edge list too: a
       // localCheckpoint's blocks live only on executors, so losing an
@@ -425,74 +422,19 @@ object DedupOps {
       // blocks instead of recomputing the full simhashPairs lineage a
       // second time (the same discipline as the fixpoint rounds below).
       val und = Ckpt.df(
-        edges.union(edges.select(col("b").as("a"), col("a").as("b"))),
-        ckptDir)
-      // Partitioner width scales with DATA and CLUSTER (overridable
-      // per-job): ~20k edges per task, floored at min(8, parallelism)
-      // so a tiny graph doesn't pay 32 tasks of scheduling overhead per
-      // fixpoint round, and capped at 4x defaultParallelism so a 100 TB
-      // near-dup graph fans out with the cluster instead of funneling
-      // through a fixed count. (und is an EAGER localCheckpoint, so the
-      // count here reads materialized blocks, not a recompute.)
-      val edgeCnt = und.count()
-      val nPart = s.conf.getOption("spark.graft.components.partitions")
-        .map(_.toInt)
-        .getOrElse {
-          val byData = (edgeCnt / 20000L).toInt + 1
-          math.max(math.min(byData, s.sparkContext.defaultParallelism * 4),
-            math.min(8, s.sparkContext.defaultParallelism))
-        }
-      val part = new HashPartitioner(nPart)
-      // Reliable checkpoints recompute an UNPERSISTED RDD's lineage a
-      // second time for the checkpoint job (documented Spark behavior),
-      // doubling every fixpoint round — so the durable path persists
-      // first (the one sanctioned persist in this codebase; checkpoint
-      // files own the data, so the block is short-lived) and the loop
-      // unpersists each round's RDD once its successor is materialized.
-      // The fixpoint's RDD[(Long, Long)] blocks are stored SERIALIZED
-      // by default (round-17 verdict 5, measured in SCALE.md round-17):
-      // a deserialized block holds ~48-64 B of Tuple2/boxed-Long
-      // objects per pair where the serialized stream holds a fraction
-      // of that, which matters when a constrained heap pins the edge
-      // list + two label generations at once. sf10, solo, 3-pass
-      // medians: 8 g SER 122.0 s vs deser 167.2 s (-27%, the GC tax of
-      // boxed pairs in a knee-regime heap); 16 g SER 155.5 s vs deser
-      // 150.3 s (+3%, box noise) — SER wins where memory is tight and
-      // costs noise where it isn't. `spark.graft.fixpoint.serStorage=
-      // false` opts back into deserialized blocks. localCheckpoint
-      // keeps a pre-set level, only adding the disk bit
-      // (LocalRDDCheckpointData.transformStorageLevel), so the knob
-      // reaches both the durable and local modes.
-      val blockLvl =
-        if (s.conf.getOption("spark.graft.fixpoint.serStorage")
-              .exists(v => v == "0" || v.equalsIgnoreCase("false")))
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      def ckpt(r: org.apache.spark.rdd.RDD[_]): Unit =
-        if (ckptDir.isDefined) {
-          r.persist(blockLvl)
-          r.checkpoint()
-        } else { r.persist(blockLvl); r.localCheckpoint(); () }
-      // unck releases BOTH the persisted blocks and the superseded
-      // round's reliable checkpoint FILES (round-11): by the time it
-      // runs, the successor is materialized and the change count — the
-      // last reader of this generation — has completed, so a durable
-      // fixpoint run keeps O(1) checkpoints on the FS, not O(rounds).
-      // Round 17: blocks are released in the LOCAL mode too (the old
-      // guard skipped everything when no checkpoint dir was set, so a
-      // default-mode run left EVERY round's label generation persisted
-      // until the ContextCleaner got to it — ~rounds × label-table
-      // blocks of dead weight per invocation, which is exactly the
-      // suite-context churn the round-17 profiling isolated: the
-      // fixpoint keys ran ~2× their solo time inside a full bench
-      // pass). Releasing is safe at the call point in both modes: the
-      // successor generation is materialized and the change count has
-      // completed, so the superseded generation has no readers left.
-      def unck(r: org.apache.spark.rdd.RDD[_]): Unit = {
-        r.unpersist(false)
-        if (ckptDir.isDefined)
-          r.getCheckpointFile.foreach(f => Ckpt.deleteFile(s, f))
-      }
+        edges.union(edges.select(col("b").as("a"), col("a").as("b"))))
+      // ~20k edges per task (Loop.partitioner). und is an EAGER
+      // checkpoint, so the count here reads materialized blocks, not a
+      // recompute.
+      val part = loop.partitioner(und.count(), ComponentsRowsPerTask)
+      // Each generation is pinned with truncate = true (persisted at
+      // Ckpt.Level, then reliably checkpointed or localCheckpointed), so
+      // round N never recomputes rounds 1..N-1, and released — blocks
+      // and, durable, checkpoint files — in BOTH modes once its
+      // successor is materialized and the change count, its last
+      // reader, has run: a run holds O(1) generations, not O(rounds)
+      // (unreleased local generations were the round-17 suite-context
+      // churn: fixpoint keys ran ~2× their solo time in a bench pass).
       // (y, x): keyed by the neighbor whose label flows to x.
       // Round 18: no eager byY.count()/lab.count() — the prefix stays
       // LAZY (persist + localCheckpoint marks only) and round 1's one
@@ -500,15 +442,16 @@ object DedupOps {
       // single job (guide §2/§7: two fewer driver barriers per run;
       // correctness unchanged — localCheckpoint truncation happens at
       // first materialization regardless of which action drives it).
-      val byY = und.rdd.map(r => (r.getLong(1), r.getLong(0))).partitionBy(part)
-      ckpt(byY)
+      val byY = loop.pin(
+        und.rdd.map(r => (r.getLong(1), r.getLong(0))).partitionBy(part),
+        truncate = true)
       // Fused round 0: with identity labels the first min-neighbor step
       // is just min(x, min over neighbors of x) — one reduceByKey, no
       // join, and the undirected edge list guarantees every vertex
       // appears as an x. Saves a full join+jump round per run.
-      var lab = byY.map { case (y, x) => (x, math.min(x, y)) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      ckpt(lab)
+      var lab = loop.pin(byY.map { case (y, x) => (x, math.min(x, y)) }
+        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)),
+        truncate = true)
       var changed = 1L
       var rounds = 0
       while (changed != 0L) {
@@ -536,20 +479,19 @@ object DedupOps {
         // label arithmetic is untouched, so the fixpoint — and the
         // output — is bit-identical.
         val chAcc = s.sparkContext.longAccumulator("componentsChangedUB")
-        val jumped = stepped.map { case (x, (ol, c)) => (c, (x, ol)) }
+        val jumped = loop.pin(stepped.map { case (x, (ol, c)) => (c, (x, ol)) }
           .join(stepped.mapValues(_._2))
           .map { case (c, ((x, ol), cc)) =>
             val n = math.min(c, cc)
             if (n != ol) chAcc.add(1L)
             (x, n)
           }
-          .partitionBy(part)
-        ckpt(jumped)
+          .partitionBy(part), truncate = true)
         // the count is the checkpoint-materializing action; the
         // accumulator is complete once it returns
         jumped.count()
         changed = chAcc.value
-        unck(lab) // jumped is materialized; the old round's block can go
+        loop.release(lab) // jumped is materialized; the old round can go
         lab = jumped
         rounds += 1
       }
@@ -559,13 +501,10 @@ object DedupOps {
       // structures release here instead of lingering until a GC cycle
       // feeds the ContextCleaner (und is read exactly twice, both
       // materializations above; byY's last reader is the final round's
-      // nmin join).
-      byY.unpersist(false)
-      org.apache.spark.sql.GraftSqlBridge.backingRdd(und)
-        .foreach(_.unpersist(false))
-      // the final generation's blocks are released by the harness once
-      // the key's result is materialized (round 18, Ckpt.releaseScratch)
-      Ckpt.registerScratch(lab)
+      // nmin join). The final generation is released by the harness
+      // once the key's result is materialized (Ckpt.releaseScratch).
+      loop.finish(lab,
+        org.apache.spark.sql.GraftSqlBridge.backingRdd(und).toSeq: _*)
       val sess = s
       import sess.implicits._
       lab.toDF("doc_id", "component").orderBy("doc_id")

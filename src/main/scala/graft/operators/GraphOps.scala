@@ -70,25 +70,13 @@ object GraphOps {
     * (proven by agg_percentile) and identical IEEE double ops. */
   private val KCoreRounds = 3
 
-  /** Default edge-count gate between the two k-core peel executions
-    * (round 18; spark.graft.kcore.rddMinEdges overrides). Measured
-    * crossover evidence in OPTIMIZATION_r18.md: the SQL delta-peel wins
-    * at every fixture scale up to sf10 (~120M stored edges) because the
-    * per-round dead sets stay broadcast-sized; the RDD fixpoint's
-    * one-time 2|E| shuffle only pays off once a single round's dead set
-    * exceeds broadcast range (≥ hundreds of millions of nodes), so the
-    * default sits one decade above the largest measured-SQL-wins point. */
-  private val KCoreRddMinEdges = 1200000000L
-
-  /** k-core peel, r16 SQL shape (the delta peel on DataFrames): per
-    * round the stored edge list is SCANNED (columnar parquet, never
-    * shuffled) and joined against the newly-dead node set, which AQE
-    * broadcasts while it fits; the evolving checkpointed frame is the
-    * node-sized degree table. See the gate note at the graph_kcore
-    * entry for when this loses to the RDD shape. */
-  private def kcorePeelSql(s: SparkSession, e: DataFrame, dg: DataFrame,
+  /** k-core delta peel on DataFrames: per round the stored edge list
+    * is SCANNED (columnar parquet, never shuffled) and joined against
+    * the newly-dead node set, which AQE broadcasts while it fits; the
+    * evolving checkpointed frame is the node-sized degree table. */
+  private def kcorePeel(s: SparkSession, e: DataFrame, dg: DataFrame,
       kth: Long, converge: Boolean, cap: Int): DataFrame = {
-    val ck = Ckpt.chain()
+    val ck = Ckpt.loop(s)
     var deg = ck.df(dg)
     def dead: DataFrame = deg.filter(col("degree") < kth).select("node")
     // one peel step: survivors lose their edges into the dead set
@@ -121,63 +109,6 @@ object GraphOps {
       .orderBy("node")
   }
 
-  /** k-core peel, r17 RDD fixpoint shape: the edge list is shuffled
-    * ONCE into the shared partitioning and every round's work is
-    * frontier-sized narrow joins plus one reduceByKey (see the gate
-    * note at the graph_kcore entry — this shape's regime is edge lists
-    * whose dead sets outgrow a broadcast). */
-  private def kcorePeelRdd(s: SparkSession, e: DataFrame, dg: DataFrame,
-      kth: Long, converge: Boolean, cap: Int, edgeCnt: Long): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    val rounds = new RddRounds(s)
-    val part = new HashPartitioner(fxParts(s, edgeCnt * 2))
-    val und = e.rdd.flatMap { r =>
-      val a = r.getLong(0); val b = r.getLong(1)
-      Seq((a, b), (b, a))
-    }.partitionBy(part).persist(fxLevel(s))
-    var deg = rounds.pin(
-      dg.rdd.map(r => (r.getLong(0), r.getLong(1))).partitionBy(part))
-    rounds.done(deg)
-    def dead: org.apache.spark.rdd.RDD[(Long, Long)] =
-      deg.filter { case (_, dgr) => dgr < kth }
-    // one peel step: survivors lose their edges into the dead set
-    def step(): Unit = {
-      val delta = und.join(dead)
-        .map { case (_, (nbr, _)) => (nbr, 1L) }
-        .reduceByKey(part, (a: Long, b: Long) => a + b)
-      val nxt = rounds.pin(
-        deg.filter { case (_, dgr) => dgr >= kth }
-          .leftOuterJoin(delta) // narrow: survivors keyed like delta
-          .mapValues { case (dgr, m) => dgr - m.getOrElse(0L) })
-      rounds.done(nxt)
-      deg = nxt
-    }
-    // Config gate (spark.graft.kcore.converge=true): peel to the true
-    // k-core fixed point instead of the oracle-replayable 3 rounds.
-    // Peeling is monotone, so an empty dead set IS the fixed point —
-    // the same exact-integer discipline as the components fixpoint.
-    if (converge) {
-      var r = 0
-      while (!dead.isEmpty() && r < cap) {
-        step()
-        r += 1
-      }
-    } else {
-      for (_ <- 1 to KCoreRounds) step()
-    }
-    // final induction by the last survivor set (the old shape's
-    // trailing inducedDeg): drop the last dead generation's edges;
-    // nodes isolated by it leave the output (degree 0 never appears
-    // in an induced-degree aggregation)
-    step()
-    val out = rounds.finish(deg, und)
-    val sess = s
-    import sess.implicits._
-    out.filter { case (_, dgr) => dgr > 0 }
-      .toDF("node", "core_degree")
-      .orderBy("node")
-  }
-
   /** Derived-graph cache paths carry Stage.inputStamp(lineitem) so a
     * driver-side fixture regeneration rotates the path instead of
     * serving a stale `_SUCCESS`-marked snapshot. */
@@ -185,103 +116,21 @@ object GraphOps {
     Stage.p(s, s"graft_${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
       Stage.inputStamp(s, s"$d/lineitem.parquet"))
 
-  /** Round-17 RDD-fixpoint helpers — the dedup_components execution
-    * model (co-partitioned RDDs under one shared HashPartitioner)
-    * generalized to the bounded-round graph loops. Why (measured,
-    * OPTIMIZATION_r17.md): the DataFrame formulation of a round plans
-    * 2 eager checkpoints plus ~6 AQE stage-jobs, so the 3-round keys
-    * ran 27-30 driver-barrier jobs each at any scale; with every
-    * per-round join narrow (shared partitioner) and persist-only
-    * lineage (rounds are FIXED, so lineage depth is bounded and every
-    * generation stays recomputable on block loss) the whole fixpoint
-    * executes as ONE job at action time with exactly one wide shuffle
-    * per round (the re-key by neighbor). Storage level defaults to
-    * serialized blocks (the round-17 components measurement: -27% at
-    * the 8g knee, noise at 16g); `spark.graft.fixpoint.serStorage=
-    * false` opts back into deserialized. */
-  private def fxLevel(s: SparkSession): org.apache.spark.storage.StorageLevel =
-    if (s.conf.getOption("spark.graft.fixpoint.serStorage")
-          .exists(v => v == "0" || v.equalsIgnoreCase("false")))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-
-  /** Scale-adaptive fixpoint partitioner width: rows-per-task sized
-    * (conf `spark.graft.fixpoint.rowsPerTask`), floored at min(8,
-    * parallelism) so a tiny graph doesn't pay 32 tasks of scheduling
-    * per round, capped at 4x defaultParallelism so a 100 TB graph fans
-    * out with the cluster instead of funneling through a fixed count.
-    * Default 500k pairs/task (~10-25 MB serialized) — the guide §2.2
-    * block-count rule: these loops shuffle bare long pairs, so the
-    * components rule's 20k rows/task made per-task fixed costs (fetch
-    * of M×R tiny blocks, combiner setup) dominate the actual work
-    * (measured ~5x on the round-17 sssp rewrite, OPTIMIZATION_r17.md). */
-  private def fxParts(s: SparkSession, rows: Long): Int = {
-    val per = s.conf.getOption("spark.graft.fixpoint.rowsPerTask")
-      .map(_.toLong).getOrElse(500000L)
-    val byData = (rows / per).toInt + 1
-    math.max(
-      math.min(byData, s.sparkContext.defaultParallelism * 4),
-      math.min(8, s.sparkContext.defaultParallelism))
-  }
-
-  /** Durable-mode hygiene for the raw-RDD fixpoints, mirroring the
-    * components loop and Ckpt.Chain at the RDD level. Default (no
-    * `spark.graft.checkpointDir`): `pin` persists only — the loop body
-    * stays LAZY and the fixed-round lineage is intact, so the single
-    * action job recomputes any lost block; `done` is a no-op (zero
-    * per-round driver barriers). Durable mode: `pin` also marks a
-    * reliable checkpoint, `done` materializes the generation (the
-    * persist means the checkpoint job reads blocks, not lineage) and
-    * deletes generation N-2's files + blocks once N lands —
-    * keep-last-2, exactly the Ckpt.Chain contract the specs pin. */
-  private final class RddRounds(s: SparkSession) {
-    private val base = Ckpt.dir(s)
-    base.foreach(Ckpt.ensure(s, _))
-    private val lvl = fxLevel(s)
-    private val pinned =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    private var older: Option[org.apache.spark.rdd.RDD[_]] = None
-    private var prev: Option[org.apache.spark.rdd.RDD[_]] = None
-    def pin[T](r: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
-      r.persist(lvl)
-      pinned += r
-      if (base.isDefined) r.checkpoint()
-      r
-    }
-    def done(r: org.apache.spark.rdd.RDD[_]): Unit =
-      if (base.isDefined) {
-        r.count()
-        older.foreach { o =>
-          o.unpersist(false)
-          o.getCheckpointFile.foreach(f => Ckpt.deleteFile(s, f))
-        }
-        older = prev
-        prev = Some(r)
-      }
-    /** Close the loop: default mode runs the ONE materializing action
-      * (localCheckpoint keeps `pin`'s storage level and truncates the
-      * whole loop's lineage), then every superseded generation's blocks
-      * are released eagerly — the old eager-checkpoint loops unpersisted
-      * as they went; a lazy loop that leaked its generations across
-      * bench passes measurably thrashed the heap (OPTIMIZATION_r17.md).
-      * Durable mode: `done` already materialized + cleaned; the result
-      * stays file-backed, so releasing blocks is safe there too. */
-    def finish[T](result: org.apache.spark.rdd.RDD[T],
-        alsoRelease: org.apache.spark.rdd.RDD[_]*)
-        : org.apache.spark.rdd.RDD[T] = {
-      if (base.isEmpty) {
-        result.localCheckpoint()
-        result.count()
-      }
-      pinned.filter(_ ne result).foreach(_.unpersist(false))
-      alsoRelease.foreach(_.unpersist(false))
-      // the result generation itself is released by the harness after
-      // the key's one action (round 18, Ckpt.releaseScratch) — in
-      // durable mode its data lives in checkpoint files anyway
-      Ckpt.registerScratch(result)
-      result
-    }
-  }
+  /** Rows per task of the graph RDD fixpoints' shared partitioner
+    * (Ckpt.Loop.partitioner). Round 17 moved sssp and khop onto the
+    * dedup_components execution model — co-partitioned RDDs under one
+    * shared HashPartitioner: the DataFrame formulation of a round
+    * planned 2 eager checkpoints plus ~6 AQE stage-jobs, so the
+    * 3-round keys ran 27-30 driver-barrier jobs each at any scale; with
+    * every per-round join narrow and persist-only lineage the whole
+    * fixpoint executes as ONE job at action time with exactly one wide
+    * shuffle per round (OPTIMIZATION_r17.md). 500k pairs/task
+    * (~10-25 MB serialized) is the guide §2.2 block-count rule: these
+    * loops shuffle bare long pairs, so the components loop's 20k
+    * rows/task made per-task fixed costs (fetch of M×R tiny blocks,
+    * combiner setup) dominate the actual work (measured ~5x on the
+    * round-17 sssp rewrite). */
+  private val FixpointRowsPerTask = 500000L
 
   /** Canonical undirected edge list (a < b), built once per fixture dir
     * and stored — all graph keys read the stored table. */
@@ -345,7 +194,7 @@ object GraphOps {
   private[graft] def lpaOnUnd(u: DataFrame, init: DataFrame,
       rounds: Int = LpaRounds, checkpoint: Boolean = true): DataFrame = {
     val wN = Window.partitionBy("node").orderBy(col("cnt").desc, col("label"))
-    val ck = Ckpt.chain() // single evolving frame: round N-2 files die
+    val ck = Ckpt.loop(u.sparkSession) // one evolving frame: round N-2 files die
     var lab = init
     for (_ <- 1 to rounds) {
       val next = u.join(lab, col("src") === col("node"))
@@ -441,7 +290,6 @@ object GraphOps {
     * checkpoint would hide it behind an ExistingRDD scan. */
   private[graft] def bipartiteCapped(s: SparkSession, d: String,
       checkpoint: Boolean = true): DataFrame = {
-    graft.functions.BottomKDistinctByAgg.register(s)
     val cp = Tables.orders(s, d)
       .join(Tables.lineitem(s, d),
         col("o_orderkey") === col("l_orderkey"))
@@ -530,10 +378,10 @@ object GraphOps {
         val tol = s.conf.get("spark.graft.pagerank.tolFx",
           (Qfx / 10000L).toString).toLong
         val cap = s.conf.get("spark.graft.pagerank.maxIters", "50").toInt
-        // chained: run-to-convergence is exactly the unbounded-rounds
+        // one loop: run-to-convergence is exactly the unbounded-rounds
         // case where per-round durable checkpoints pile up (delta
         // reads generations N and N-1 — both inside keep-last-2)
-        val ck = Ckpt.chain()
+        val ck = Ckpt.loop(s)
         var iters = 0
         var done = false
         while (!done && iters < cap) {
@@ -648,25 +496,16 @@ object GraphOps {
       // scalar read (the documented per-round-scalar exception, like
       // the components convergence count) instead of a per-round
       // broadcast crossJoin re-running the percentile job.
-      // Round-17 (opt) built a co-partitioned RDD fixpoint (see
-      // fxLevel/RddRounds and the sssp note); round-18's verdict-driven
-      // A/B found its ONE-TIME edge shuffle (the 2|E| flatMap +
-      // partitionBy below, 19.3 MB at sf0.1 → ~2 GB at sf10) REGRESSES
-      // the key at every measured scale (sf0.1 ×1.35–1.9 on two boxes
-      // and two core counts, sf1 flat, sf10 measured this round —
-      // OPTIMIZATION_r18.md), because the SQL delta-peel never moves
-      // the edge list at all: per round it SCANS the columnar edge
-      // parquet and joins it against the (small, shrinking) dead set,
-      // which AQE broadcasts. The SQL shape's worst case is the moment
-      // a round's dead set outgrows a broadcast — then it degrades to
-      // one full-edge shuffle PER SUCH ROUND, while the RDD shape pays
-      // its full-edge shuffle exactly once and every round after is
-      // frontier-sized. So the shapes are gated on edge count
-      // (spark.graft.kcore.rddMinEdges): below it, the r16 SQL
-      // delta-peel (every measured point); above it, the RDD fixpoint
-      // (the regime where round-1 dead sets alone exceed broadcast
-      // range). Both branches replay the identical integer peel and
-      // are oracle-proven at sf0.001 + sf0.01.
+      // Round-17 (opt) built a co-partitioned RDD fixpoint; round 18's
+      // verdict-driven A/B found its ONE-TIME edge shuffle (the 2|E|
+      // re-key, 19.3 MB at sf0.1 → ~2 GB at sf10) REGRESSES the key at
+      // every measured scale (sf0.1 ×1.35–1.9, sf1 flat, sf10 SQL
+      // 30.4 s vs RDD 113.3 s — OPTIMIZATION_r18.md), because the delta
+      // peel never moves the edge list at all: per round it SCANS the
+      // columnar edge parquet and joins it against the (small,
+      // shrinking) dead set, which AQE broadcasts. The RDD branch was
+      // deleted; only a measured point where a round's dead set
+      // outgrows a broadcast would bring it back.
       val e = edges(s, d)
       val dg = degrees(s, d)
       val kth = dg.agg(
@@ -674,15 +513,7 @@ object GraphOps {
           .cast(LongType).as("kth")).head().getLong(0)
       val converge = s.conf.get("spark.graft.kcore.converge", "false").toBoolean
       val cap = s.conf.get("spark.graft.kcore.maxRounds", "50").toInt
-      // Parquet-metadata count — one ~40 ms job, shared by the gate and
-      // the RDD branch's partitioner sizing.
-      val edgeCnt = e.count()
-      val rddMin = s.conf.get("spark.graft.kcore.rddMinEdges",
-        KCoreRddMinEdges.toString).toLong
-      if (edgeCnt >= rddMin)
-        kcorePeelRdd(s, e, dg, kth, converge, cap, edgeCnt)
-      else
-        kcorePeelSql(s, e, dg, kth, converge, cap)
+      kcorePeel(s, e, dg, kth, converge, cap)
     }),
 
     "graph_link_predict" -> ((s, d) => {
@@ -931,24 +762,23 @@ object GraphOps {
       // that holds at 10⁹ edges (MEMORY_AND_DISK spills, never
       // recomputes). sortWithinPartitions makes the SMJ sort a no-op.
       // Round-17 (opt): co-partitioned RDD frontier loop (see
-      // fxLevel/RddRounds and the sssp note). Per hop the only wide
+      // FixpointRowsPerTask and the sssp note). Per hop the only wide
       // shuffle is the re-key of expanded neighbors (reduceByKey keep-
       // one = the old distinct); the anti-join against visited and the
       // visited merge are narrow under the shared partitioner, and with
       // persist-only lineage the whole BFS runs as ONE job instead of
       // ~27 AQE stage-jobs + 7 eager checkpoints (OPTIMIZATION_r17.md).
       // Semantics bit-identical: first-reaching hop claims the node.
-      import org.apache.spark.HashPartitioner
       val e = edges(s, d)
       val seeds = Tables.part(s, d).filter(col("p_size") === 50)
         .select(col("p_partkey").as("node"))
         .join(degrees(s, d).select("node"), Seq("node"), "left_semi")
-      val rounds = new RddRounds(s)
-      val part = new HashPartitioner(fxParts(s, e.count() * 2))
+      val rounds = Ckpt.loop(s)
+      val part = rounds.partitioner(e.count() * 2, FixpointRowsPerTask)
       val u = e.rdd.flatMap { r =>
         val a = r.getLong(0); val b = r.getLong(1)
         Seq((a, b), (b, a))
-      }.partitionBy(part).persist(fxLevel(s))
+      }.partitionBy(part).persist(Ckpt.Level)
       var visited = rounds.pin(
         seeds.rdd.map(r => (r.getLong(0), 0)).partitionBy(part))
       rounds.done(visited)
@@ -989,7 +819,7 @@ object GraphOps {
       // truncates the per-round lineage exactly like khop/components
       // (durable under spark.graft.checkpointDir at 100 TB).
       // Round-17 (opt): the DataFrame loop above in spirit, executed on
-      // co-partitioned RDDs (the components model, see fxLevel/RddRounds)
+      // co-partitioned RDDs (the components model, see FixpointRowsPerTask)
       // — per round the ONLY wide shuffle is the re-key of candidate
       // labels by dst (reduceByKey min = the old groupBy min); the
       // improvement filter, the dist merge and the frontier join are all
@@ -997,17 +827,16 @@ object GraphOps {
       // lineage the fixpoint runs as ONE job instead of ~30 AQE
       // stage-jobs + 7 eager checkpoints (measured: OPTIMIZATION_r17.md).
       // Semantics bit-identical: same integer relaxation, same rounds.
-      import org.apache.spark.HashPartitioner
       val e = wedges(s, d)
       val seeds = Tables.part(s, d).filter(col("p_size") === 50)
         .select(col("p_partkey").as("node"))
         .join(degrees(s, d).select("node"), Seq("node"), "left_semi")
-      val rounds = new RddRounds(s)
-      val part = new HashPartitioner(fxParts(s, e.count() * 2))
+      val rounds = Ckpt.loop(s)
+      val part = rounds.partitioner(e.count() * 2, FixpointRowsPerTask)
       val wu = e.rdd.flatMap { r =>
         val a = r.getLong(0); val b = r.getLong(1); val w = r.getLong(2)
         Seq((a, (b, w)), (b, (a, w)))
-      }.partitionBy(part).persist(fxLevel(s))
+      }.partitionBy(part).persist(Ckpt.Level)
       var dist = rounds.pin(
         seeds.rdd.map(r => (r.getLong(0), 0L)).partitionBy(part))
       rounds.done(dist)

@@ -605,7 +605,6 @@ object Relational {
       // hash order statistic, so DuckDB replays the sketch verbatim
       // with distinct + row_number. OperatorSpec pins the estimate
       // against the exact count at both SFs.
-      graft.functions.KmvBottomKAgg.register(s)
       Tables.events(s, d)
         .select(col("event_type"),
           expr(Det.md5SliceExpr("user_id", 1, 15)).as("h"))
@@ -630,7 +629,6 @@ object Relational {
       // replayed exactly by the DuckDB oracle — the hash-green
       // counterpart of the DataSketches hll_union_agg twin kept under
       // nativeSketches.
-      graft.functions.KmvBottomKAgg.register(s)
       val daily = Tables.events(s, d)
         .select(Det.epochS(col("ts")).as("sec"), col("event_type"),
           expr(Det.md5SliceExpr("user_id", 1, 15)).as("h"))
@@ -830,7 +828,6 @@ object Relational {
       // the no-eviction regime where the sketch is provably EXACT and
       // merge-order-independent — hence oracle-able; the eviction
       // regime's error bounds are property-tested in OperatorSpec.
-      graft.functions.HeavyHittersAgg.register(s)
       Tables.part(s, d)
         .agg(expr("heavy_hitters(p_brand, 64)").as("hh"))
         .select(explode(col("hh")).as("e"))

@@ -47,7 +47,6 @@ object SampleOps {
       // rows through one q_id-keyed shuffle; the aggregate ships ≤5
       // entries per query per map partition. rnk = the emit position
       // (entries leave the buffer ascending by (h, doc_id)).
-      graft.functions.BottomKDistinctByAgg.register(s)
       docs.join(broadcast(qs), col("source") =!= col("q_src"))
         .withColumn("h",
           expr(Det.md5SliceExpr("concat(q_id, ':', doc_id)", 1, 15)))
@@ -210,7 +209,6 @@ object SampleOps {
       // cross the shuffle — a giant stratum no longer funnels its
       // whole population through one partition's sort. rn = emit
       // position (ascending by ord).
-      graft.functions.BottomKDistinctByAgg.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"))
         .groupBy(col("lang"))

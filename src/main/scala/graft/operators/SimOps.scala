@@ -90,7 +90,7 @@ object SimOps {
   private val RangeT = 0.2
 
   /** Round-17 (opt): the greedy loops' per-round 1-row pick frames are
-    * eagerly checkpointed ONLY in durable mode. There the chained
+    * eagerly checkpointed ONLY in durable mode. There the loop's
     * `state` generations' files are deleted keep-last-2, so an
     * un-pinned pick (a TakeOrdered over a superseded state generation)
     * would read deleted files; locally the superseded state's
@@ -158,7 +158,6 @@ object SimOps {
       // through one probe-keyed shuffle — the aggregate ships 5 per
       // probe per partition. The ANN keys bound candidates instead;
       // this keeps the exact baseline scale-sane too.
-      graft.functions.BottomKDistinctByAgg.register(s)
       dots
         .join(broadcast(nr.select(col("vec_id").as("a"), col("nrm").as("na"))), "a")
         .join(broadcast(nr.select(col("vec_id").as("b"), col("nrm").as("nb"))), "b")
@@ -227,7 +226,6 @@ object SimOps {
       // map-side max_by — the ×k expansion collapses BEFORE any shuffle
       // (partial aggregation), so assignment cost is O(N·k) compute and
       // O(N) shuffle bytes: the real IVF shape at 10⁹ vectors.
-      graft.functions.DotProductF.register(s)
       val emb = Tables.embeddings(s, d)
       val k = 64
       val cents0 = sampleCentroids(emb, k)
@@ -337,7 +335,6 @@ object SimOps {
       // a codegen'd 64-step loop — no 64× position explosion through
       // the shuffle (an earlier exploded formulation moved ~100M rows
       // at sf0.1 for the same answer; this moves ~1.5M).
-      graft.functions.DotFixedF.register(s)
       val asg = kmeansAssignedStored(s, d)
         .withColumn("nrm", sqrt(expr("dotfx(embedding, embedding)")
           .cast(DoubleType) / graft.Det.FixedPoint))
@@ -385,8 +382,6 @@ object SimOps {
       // L2, (d2l, cent_id) total order. The cosine filter runs the
       // dedup_semantic dotfx/norm path, so no candidate can flip
       // engines at the τ boundary.
-      graft.functions.DotFixedF.register(s)
-      graft.functions.L2FixedF.register(s)
       val asg = kmeansAssignedStored(s, d)
         .withColumn("nrm", sqrt(expr("dotfx(embedding, embedding)")
           .cast(DoubleType) / graft.Det.FixedPoint))
@@ -425,7 +420,6 @@ object SimOps {
       // one codegen'd dot_f over the row; nothing recomputes weights or
       // hashes per row (the round-1 version burned a per-row xxhash64
       // per plane×dim on the interpreted HOF path).
-      graft.functions.DotProductF.register(s)
       val emb = Tables.embeddings(s, d)
       val bucketed = emb.withColumn("sig", Lsh.signature(col("embedding")))
         .select(col("vec_id"), col("embedding"),
@@ -538,7 +532,6 @@ object SimOps {
       // cluster, score candidates by PQ code. Both centroid tables
       // broadcast; both ×k expansions collapse map-side before their
       // single shuffles; the final join co-partitions on vec_id.
-      graft.functions.DotProductF.register(s)
       val emb = Tables.embeddings(s, d)
       val assigned =
         coarseAssign(emb, sampleCentroids(emb, 64), carryEmb = false)
@@ -687,19 +680,18 @@ object SimOps {
       // md5(vec_id). Output: selection order with each center's
       // distance-to-set (nonincreasing — the spec pins it) and the
       // final coverage radius of the whole corpus.
-      graft.functions.L2FixedF.register(s)
       val fx = graft.Det.FixedPoint
       val emb = Tables.embeddings(s, d)
       val c0 = emb
         .orderBy(md5(col("vec_id").cast(StringType)), col("vec_id"))
         .limit(1)
         .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-      // `state` is the one evolving frame — chained (keep-last-2 file
-      // hygiene). `center` is pinned via pinPick: eagerly checkpointed
-      // in durable mode only (its files must outlive the chained state
-      // generations the lazily-accumulated `rules` union reads
-      // through), lazy locally (see pinPick).
-      val ckS = Ckpt.chain()
+      // `state` is the one evolving frame — a Ckpt.loop generation
+      // (keep-last-2 file hygiene). `center` is pinned via pinPick:
+      // eagerly checkpointed in durable mode only (its files must
+      // outlive the state generations the lazily-accumulated `rules`
+      // union reads through), lazy locally (see pinPick).
+      val ckS = Ckpt.loop(s)
       var state = ckS.df(emb.crossJoin(broadcast(c0))
         .select(col("vec_id"), col("embedding"),
           expr("l2fx(embedding, cemb)").as("mindl")))
@@ -735,7 +727,6 @@ object SimOps {
       // overall resubstitution accuracy as a shared column. At 100 TB
       // this is one scan + one output-sized aggregate; a held-out
       // variant swaps in the split_train_test buckets.
-      graft.functions.L2FixedF.register(s)
       val emb = Tables.embeddings(s, d)
       val cents = emb.select(col("label"),
           posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -781,14 +772,13 @@ object SimOps {
       // the floored variant is the common production choice because
       // it never rewards adversarially-inverted embeddings. The spec
       // replays exactly this variant.
-      graft.functions.DotFixedF.register(s)
       val fx = graft.Det.FixedPoint
       val emb = Tables.embeddings(s, d)
         .withColumn("nrm", sqrt(expr("dotfx(embedding, embedding)")
           .cast(DoubleType) / fx))
       val qv = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
-      val ckM = Ckpt.chain()
+      val ckM = Ckpt.loop(s)
       var state = emb.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(qv))
         .withColumn("rel", round((expr("dotfx(embedding, qe)")
@@ -796,7 +786,7 @@ object SimOps {
         .orderBy(col("rel").desc, col("vec_id")).limit(20)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("rel"),
           lit(0.0).as("red"))
-        // `state` chained (evolving frame, keep-last-2); `pick` goes
+        // `state` is the loop's evolving frame (keep-last-2); `pick` goes
         // through pinPick — durable-only eager checkpoint (each
         // round's rule row is lazily unioned into the result, keeping
         // old pick files referenced there), lazy locally
@@ -911,7 +901,6 @@ object SimOps {
   }
 
   private def kmeansAssigned(s: SparkSession, emb: DataFrame): DataFrame = {
-    graft.functions.L2FixedF.register(s)
     // Round 9: the two-level coarse assignment IS the declared path —
     // the oracle replays its routing exactly (see kmAssign), so the
     // O(N·√k·d) rung no longer trades replayability for scale. Setting

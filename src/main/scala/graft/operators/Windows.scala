@@ -125,7 +125,6 @@ object Windows {
       // full shuffle+sort of every row. The shared oracle proves the
       // two plans agree; ord = (revenue, -p_partkey) is a total order,
       // making the heap merge exact and deterministic.
-      graft.functions.TopKByAgg.register(s)
       val rev = Tables.lineitem(s, d)
         .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"), col("p_partkey"))

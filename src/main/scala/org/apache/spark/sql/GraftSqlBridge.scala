@@ -19,7 +19,7 @@ object GraftSqlBridge {
   /** The reliable-checkpoint directory backing `df`, when `df` is the
     * frame a `Dataset.checkpoint(eager = true)` returned (its analyzed
     * plan is a LogicalRDD over the checkpointed RDD). Used by
-    * Ckpt.Chain to delete superseded fixpoint-round checkpoints —
+    * Ckpt.Loop to delete superseded fixpoint-round checkpoints —
     * `RDD.getCheckpointFile` is public but the LogicalRDD unwrap needs
     * this package. */
   def checkpointFile(df: DataFrame): Option[String] =

@@ -333,11 +333,11 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("dedup_components: durable-checkpoint branch produces identical labels") {
-    // The components per-key conf (persist → reliable checkpoint →
-    // per-round unpersist on the RDD fixpoint) — kept as its own test
-    // because it exercises the raw-RDD ckpt path, not Ckpt.df.
-    assertDurableIdentical("spark.graft.components.checkpointDir",
-      Seq("dedup_components"))
+    // The components loop under the one durable conf (persist →
+    // reliable checkpoint → per-round release on the RDD fixpoint) —
+    // kept as its own test because it exercises the truncating RDD
+    // generations of Ckpt.loop, not Ckpt.df.
+    assertDurableIdentical(Ckpt.DirConf, Seq("dedup_components"))
   }
 
   test("spark.graft.checkpointDir: durable branch identical across fixpoint families") {
@@ -358,12 +358,13 @@ class OperatorSpec extends AnyFunSuite {
       "text_bpe_train")) // word-repr per-merge-round
   }
 
-  test("Ckpt.Chain: durable fixpoint keeps O(1) checkpoints on disk, not O(rounds)") {
+  test("Ckpt.loop: durable fixpoint keeps O(1) checkpoints on disk, not O(rounds)") {
     // round-11 (advice): durable mode used to leave every round's
     // reliable checkpoint behind — a cluster sweep over the fixpoint
-    // keys grew the dir unboundedly. Chain deletes generation N-2 once
+    // keys grew the dir unboundedly. A loop deletes generation N-2 once
     // N is materialized. graph_sssp checkpoints 7 generations through
-    // one chain (seed dist + 3×(improved, dist)); at most 2 may remain.
+    // one Ckpt.loop (seed dist + 3×(improved, dist)); at most 2 may
+    // remain.
     val dir = java.nio.file.Files.createTempDirectory("graft-chain").toString
     try {
       spark.conf.set(Ckpt.DirConf, dir)
@@ -383,6 +384,42 @@ class OperatorSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset(Ckpt.DirConf)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  // Release contract of the fixpoint loops: once a key's one action has
+  // run and the harness has called Ckpt.releaseScratch, every RDD the
+  // loop persisted is handed back — in local mode and in durable mode.
+  // A fresh stage dir per run makes the stored LPA labels rerun their
+  // loop; pagerank runs its converge mode (the declared unroll has no
+  // loop state to release).
+  for (k <- Seq("dedup_components", "graph_kcore", "graph_lpa",
+         "graph_pagerank", "graph_sssp", "graph_khop", "sample_kcenter",
+         "sim_mmr_rerank");
+       durable <- Seq(false, true)) {
+    val mode = if (durable) "durable" else "local"
+    test(s"loop release contract: $k persists nothing past releaseScratch ($mode)") {
+      val stage = java.nio.file.Files.createTempDirectory("graft-rel-stage").toString
+      val ck = java.nio.file.Files.createTempDirectory("graft-rel-ck").toString
+      try {
+        spark.conf.set("spark.graft.stage.dir", stage)
+        spark.conf.set("spark.graft.pagerank.converge", "true")
+        if (durable) spark.conf.set(Ckpt.DirConf, ck)
+        Ckpt.releaseScratch()
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        assert(q(k).collect().nonEmpty)
+        Ckpt.releaseScratch()
+        val left = spark.sparkContext.getPersistentRDDs
+          .filter { case (id, _) => !before(id) }
+        assert(left.isEmpty, s"$k ($mode) left persisted: " +
+          left.values.map(r => s"${r.id}:${r.getClass.getSimpleName}")
+            .mkString(", "))
+      } finally {
+        Seq("spark.graft.stage.dir", "spark.graft.pagerank.converge",
+          Ckpt.DirConf).foreach(spark.conf.unset)
+        Seq(stage, ck).foreach(p =>
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+      }
     }
   }
 
@@ -621,7 +658,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("heavy_hitters sketch: Misra-Gries guarantees under eviction") {
     import spark.implicits._
-    graft.functions.HeavyHittersAgg.register(spark)
     // 200 distinct items, k = 16 → eviction exercised. Skew: item "hot1"
     // appears 400×, "hot2" 200×, the 198 others ~10× each (n ≈ 2580,
     // n/k ≈ 162 — both hot items exceed the n/k bar).
@@ -662,7 +698,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("topk_by is exact across many partitions and deterministic") {
     import spark.implicits._
-    graft.functions.TopKByAgg.register(spark)
     // 1000 rows, unique ord → global top-5 is fully determined
     val df = (1 to 1000).map(i => (i.toLong, s"p$i")).toDF("v", "tag")
       .repartition(16)
@@ -677,7 +712,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("bottomk_distinct_by: duplicates never occupy two slots; exact across partitionings") {
     import spark.implicits._
-    graft.functions.BottomKDistinctByAgg.register(spark)
     // every value appears 3× — the aggregate must replay
     // distinct → order by (md5, v) → take 4, regardless of where the
     // duplicates land, so a 1-partition and a 16-partition run (merge
@@ -696,7 +730,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("bottomk_distinct_by: struct ord (-score, id) replays the desc rank window") {
     import spark.implicits._
-    graft.functions.BottomKDistinctByAgg.register(spark)
     // the sim_cosine_topk usage shape: keep the top-3 by score desc
     // (ties by id) per group, ord = struct(-score, id). Scores collide
     // across ids on purpose so the tiebreak path is exercised.
@@ -719,7 +752,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("null-ord sentinel: bottomk/min_by with NULL score match the NULLS-LAST window") {
     import spark.implicits._
-    graft.functions.BottomKDistinctByAgg.register(spark)
     // The zero-norm-embedding shape from the round-11 advice: cos is
     // NULL for some candidates (divide-by-zero → null). The window
     // `ORDER BY score DESC` ranks nulls LAST (Spark + DuckDB default);

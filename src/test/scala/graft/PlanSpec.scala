@@ -279,10 +279,16 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("dot_f resolves through GraftExtensions without manual registration") {
-    import spark.implicits._
+    // a fresh session sees only what the extensions inject: every
+    // native function must resolve there with no per-query register call
+    val ns = spark.newSession()
+    import ns.implicits._
     val r = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
       .selectExpr("dot_f(a, b) AS d").head().getDouble(0)
     assert(r === 11.0)
+    val missing = Seq("dot_f", "dotfx", "l2fx", "heavy_hitters", "topk_by",
+      "kmv_bottomk", "bottomk_distinct_by").filterNot(ns.catalog.functionExists)
+    assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
   }
 
   test("join_bloom_pruned injects might_contain on the fact side") {
@@ -386,7 +392,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("dot_f expression participates in codegen (no CodegenFallback wrapper)") {
     import spark.implicits._
-    graft.functions.DotProductF.register(spark)
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
       .toDF("a", "b").selectExpr("dot_f(a, b) AS d")
     assert(df.head().getDouble(0) === 32.0)
@@ -472,7 +477,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("dotfx expression participates in codegen (no CodegenFallback wrapper)") {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.DotFixedF.register(spark)
     val df = Tables.embeddings(spark, Spec.sf001)
       .withColumn("d", expr("dotfx(embedding, embedding)"))
       .filter(col("d") >= 0L)
