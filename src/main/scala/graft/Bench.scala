@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.Locale
 
 object Bench {
@@ -43,88 +42,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE decouples shuffle partitions from thread
-    // count for scale experiments: a cluster scales partitions with
-    // data while local[n] cannot, so proving a "fixed-32-partition
-    // saturation" diagnosis needs partitions ∝ input at constant n.
-    // Unset, partitions = cpus — the driver's contract.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // spark.graft.stage.dir resolves inside Stage.dir (conf -> env
     // SPARK_GRAFT_STAGE_DIR -> /tmp); no builder default to clobber it.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // Kryo (round 17): raw-RDD fixpoint loops (components, sssp,
-      // khop, kcore) serialize boxed pairs through spark.serializer for
-      // both shuffle and persisted blocks; the Java default measured
-      // ~2x slower on exactly those stages (OPTIMIZATION_r17.md). SQL
-      // paths (UnsafeRow) are unaffected. Standard production setting.
-      .config("spark.serializer",
-        "org.apache.spark.serializer.KryoSerializer")
-      // UTC parity with Verify/RunOne: the NTZ→TimestampType cast in
-      // Tables.events is session-TZ dependent, so an unpinned TZ would
-      // shift event-time filter selectivity (and timings) on a
-      // non-UTC host.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Warm up JVM/codegen and parquet footers so the first timed query
     // doesn't absorb session initialization cost.
-    Tables.names.foreach { t =>
-      try Tables.table(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => () }
-    }
-    try Tables.events(spark, sfDir).limit(1).count()
-    catch { case _: Throwable => () }
+    Harness.warm(spark, sfDir)
     // Plan-shape regression tracking: wall-clock on this box drifts
     // up to ±50% per key across rounds (BASELINE.md warm-band table),
     // but SHUFFLE BYTES are a deterministic function of plan + data —
     // a changed byte count is a changed plan (or changed input),
-    // never box noise. A stage-level listener accumulates shuffle
-    // read/write and spill; the final pass snapshots the counters
-    // around each query (listener bus drained first — events post
-    // asynchronously) and bench_detail.json records the deltas.
-    val shRead = new java.util.concurrent.atomic.AtomicLong
-    val shWrite = new java.util.concurrent.atomic.AtomicLong
-    val spilled = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null) {
-            shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          }
-        }
-      })
-    def shuffleSnapshot(): (Long, Long, Long) = {
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-      (shRead.get(), shWrite.get(), spilled.get())
-    }
-    val shuffleByKey =
-      scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
-    // Optional comma-separated key filter for targeted profiling runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Same guard as Verify (round 14): a typo'd or stale key list must
-    // fail loudly — a filter selecting zero keys "benches" nothing in
-    // 20 s and prints a clean-looking empty total.
-    only.foreach { ks =>
-      require(ks.nonEmpty, "SPARK_GRAFT_ONLY is set but selects no keys")
-      val unknown = ks -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(ks) => SparkEntry.queries.filter { case (k, _) => ks(k) }
-      case None => SparkEntry.queries
-    }
+    // never box noise. The final pass records each key's KeyRecord
+    // (shuffle, spill, jobs, stages, tasks, executor and job wall
+    // time, rows) and bench_detail.json carries it per key.
+    val metrics = new Harness.KeyMetrics(spark.sparkContext)
+    val recordByKey = scala.collection.mutable.Map.empty[String, Harness.KeyRecord]
+    val selected = Harness.keys()
     // Steady-state timing: three full passes over the suite, median per
     // query, with a different deterministic shuffle of the query order each
     // pass. Shuffling decorrelates one query's GC/codegen debris from a
@@ -146,23 +79,24 @@ object Bench {
       val rnd = new scala.util.Random(0x9E3779B97F4A7C15L * pass)
       rnd.shuffle(keys).foreach { name =>
         val fn = selected(name)
-        // shuffle accounting only on the last (warm, AQE-settled)
-        // pass: the drain is cheap but not free, and the warm plan is
-        // the one whose shape future rounds should diff against
+        // per-key accounting only on the last (warm, AQE-settled)
+        // pass: the drains are cheap but not free (and stay outside the
+        // timed region), and the warm plan is the one whose shape
+        // future rounds should diff against
         val account = pass == passes
-        val before = if (account) shuffleSnapshot() else null
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (ok) {
-          samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
-          if (account) {
-            val after = shuffleSnapshot()
-            shuffleByKey(name) = (after._1 - before._1,
-              after._2 - before._2, after._3 - before._3)
-          }
+        var dt = 0.0
+        def timed(): Long = {
+          val t0 = System.nanoTime()
+          val n = fn(spark, sfDir).count()
+          dt = (System.nanoTime() - t0) / 1e9
+          n
         }
+        val ok = try {
+          if (account) recordByKey(name) = metrics.measure(timed())
+          else timed()
+          true
+        } catch { case _: Throwable => false }
+        if (ok) samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
         else failCount(name) = failCount.getOrElse(name, 0) + 1
         // Round 18 block hygiene (guide §5): hand this key's scratch
         // localCheckpoint blocks to the BlockManager now — outside the
@@ -259,10 +193,7 @@ object Bench {
     // and to bench.json in the working directory.
     println(json)
     System.err.println(json)
-    try {
-      val w = new java.io.PrintWriter(new java.io.File("bench.json"), "UTF-8")
-      try w.println(json) finally w.close()
-    } catch { case _: Throwable => () }
+    writeFile("bench.json", json)
     // Unabridged per-key cold/warm/median detail — too long for the
     // driver's stdout tail window, so it goes to a sidecar file only.
     //
@@ -277,26 +208,36 @@ object Bench {
     //    shuffle partitions — 5–15% observed), so the capture records
     //    its (cpus, shuffle) config and benchcheck refuses to compare
     //    fingerprints across configs instead of reporting false moves.
-    try {
-      val detailPath = sys.env.get("SPARK_GRAFT_DETAIL_OUT").getOrElse {
-        if (only.isDefined) {
-          new java.io.File("tmp").mkdirs()
-          "tmp/bench_detail_scoped.json"
-        } else "bench_detail.json"
-      }
-      val w = new java.io.PrintWriter(new java.io.File(detailPath), "UTF-8")
-      try {
-        val rows = results.toSeq.sortBy(-_._2).map { case (k, v) =>
-          val (c, wm) = coldWarm.getOrElse(k, (-1.0, -1.0))
-          val (sr, sw, sp) = shuffleByKey.getOrElse(k, (-1L, -1L, -1L))
-          s""""$k":{"med":${fmt(v)},"cold":${fmt(c)},"warm":${fmt(wm)},""" +
-            s""""shr":$sr,"shw":$sw,"spill":$sp}"""
-        }
-        w.println(s"""{"ts":"$stamp","src":"$srcHash","sf":"$sfDir",""" +
-          s""""passes":$passes,"cpus":$cpus,"shuffle":$shuffle,""" +
-          s""""queries":{${rows.mkString(",")}}}""")
-      } finally w.close()
-    } catch { case _: Throwable => () }
+    val detailPath = sys.env.get("SPARK_GRAFT_DETAIL_OUT").getOrElse {
+      if (Harness.only.isDefined) {
+        new java.io.File("tmp").mkdirs()
+        "tmp/bench_detail_scoped.json"
+      } else "bench_detail.json"
+    }
+    // Per-key columns: med/cold/warm seconds, then the final pass's
+    // KeyRecord. The driver-side share of a key is med − job_wall_ms.
+    val rows = results.toSeq.sortBy(-_._2).map { case (k, v) =>
+      val (c, wm) = coldWarm.getOrElse(k, (-1.0, -1.0))
+      val r = recordByKey.getOrElse(k,
+        Harness.KeyRecord(-1, -1, -1, -1, -1, -1, -1, -1))
+      s""""$k":{"med":${fmt(v)},"cold":${fmt(c)},"warm":${fmt(wm)},""" +
+        s""""shr":${r.shr},"shw":${r.shw},"spill":${r.spill},""" +
+        s""""jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks},""" +
+        s""""exec_ms":${r.execMs},"job_wall_ms":${r.jobWallMs},"rows":${r.rows}}"""
+    }
+    writeFile(detailPath, s"""{"ts":"$stamp","src":"$srcHash","sf":"$sfDir",""" +
+      s""""passes":$passes,"cpus":${Harness.cpus},"shuffle":${Harness.shuffle},""" +
+      s""""queries":{${rows.mkString(",")}}}""")
     spark.stop()
   }
+
+  /** A failed write is reported, not fatal: the JSON line already went
+    * to stdout and stderr. */
+  private def writeFile(path: String, text: String): Unit =
+    try {
+      val w = new java.io.PrintWriter(new java.io.File(path), "UTF-8")
+      try w.println(text) finally w.close()
+    } catch { case e: Throwable =>
+      System.err.println(s"Bench: could not write $path: $e")
+    }
 }

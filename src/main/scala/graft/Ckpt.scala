@@ -123,9 +123,9 @@ object Ckpt {
     * trees drifting 150→183 s, untouched keys ×1.3–1.6). Every
     * local-mode scratch RDD (and every loop's final generation)
     * registers here, and the key-looping harnesses (Bench, Verify,
-    * Profile) release the lot once a key's ONE action has materialized
-    * its result; RunOne runs a single key and exits, so it never
-    * releases. Callers must not re-read a released frame —
+    * Explain) release the lot once a key's ONE action has materialized
+    * its result (Explain: once the key's frame is built). Callers must
+    * not re-read a released frame —
     * localCheckpoint blocks are gone, not recomputable — which holds in
     * every harness (one action per key, frame discarded after; the
     * specs' multi-action frames run under sessions that never call

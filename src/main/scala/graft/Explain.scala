@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for the named keys to
   * plans/<tag>/<key>_<suffix>.txt (the optimization-round evidence
   * files). Usage:
   *   sbt "runMain graft.Explain <tag> <suffix> key1,key2,... [sfDir]"
+  * The plan is the one a key's action starts from (AQE not yet
+  * finalized). Session shape (cpus, shuffle) comes from [[Harness]].
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -13,17 +13,7 @@ object Explain {
     val suffix = args(1)
     val keys = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer",
-        "org.apache.spark.serializer.KryoSerializer") // round 17, see Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val dir = new java.io.File(s"plans/$tag")
     dir.mkdirs()
     keys.foreach { key =>
@@ -35,6 +25,9 @@ object Explain {
       try w.println(txt) finally w.close()
       println(s"[explain] wrote plans/$tag/${key}_$suffix.txt " +
         s"(${txt.count(_ == '\n')} lines)")
+      // building a loop key's frame runs its fixpoint; release the
+      // scratch blocks it registered before the next key
+      Ckpt.releaseScratch()
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-tool main: scale an existing fixture directory K× (default 10)
@@ -120,14 +120,7 @@ object GenScale {
     val unknown = flags -- Set("zipfdocs")
     require(unknown.isEmpty, s"unknown GenScale flags: ${unknown.mkString(",")}")
     val zipfDocs = flags("zipfdocs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val t = (n: String) => Tables.table(spark, src, n)
     val ev = Tables.events(spark, src)

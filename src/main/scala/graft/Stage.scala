@@ -28,7 +28,7 @@ object Stage {
 
   /** Resolution order: session/`--conf` value, then the
     * `SPARK_GRAFT_STAGE_DIR` env (so every main — Verify, Bench,
-    * RunOne, the probes — honors the same switch without per-main
+    * Explain, the probes — honors the same switch without per-main
     * builder plumbing, and a spark-submit `--conf` is never
     * clobbered by a builder default), then `/tmp`. */
   def dir(s: SparkSession): String =

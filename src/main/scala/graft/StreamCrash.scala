@@ -62,20 +62,8 @@ object StreamCrash {
 
   private def session(): SparkSession = {
     val changelog = sys.env.get("SPARK_GRAFT_SR_CHANGELOG").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", changelog.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    Harness.session(Harness.RocksDbProvider,
+      Harness.RocksDbChangelog -> changelog.toString)
   }
 
   /** One deterministic input file per batch: b000.parquet.. — written

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -78,8 +77,7 @@ object StreamRate {
           "remove it yourself or pass a fresh path")
     } else org.apache.commons.io.FileUtils.deleteQuietly(ckptFile)
     val changelog = sys.env.get("SPARK_GRAFT_SR_CHANGELOG").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val master = Harness.master
     // Markers live in a RUN-SCOPED sibling dir (<ckpt>.markers), never
     // the ckpt parent: with a user-supplied ckptDir like /tmp/foo,
     // parent-dir markers would litter /tmp, collide between concurrent
@@ -93,18 +91,8 @@ object StreamRate {
       org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
       java.nio.file.Files.createDirectories(d)
     }
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", changelog.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.RocksDbProvider,
+      Harness.RocksDbChangelog -> changelog.toString)
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 

@@ -1,51 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the same main run against a real cluster
-    // manager (e.g. spark://host:7077 via spark-submit) — the multi-JVM
-    // parity path. Unset, it keeps the driver's local[cpus] contract.
-    // MULTI-HOST clusters: the Stage.materializeOnce derived artifacts
-    // default under /tmp via the default filesystem — with file:// and
-    // executors on other machines the parquet parts would land on
-    // per-executor local disks and a later read silently truncate.
-    // Set spark.graft.stage.dir (Stage.DirConf, round 10) to a shared
-    // path/URI so driver and every executor resolve the same bytes;
-    // the same-host standalone parity run in SCALE.md needs nothing.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // spark.graft.stage.dir resolves inside Stage.dir (session conf →
-    // SPARK_GRAFT_STAGE_DIR env → /tmp), so a spark-submit --conf is
-    // never clobbered by a builder default here.
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer",
-        "org.apache.spark.serializer.KryoSerializer") // round 17, see Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER (Harness) runs the same main against a real
+    // cluster manager — the multi-JVM parity path. MULTI-HOST clusters
+    // must set spark.graft.stage.dir (Stage.DirConf) to a shared
+    // path/URI: under /tmp on file://, the Stage.materializeOnce parts
+    // would land on per-executor local disks and a later read silently
+    // truncate. The same-host standalone parity run needs nothing.
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // Dev filter (same contract as Bench): comma-separated key list.
     // The driver never sets it, so the shipped gate always runs ALL keys.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo'd or stale key name must fail loudly, not verify nothing
-    // with exit 0 — that would read as a clean gate.
-    only.foreach { names =>
-      require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but selects no keys")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val selected = Harness.keys()
     // A failed key must still produce an artifact the driver can see:
     // silently writing nothing shrinks the key list and makes the
     // correctness sheet look clean while losing coverage (round-5
@@ -67,7 +37,9 @@ object Verify {
           Files.createDirectories(dir)
           val msg = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
           Files.writeString(dir.resolve("_FAILED"), msg)
-        } catch { case _: Throwable => () }
+        } catch { case w: Throwable =>
+          System.err.println(s"[verify] $name: could not write $outDir/$name/_FAILED: $w")
+        }
       }
       // Round 18 block hygiene: the key's result is on disk; its
       // scratch localCheckpoint blocks have no readers left (see Bench).

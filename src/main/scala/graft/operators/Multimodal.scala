@@ -71,9 +71,9 @@ object Multimodal {
   }
 
   /** pHash LSH near-dup pairs with the clique→star hot-bucket cap —
-    * the multimodal_phash pipeline, factored out so HotBandProbe-style
-    * measurement can run it capped vs uncapped on an injected
-    * mass-duplicate corpus (docs needs doc_id + text). */
+    * the multimodal_phash pipeline, factored out so a spec can run it
+    * capped vs uncapped on an injected mass-duplicate corpus (docs
+    * needs doc_id + text). */
   private[graft] def phashPairs(docs: DataFrame,
       bucketCap: Int = PhashBandCap): DataFrame = {
     val s = docs.sparkSession

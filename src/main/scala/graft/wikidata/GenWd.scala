@@ -389,13 +389,7 @@ object GenWd {
     val lexemes = flags("lexemes") // emit a lexeme dump instead of entities
     val minfo = flags("mediainfo")     // emit a Commons mediainfo dump
     val arraywrap = flags("arraywrap") // published latest-all.json array layout
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
     def lines = spark.range(0, n, 1, parts).map { i =>
       val body = if (lexemes) lexemeJson(i)

@@ -1,7 +1,6 @@
 package graft.wikidata
 
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
 import graft.sources.{PgCopySink, PgDdl, PgServer}
 
 /** Sharded-COPY fan-out probe (r12 verdict task 1): MEASURE, not argue,
@@ -42,14 +41,7 @@ object PgShardProbe {
     val shards = if (args.nonEmpty) args(0).toInt else 2
     val parts = if (args.length > 1) args(1).toInt else 16
     val attach = args.length > 2 && args(2) == "attach"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     require(PgServer.ensure(), "local Postgres unavailable")
 
     val t = "graft_wd_shardprobe"

@@ -1,7 +1,5 @@
 package graft.wikidata
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-tool main (round-17 verdict 3): run [[Wd.rechunk]] from the
   * command line and print one timed JSON line — the bounded one-pass
   * re-chunk that turns an unsplittable `.json.gz` dump into N
@@ -14,11 +12,7 @@ object Rechunk {
   def main(args: Array[String]): Unit = {
     val Array(in, out, parts) = args.take(3)
     val codec = if (args.length > 3) args(3) else "none"
-    val spark = SparkSession.builder()
-      .master("local[2]") // driver-side streaming pass; cores irrelevant
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session() // driver-side streaming pass
     val t0 = System.nanoTime()
     val n = Wd.rechunk(spark, in, out, parts.toInt, codec)
     val sec = (System.nanoTime() - t0) / 1e9

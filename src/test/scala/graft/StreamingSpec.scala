@@ -490,23 +490,13 @@ class RunningCountProcessor
 // StreamRate sustained-throughput probe drives the same processor the
 // parity test here pins.
 
-/** One shared local session for all suites (guide: one per JVM). */
+/** One shared local session for all suites (guide: one per JVM), built
+  * by the harness builder with a fixed shape: the test partitioning does
+  * not follow SPARK_GRAFT_CPUS. */
 object Spec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.serializer",
-        "org.apache.spark.serializer.KryoSerializer") // parity with Bench/Verify
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session("local[4]", 4, Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse"))
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
 }

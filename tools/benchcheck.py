@@ -212,7 +212,7 @@ def selftest(args):
     import subprocess
     import tempfile
     base = json.load(open(args.bench))
-    bands, _, _, _ = parse_baseline(args.baseline)
+    bands, fps, _, fp_cfg = parse_baseline(args.baseline)
     # Mutate through the same resolved dict used for reading: flat
     # bench files (no 'parsed' wrapper) are legal loader input and must
     # be legal selftest input too (r11 ADVICE).
@@ -232,6 +232,19 @@ def selftest(args):
     # outside the 0.2%/64KB tolerance for any real key.
     det = json.load(open(args.detail))
     det_q = det.get("queries", det)
+    # The committed detail may be a capture at another (cpus, shuffle)
+    # than the victim's BASELINE fingerprints, and the gate skips a
+    # config-mismatched compare — D and E would then pass vacuously.
+    # Stamp the forged copy with the victim's fingerprint config, and
+    # give every other key fingerprinted at that config its expected
+    # bytes, so the forged move is the only one the gate sees.
+    cfg = fp_cfg.get(victim, {})
+    if cfg and isinstance(det, dict) and "queries" in det:
+        det.update(cfg)
+        for k, alts in fps.items():
+            if k in det_q and fp_cfg.get(k) == cfg:
+                det_q[k]["shr"] = int(alts[0][0] * 1e6)
+                det_q[k]["shw"] = int(alts[0][1] * 1e6)
     if victim in det_q and det_q[victim].get("shr", 0) > 0:
         det_q[victim]["shr"] = int(det_q[victim]["shr"] * 1.5)
     else:  # key absent from detail: forge an entry with a huge shr
