@@ -73,6 +73,17 @@ object Stage {
   def create(s: SparkSession, path: String): java.io.OutputStream =
     fs(s, path).create(new org.apache.hadoop.fs.Path(path), true)
 
+  /** Open `path` for writing through Hadoop's BZip2 codec — the codec
+    * Spark splits `.bz2` input with (caller closes). The one bz2 writer:
+    * dump-family fixture twins, the scan_bz2_text fixture and
+    * `Wd.rechunk` output all go through it. */
+  def createBz2(s: SparkSession, path: String): java.io.OutputStream = {
+    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
+    codec.setConf(s.sparkContext.hadoopConfiguration)
+    codec.createOutputStream(
+      new java.io.BufferedOutputStream(create(s, path), 1 << 16))
+  }
+
   def exists(s: SparkSession, path: String): Boolean =
     fs(s, path).exists(new org.apache.hadoop.fs.Path(path))
 

@@ -2,7 +2,9 @@ package graft.sources
 
 import java.io.File
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import scala.sys.process._
 import scala.util.Try
 
@@ -607,7 +609,7 @@ object PgStreamSink {
   * driver-side subprocesses against the unix socket, while PgCopySink's
   * per-partition COPY runs psql ON EXECUTOR hosts (those need the psql
   * binary and socket/TCP reach to the server). The round-trip keys'
-  * CSV read-backs therefore route scratch through Stage.p: on a
+  * CSV read-backs therefore route scratch through Stage.posixP: on a
   * multi-host cluster, point spark.graft.stage.dir at a POSIX path
   * shared by driver and executors so the driver-written CSV is
   * readable where the scan tasks run.
@@ -627,6 +629,53 @@ object PgServer {
   def psql(sql: String): Option[String] =
     Try(Seq("psql", "-h", sockDir, "-p", port.toString, "-d", db,
       "-v", "ON_ERROR_STOP=1", "-Atc", sql).!!.trim).toOption
+
+  /** [[psql]] that throws on failure, naming the statement. */
+  def exec(sql: String): String = psql(sql).getOrElse(
+    throw new IllegalStateException(s"psql failed: ${sql.linesIterator.next()}"))
+
+  /** The scratch CSV a [[roundTrip]] of `table` exports to: psql's
+    * `\copy TO` writes it through the OS filesystem on the driver host
+    * and the executors read it back, hence [[graft.Stage.posixP]]. */
+  def scratchCsv(s: SparkSession, table: String): String =
+    graft.Stage.posixP(s, s"${table}_roundtrip.csv")
+
+  /** The load-and-read-back round trip of every Postgres sink key:
+    * drop `table`, the `side` tables and the `drop` tables (CASCADE, so
+    * attach-promote segments go too), recreate `table` and `side` from
+    * their schemas with PgDdl, run `write`, then export `from` (default:
+    * the whole target) ORDER BY `orderBy` with `\copy … TO` a fresh
+    * [[scratchCsv]] and read it back with `schema`. A failed DDL or
+    * export throws, and the scratch file is deleted before the export,
+    * so a failure can never hand back an earlier run's rows. Where no
+    * server boots, `frame` goes through the ParquetSink twin instead —
+    * the oracle holds on both paths. */
+  def roundTrip(s: SparkSession, table: String, schema: StructType,
+      orderBy: Seq[String], frame: DataFrame,
+      side: Seq[(String, StructType)] = Nil, drop: Seq[String] = Nil,
+      from: String = "")(write: => Unit): DataFrame = {
+    val keys = orderBy.map(col)
+    if (!ensure()) {
+      val twin = graft.Stage.p(s, s"${table}_twin")
+      ParquetSink(twin).write(frame)
+      s.read.parquet(twin).orderBy(keys: _*)
+    } else {
+      val created = (table -> schema) +: side
+      (created.map(_._1) ++ drop).foreach(t =>
+        exec(s"""DROP TABLE IF EXISTS "$t" CASCADE"""))
+      created.foreach { case (t, sch) => exec(PgDdl.createTable(t, sch)) }
+      write
+      val out = scratchCsv(s, table)
+      Files.deleteIfExists(Paths.get(out))
+      val src = if (from.nonEmpty) from else s"""SELECT * FROM "$table""""
+      exec(s"""\\copy ($src ORDER BY ${orderBy.mkString(", ")}) """ +
+        s"""TO '$out' WITH (FORMAT csv)""")
+      s.read.schema(schema).option("header", "false")
+        // Postgres prints TIMESTAMP as 'yyyy-MM-dd HH:mm:ss'
+        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
+        .csv(out).orderBy(keys: _*)
+    }
+  }
 
   @volatile private var known = false
 

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.BufferedOutputStream
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -128,10 +127,7 @@ object Sources {
     * Spark uses to split real .bz2 dumps across tasks (unlike the
     * reference's single-process `bzcat` pipe). */
   private def ensureBz2(s: SparkSession): String = synchronized {
-    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
-    codec.setConf(s.sparkContext.hadoopConfiguration)
-    val out = codec.createOutputStream(
-      new BufferedOutputStream(Stage.create(s, bz2Path(s))))
+    val out = Stage.createBz2(s, bz2Path(s))
     try out.write(dumpLines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
     bz2Path(s)
@@ -454,29 +450,17 @@ object Sources {
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
           sumMoney(col("o_totalprice")).as("total_price"))
-      if (PgServer.ensure()) {
-        val t = "graft_order_stats"
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$t"""")
-        PgServer.psql(PgDdl.createTable(t, schema))
-        // per-partition fan-out: each partition COPYs from its executor
-        // (the 100 TB shape); the round trip below verifies it.
+      val t = "graft_order_stats"
+      // per-partition fan-out: each partition COPYs from its executor
+      // (the 100 TB shape); the round trip verifies it. Its scratch CSV
+      // goes through Stage.posixP: psql's \copy TO runs in the
+      // DRIVER-host psql process while the read-back runs on executors
+      // — on a multi-host cluster set spark.graft.stage.dir to a POSIX
+      // path shared by driver and executors (NFS; an HDFS URI won't
+      // work here — psql writes through the OS filesystem, not Hadoop).
+      PgServer.roundTrip(s, t, schema, Seq("o_orderstatus"), agg) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
           perPartition = true).write(agg)
-        // Scratch routed through Stage.p (round-14 verdict 4): psql's
-        // \copy TO runs in the DRIVER-host psql process while the
-        // s.read.csv below runs on executors — on a multi-host cluster
-        // set spark.graft.stage.dir to a POSIX path shared by driver
-        // and executors (NFS; an HDFS URI won't work here — psql
-        // writes through the OS filesystem, not Hadoop).
-        val out = Stage.posixP(s, "graft_pg_roundtrip.csv")
-        PgServer.psql(
-          s"""\\copy (SELECT * FROM "$t" ORDER BY o_orderstatus) TO '$out' WITH (FORMAT csv)""")
-        s.read.schema(schema).option("header", "false").csv(out)
-          .orderBy("o_orderstatus")
-      } else {
-        val out = Stage.p(s, "graft_sink_pg_twin")
-        ParquetSink(out).write(agg)
-        s.read.parquet(out).orderBy("o_orderstatus")
       }
     }),
 
@@ -495,21 +479,10 @@ object Sources {
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
           sumMoney(col("o_totalprice")).as("total_price"))
-      if (PgServer.ensure()) {
-        val t = "graft_order_stats_wire"
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$t"""")
-        PgServer.psql(PgDdl.createTable(t, schema))
+      val t = "graft_order_stats_wire"
+      PgServer.roundTrip(s, t, schema, Seq("o_orderstatus"), agg) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
           perPartition = true, wire = true).write(agg)
-        val out = Stage.posixP(s, "graft_pg_wire_roundtrip.csv")
-        PgServer.psql(
-          s"""\\copy (SELECT * FROM "$t" ORDER BY o_orderstatus) TO '$out' WITH (FORMAT csv)""")
-        s.read.schema(schema).option("header", "false").csv(out)
-          .orderBy("o_orderstatus")
-      } else {
-        val out = Stage.p(s, "graft_sink_pg_wire_twin")
-        ParquetSink(out).write(agg)
-        s.read.parquet(out).orderBy("o_orderstatus")
       }
     }),
 
@@ -531,28 +504,13 @@ object Sources {
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"),
           sumMoney(col("o_totalprice")).as("total_price"))
-      if (PgServer.ensure()) {
-        val t = "graft_order_by_cust"
-        (Seq(t) ++ (0 until 3).map(i => s"${t}_s$i")).foreach { x =>
-          PgServer.psql(s"""DROP TABLE IF EXISTS "$x" CASCADE""")
-        }
-        PgServer.psql(PgDdl.createTable(t, schema))
+      val t = "graft_order_by_cust"
+      val shards = (0 until 3).map(i => s"${t}_s$i")
+      PgServer.roundTrip(s, t, schema, Seq("o_custkey"), agg, drop = shards,
+          from = shards.map(x => s"""SELECT * FROM "$x"""").mkString(" UNION ALL ")) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
           perPartition = true, numPartitions = 8,
           shards = 3, shardCol = "o_custkey").write(agg)
-        // driver-host psql writes, executors read: Stage.p + shared
-        // POSIX dir on multi-host clusters (see sink_pg_copy)
-        val out = Stage.posixP(s, "graft_pg_sharded_roundtrip.csv")
-        val union = (0 until 3)
-          .map(i => s"""SELECT * FROM "${t}_s$i"""").mkString(" UNION ALL ")
-        PgServer.psql(
-          s"""\\copy ($union ORDER BY o_custkey) TO '$out' WITH (FORMAT csv)""")
-        s.read.schema(schema).option("header", "false").csv(out)
-          .orderBy("o_custkey")
-      } else {
-        val out = Stage.p(s, "graft_sink_pg_sharded_twin")
-        ParquetSink(out).write(agg)
-        s.read.parquet(out).orderBy("o_custkey")
       }
     }),
 
@@ -572,24 +530,11 @@ object Sources {
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"),
           sumMoney(col("o_totalprice")).as("total_price"))
-      if (PgServer.ensure()) {
-        val t = "graft_order_by_cust_att"
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$t" CASCADE""")
-        PgServer.psql(PgDdl.createTable(t, schema))
+      val t = "graft_order_by_cust_att"
+      PgServer.roundTrip(s, t, schema, Seq("o_custkey"), agg) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
           perPartition = true, numPartitions = 8,
           attachPromote = true).write(agg)
-        // driver-host psql writes, executors read: Stage.p + shared
-        // POSIX dir on multi-host clusters (see sink_pg_copy)
-        val out = Stage.posixP(s, "graft_pg_attach_roundtrip.csv")
-        PgServer.psql(
-          s"""\\copy (SELECT * FROM "$t" ORDER BY o_custkey) TO '$out' WITH (FORMAT csv)""")
-        s.read.schema(schema).option("header", "false").csv(out)
-          .orderBy("o_custkey")
-      } else {
-        val out = Stage.p(s, "graft_sink_pg_attach_twin")
-        ParquetSink(out).write(agg)
-        s.read.parquet(out).orderBy("o_custkey")
       }
     }),
 

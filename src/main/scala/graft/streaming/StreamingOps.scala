@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
 import org.apache.spark.sql.types._
-import graft.{Det, Stage, Tables}
+import graft.{Det, Tables}
 import Det._
 
 /** Structured-Streaming operators (SURVEY.md §2.9).
@@ -164,7 +164,7 @@ object StreamingOps {
       // oracled result. The true incremental path (MemoryStream →
       // writeStream.foreachBatch(PgStreamSink.writeBatch)) runs in
       // StreamingSpec, including a mid-stream duplicate-batch retry.
-      import graft.sources.{ParquetSink, PgDdl, PgServer, PgStreamSink}
+      import graft.sources.{PgServer, PgStreamSink}
       val schema = StructType(Seq(
         StructField("ws", TimestampType),
         StructField("event_type", StringType),
@@ -175,29 +175,15 @@ object StreamingOps {
         .agg(count(lit(1)).as("n"), sumMoney(col("value")).as("sum_value"))
         .select(col("w.start").as("ws"), col("event_type"), col("n"),
           col("sum_value"))
-      if (PgServer.ensure()) {
-        val t = "graft_stream_agg"
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$t"""")
-        PgServer.psql(s"""DROP TABLE IF EXISTS "${t}__commits"""")
-        PgServer.psql(PgDdl.createTable(t, schema))
+      val t = "graft_stream_agg"
+      PgServer.roundTrip(s, t, schema, Seq("ws", "event_type"), agg,
+          drop = Seq(s"${t}__commits")) {
         PgStreamSink.ensureCommits(PgServer.sockDir, PgServer.port, PgServer.db, t)
         PgStreamSink.writeBatch(PgServer.sockDir, PgServer.port, PgServer.db,
           t, 0L, agg)
         // redelivery of the same micro-batch: must be a no-op
         PgStreamSink.writeBatch(PgServer.sockDir, PgServer.port, PgServer.db,
           t, 0L, agg)
-        val out = "/tmp/graft_stream_pg_roundtrip.csv"
-        PgServer.psql(
-          s"""\\copy (SELECT * FROM "$t" ORDER BY ws, event_type) TO '$out' WITH (FORMAT csv)""")
-        s.read.schema(schema)
-          .option("header", "false")
-          .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-          .csv(out)
-          .orderBy("ws", "event_type")
-      } else {
-        val out = Stage.p(s, "graft_stream_pg_twin")
-        ParquetSink(out).write(agg)
-        s.read.parquet(out).orderBy("ws", "event_type")
       }
     }),
 

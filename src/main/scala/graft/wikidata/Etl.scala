@@ -1,11 +1,9 @@
 package graft.wikidata
 
-import java.io.BufferedOutputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Stage
-import graft.sources.{ParquetSink, PgCopySink, PgDdl, PgServer}
+import graft.sources.{PgCopySink, PgServer}
 
 /** The reference tool's COMPLETE pipeline composed as one plan
   * (SURVEY.md §1): bz2-compressed entity NDJSON dump → explicit-schema
@@ -16,47 +14,58 @@ import graft.sources.{ParquetSink, PgCopySink, PgDdl, PgServer}
   * the warehouse table, not an intermediate frame.
   *
   * At 100 TB: bz2 is block-splittable so the dump scan fans out across
-  * tasks; parse/flatten/extract are one narrow codegen'd pipeline with
-  * no shuffle at all until the final sort; the COPY fan-out streams
-  * each partition from its executor (N concurrent COPYs, no driver
-  * staging, epoch-keyed idempotence under retries/zombies). The only
-  * wide operator in the whole job is the read-back ORDER BY.
+  * tasks; parse/flatten/extract/label are one narrow codegen'd pipeline
+  * over ONE dump scan with no shuffle at all until the final sort; the
+  * COPY fan-out streams each partition from its executor (N concurrent
+  * COPYs, no driver staging, epoch-keyed idempotence under
+  * retries/zombies). The only wide operator in the whole job is the
+  * read-back ORDER BY.
   */
 object Etl {
-  private def bz2Path(s: SparkSession): String =
-    Stage.p(s, "graft_wd_entities.ndjson.bz2")
+  /** Warehouse statements table, in Postgres DDL column order; the
+    * second column is the family's English label (`en_label` for
+    * entities, `en_caption` for mediainfo). */
+  private[wikidata] def statementsSchema(label: String): StructType =
+    StructType(Seq(
+      StructField("id", StringType),
+      StructField(label, StringType),
+      StructField("pid", StringType),
+      StructField("statement_id", StringType),
+      StructField("dv_type", StringType),
+      StructField("v_string", StringType),
+      StructField("v_entity", StringType),
+      StructField("v_time_raw", StringType),
+      StructField("v_ts", TimestampType),
+      StructField("v_amount", StringType),
+      StructField("v_lat", DoubleType),
+      StructField("v_lon", DoubleType),
+      StructField("v_mono", StringType)))
 
-  /** Stage the fixture twice: the bz2 dump the pipeline ingests, and
-    * the plain NDJSON twin the DuckDB oracle reads — byte-identical
-    * content, so the oracle checks the decompress-and-parse path too. */
-  private def ensureBz2(s: SparkSession): String = synchronized {
-    Wd.ensureFixture(s)
-    val in = getClass.getResourceAsStream("/wd_entities.ndjson")
-    require(in != null, "wd_entities.ndjson missing from classpath")
-    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
-    codec.setConf(s.sparkContext.hadoopConfiguration)
-    val out = codec.createOutputStream(
-      new BufferedOutputStream(Stage.create(s, bz2Path(s))))
-    try out.write(in.readAllBytes())
-    finally { out.close(); in.close() }
-    bz2Path(s)
+  /** Dump rows → warehouse statement rows, from ONE dump scan: the
+    * English label is a map lookup on the already-parsed row, so it
+    * rides the `claims` explode as a [[TypedValues.typed]] pass-through
+    * column — no second scan, no id join. That equals a left join of
+    * the labels on `id` wherever ids are unique, which the public dumps
+    * guarantee (WdTypedSpec pins the equality on GenWd dumps). */
+  private[wikidata] def statementRows(ents: DataFrame, claims: String,
+      label: String): DataFrame = {
+    val cf = ents
+      .select(col("id"),
+        col("labels").getItem("en").getField("value").as(label),
+        explode(col(claims)).as(Seq("pid", "stmts")))
+      .select(col("id"), col(label), col("pid"),
+        explode(col("stmts")).as("st"))
+      .select(col("id"), col(label), col("pid"),
+        col("st.id").as("statement_id"),
+        col("st.mainsnak.datavalue.type").as("dv_type"),
+        col("st.mainsnak.datavalue.value").as("dv_raw"))
+    TypedValues.typed(cf, passThrough = Seq(label))
+      .select(statementsSchema(label).fieldNames.map(col).toSeq: _*)
   }
 
-  /** Target/readback schema — column order is the Postgres DDL order. */
-  private val statementsSchema = StructType(Seq(
-    StructField("id", StringType),
-    StructField("en_label", StringType),
-    StructField("pid", StringType),
-    StructField("statement_id", StringType),
-    StructField("dv_type", StringType),
-    StructField("v_string", StringType),
-    StructField("v_entity", StringType),
-    StructField("v_time_raw", StringType),
-    StructField("v_ts", TimestampType),
-    StructField("v_amount", StringType),
-    StructField("v_lat", DoubleType),
-    StructField("v_lon", DoubleType),
-    StructField("v_mono", StringType)))
+  /** Postgres DDL column schema of the statements target — the probe
+    * creates its target with the same shape as the declared key. */
+  private[wikidata] val targetSchema: StructType = statementsSchema("en_label")
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -65,81 +74,41 @@ object Etl {
     * en-label enrichment, in DDL column order. Factored out so the
     * shard-fan-out probe (PgShardProbe) measures EXACTLY the declared
     * key's Spark side, not a reconstruction of it. A GenWd bz2 dump
-    * (spark.graft.wd.bz2 / SPARK_GRAFT_WD_BZ2) replaces the staged
-    * fixture bz2 for scale measurement; unset = fixture, as before. */
-  private def dumpEnts(s: SparkSession): DataFrame = {
-    val bz2 = s.conf.getOption("spark.graft.wd.bz2")
-      .orElse(sys.env.get("SPARK_GRAFT_WD_BZ2"))
-      .getOrElse(ensureBz2(s))
-    // shared dump reader (round-16): the composed ETL accepts the
-    // array-wrapped public dump layout too — format auto-detected
-    // from the first decompressed byte, autosplit stays per-scan
-    Wd.readDump(s, bz2, EntitySchema.entity)
-  }
-
-  def loadFrame(s: SparkSession): DataFrame = {
-    // redirect stubs are routed to redirectFrame, never loaded as
-    // empty entities (round-15 verdict 3); they carry no claims, so
-    // the filter documents the split rather than changing row counts
-    val ents = dumpEnts(s).filter(col("redirect").isNull)
-    // labels is a MapType: the en lookup is a codegen'd map access,
-    // no explode + filter pass over every language
-    val enLabels = ents.select(col("id"),
-      col("labels").getItem("en").getField("value").as("en_label"))
-    val typed = TypedValues.typed(Wd.claimsFlatten(ents))
-    typed
-      .join(enLabels, Seq("id"), "left")
-      .select(statementsSchema.fieldNames.map(col).toSeq: _*)
-  }
+    * (spark.graft.wd.bz2) replaces the staged fixture bz2 for scale
+    * measurement; unset = fixture. The shared dump reader accepts the
+    * array-wrapped public layout too (auto-detected). Redirect stubs
+    * are routed to redirectFrame, never loaded as empty entities
+    * (round-15 verdict 3); they carry no claims, so the filter documents
+    * the split rather than changing row counts. */
+  def loadFrame(s: SparkSession): DataFrame =
+    statementRows(Wd.entityDump.readBz2(s).filter(col("redirect").isNull),
+      "claims", "en_label")
 
   /** The dump's redirect relation, loaded alongside the statements
     * table so the warehouse can resolve redirected ids. */
   def redirectFrame(s: SparkSession): DataFrame =
-    dumpEnts(s)
+    Wd.entityDump.readBz2(s)
       .filter(col("redirect").isNotNull)
       .select(col("id"), col("redirect").as("target"), col("lastrevid"))
 
   /** DDL schema of the redirects side-table. */
-  private[wikidata] val redirectsSchema = StructType(Seq(
+  private val redirectsSchema = StructType(Seq(
     StructField("id", StringType),
     StructField("target", StringType),
     StructField("lastrevid", LongType)))
 
-  /** Postgres DDL column schema of the statements target — the probe
-    * creates its target with the same shape as the declared key. */
-  private[wikidata] def targetSchema: StructType = statementsSchema
-
   val queries: Map[String, Q] = Map(
     "etl_wikidata_pg" -> ((s, _) => {
       val load = loadFrame(s)
-      if (PgServer.ensure()) {
-        val t = "graft_wd_statements"
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$t"""")
-        PgServer.psql(PgDdl.createTable(t, statementsSchema))
+      val (t, rt) = ("graft_wd_statements", "graft_wd_redirects")
+      // redirect stubs land in their own table — the id-resolution
+      // relation, never rows in the statements surface
+      PgServer.roundTrip(s, t, targetSchema, Seq("id", "pid", "statement_id"),
+          load, side = Seq(rt -> redirectsSchema)) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
           perPartition = true).write(load)
-        // redirect stubs land in their own table — the id-resolution
-        // relation, never rows in the statements surface
-        val rt = "graft_wd_redirects"
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$rt"""")
-        PgServer.psql(PgDdl.createTable(rt, redirectsSchema))
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, rt,
           perPartition = true).write(redirectFrame(s))
-        val out = "/tmp/graft_wd_etl_roundtrip.csv"
-        PgServer.psql(
-          s"""\\copy (SELECT * FROM "$t" ORDER BY id, pid, statement_id) TO '$out' WITH (FORMAT csv)""")
-        s.read.schema(statementsSchema)
-          .option("header", "false")
-          // Postgres prints TIMESTAMP as 'yyyy-MM-dd HH:mm:ss'
-          .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-          .csv(out)
-          .orderBy("id", "pid", "statement_id")
-      } else {
-        // no server bootable in this environment: the same load frame
-        // through the ParquetSink twin — the oracle holds on both paths
-        val out = Stage.p(s, "graft_wd_etl_twin")
-        ParquetSink(out).write(load)
-        s.read.parquet(out).orderBy("id", "pid", "statement_id")
       }
     })
   )

@@ -35,10 +35,10 @@ package graft.wikidata
   *   (power-law property + label-count skew instead of the default
   *   80/20 two-band split — the realistic-dump twin for skew honesty)
   *   writes <outDir>/plain (NDJSON) and <outDir>/bz2 (same lines, bz2)
-  * Point the queries at it with spark.graft.wd.path=<outDir>/plain
-  * (or env SPARK_GRAFT_WD_NDJSON) and spark.graft.wd.bz2=<outDir>/bz2
-  * (or SPARK_GRAFT_WD_BZ2); unset, everything uses the checked-in
-  * fixture exactly as before.
+  * Point the queries at it with spark.graft.wd.path=<outDir>/plain and
+  * spark.graft.wd.bz2=<outDir>/bz2 (`--conf` on spark-submit; under sbt,
+  * SPARK_GRAFT_EXTRA_OPTS="-Dspark.graft.wd.path=… -Dspark.graft.wd.bz2=…");
+  * unset, everything uses the checked-in fixture exactly as before.
   */
 object GenWd {
   // splitmix64 finalizer — the standard public-domain mix schedule.
@@ -369,7 +369,7 @@ object GenWd {
     // bz2only (arg 4, literal "bz2only"): skip the plain twin. The
     // 10M-entity point would be ~17 GB plain — the bz2 (~2.5 GB) is
     // what the measured keys read anyway (Spark's text reader
-    // decompresses .bz2 transparently, so SPARK_GRAFT_WD_NDJSON can
+    // decompresses .bz2 transparently, so spark.graft.wd.path can
     // point at the bz2 dir too), and the disk budget is real.
     // arg 4 is a comma-separated flag list: "bz2only" (skip the plain
     // twin), "zipf" (power-law property + label-count skew — the

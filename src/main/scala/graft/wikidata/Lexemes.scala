@@ -18,36 +18,13 @@ import org.apache.spark.sql.functions._
   * evidence.
   */
 object Lexemes {
-  /** Fixed path so the DuckDB oracle reads the same bytes. */
-  val fixturePath = "/tmp/graft_wd_lexemes.ndjson"
-
-  def ensureFixture(s: SparkSession): String = synchronized {
-    val in = getClass.getResourceAsStream("/wd_lexemes.ndjson")
-    require(in != null, "wd_lexemes.ndjson missing from classpath")
-    try graft.Stage.write(s, fixturePath, in.readAllBytes())
-    finally in.close()
-    fixturePath
-  }
-
-  /** Scale-measurement override, same contract as Wd.dumpOverride. */
-  def dumpOverride(s: SparkSession): Option[String] =
-    s.conf.getOption("spark.graft.wd.lexemes")
-      .orElse(sys.env.get("SPARK_GRAFT_WD_LEXEMES"))
-
-  def lexemes(s: SparkSession): DataFrame = {
-    val path = dumpOverride(s).getOrElse(ensureFixture(s))
-    // shared dump reader: array-wrapper auto-detect + per-scan
-    // autosplit, same as the entity dump (round-16)
-    Wd.readDump(s, path, EntitySchema.lexeme)
-  }
-
   type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // One row per (lexeme, lemma language) — the headword surface,
     // with the structural counts a consumer filters on.
     "wd_lexemes_flatten" -> ((s, _) =>
-      lexemes(s)
+      Wd.lexemeDump.read(s)
         .select(col("id"),
           col("lexicalCategory").as("lex_cat"),
           col("language").as("lex_lang"),
@@ -62,7 +39,7 @@ object Lexemes {
     // (posexplode), grammatical features as a SORTED join (set
     // semantics — dump order of features is not a contract).
     "wd_lexeme_forms" -> ((s, _) =>
-      lexemes(s)
+      Wd.lexemeDump.read(s)
         .select(col("id"), posexplode(col("forms")).as(Seq("fpos", "f")))
         .select(col("id"), col("f.id").as("form_id"), col("fpos"),
           coalesce(size(col("f.grammaticalFeatures")), lit(0)).as("n_features"),
@@ -80,7 +57,7 @@ object Lexemes {
     // claims flatten; a dictionary consumer needs these as much as
     // the representations.
     "wd_lexeme_form_claims" -> ((s, _) =>
-      lexemes(s)
+      Wd.lexemeDump.read(s)
         .select(col("id"), posexplode(col("forms")).as(Seq("fpos", "f")))
         .select(col("id"), col("f.id").as("form_id"), col("fpos"),
           explode(col("f.claims")).as(Seq("pid", "stmts")))
@@ -97,7 +74,7 @@ object Lexemes {
     // Sense STATEMENTS: item-for-this-sense (P5137) and friends —
     // what links a sense into the item graph; keyed by sense id.
     "wd_lexeme_sense_claims" -> ((s, _) =>
-      lexemes(s)
+      Wd.lexemeDump.read(s)
         .select(col("id"), posexplode(col("senses")).as(Seq("spos", "sn")))
         .select(col("id"), col("sn.id").as("sense_id"), col("spos"),
           explode(col("sn.claims")).as(Seq("pid", "stmts")))
@@ -113,7 +90,7 @@ object Lexemes {
 
     // One row per (sense, gloss language), sense position kept.
     "wd_lexeme_senses" -> ((s, _) =>
-      lexemes(s)
+      Wd.lexemeDump.read(s)
         .select(col("id"), posexplode(col("senses")).as(Seq("spos", "sn")))
         .select(col("id"), col("sn.id").as("sense_id"), col("spos"),
           explode(col("sn.glosses")).as(Seq("lang", "gv")))

@@ -1,21 +1,18 @@
 package graft.wikidata
 
-import java.io.BufferedOutputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.Stage
-import graft.sources.{ParquetSink, PgCopySink, PgDdl, PgServer}
+import graft.sources.{PgCopySink, PgServer}
 
 /** MediaInfo (M-) entity support — the third public dump family
   * (round-16 verdict 7): Wikimedia Commons structured data, i.e.
   * captions and statements attached to media files. Shapes from the
   * public MediaInfo extension JSON: captions live in `labels`, the
   * claims map is named `statements`, descriptions are always empty,
-  * no aliases/sitelinks. Same recipe as the lexeme family — own
-  * fixture, own override, flatten keys — and the reader is the shared
-  * `Wd.readDump`, so the array-wrapped Commons dump layout and
-  * per-scan autosplit come for free.
+  * no aliases/sitelinks. Same recipe as the lexeme family — its own
+  * `Wd.Family` (fixture, override confs) and flatten keys — read
+  * through the shared `Wd.readDump`, so the array-wrapped Commons dump
+  * layout and per-scan autosplit come for free.
   *
   * At 100 TB (the real mediainfo dump is ~100 GB, Commons-wide): the
   * same explicit-schema parse + codegen'd explode chains with no
@@ -23,95 +20,17 @@ import graft.sources.{ParquetSink, PgCopySink, PgDdl, PgServer}
   * evidence (SCALE.md wd rows) this inherits.
   */
 object Mediainfo {
-  /** Fixed path so the DuckDB oracle reads the same bytes. */
-  val fixturePath = "/tmp/graft_wd_mediainfo.ndjson"
-
-  def ensureFixture(s: SparkSession): String = synchronized {
-    val in = getClass.getResourceAsStream("/wd_mediainfo.ndjson")
-    require(in != null, "wd_mediainfo.ndjson missing from classpath")
-    try graft.Stage.write(s, fixturePath, in.readAllBytes())
-    finally in.close()
-    fixturePath
-  }
-
-  /** Scale-measurement override, same contract as Wd.dumpOverride. */
-  def dumpOverride(s: SparkSession): Option[String] =
-    s.conf.getOption("spark.graft.wd.mediainfo")
-      .orElse(sys.env.get("SPARK_GRAFT_WD_MEDIAINFO"))
-
-  def mediainfo(s: SparkSession): DataFrame = {
-    val path = dumpOverride(s).getOrElse(ensureFixture(s))
-    Wd.readDump(s, path, EntitySchema.mediainfo)
-  }
-
   type Q = (SparkSession, String) => DataFrame
 
-  private def bz2Path(s: SparkSession): String =
-    Stage.p(s, "graft_wd_mediainfo.ndjson.bz2")
-
-  /** Stage the fixture twice, like Etl.ensureBz2: the bz2 the composed
-    * pipeline ingests and the plain twin the DuckDB oracle reads. */
-  private def ensureBz2(s: SparkSession): String = synchronized {
-    ensureFixture(s)
-    val in = getClass.getResourceAsStream("/wd_mediainfo.ndjson")
-    require(in != null, "wd_mediainfo.ndjson missing from classpath")
-    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
-    codec.setConf(s.sparkContext.hadoopConfiguration)
-    val out = codec.createOutputStream(
-      new BufferedOutputStream(Stage.create(s, bz2Path(s))))
-    try out.write(in.readAllBytes())
-    finally { out.close(); in.close() }
-    bz2Path(s)
-  }
-
-  private def dumpMi(s: SparkSession): DataFrame = {
-    val bz2 = s.conf.getOption("spark.graft.wd.mediainfo.bz2")
-      .orElse(sys.env.get("SPARK_GRAFT_WD_MEDIAINFO_BZ2"))
-      .getOrElse(ensureBz2(s))
-    Wd.readDump(s, bz2, EntitySchema.mediainfo)
-  }
-
-  /** Target/readback schema — Postgres DDL column order. */
-  private val miSchema = StructType(Seq(
-    StructField("id", StringType),
-    StructField("en_caption", StringType),
-    StructField("pid", StringType),
-    StructField("statement_id", StringType),
-    StructField("dv_type", StringType),
-    StructField("v_string", StringType),
-    StructField("v_entity", StringType),
-    StructField("v_time_raw", StringType),
-    StructField("v_ts", TimestampType),
-    StructField("v_amount", StringType),
-    StructField("v_lat", DoubleType),
-    StructField("v_lon", DoubleType),
-    StructField("v_mono", StringType)))
-
   /** The mediainfo dump → warehouse-row frame: bz2 ingest → statements
-    * flatten → the SAME typed datavalue extraction the entity ETL uses
-    * (TypedValues.typed — mediainfo statements are ordinary statements)
-    * → English caption enrichment, in DDL order.
-    *
-    * ONE dump scan (round-17 verdict 4): the caption is a map lookup on
-    * the already-parsed entity row, so it rides the statements explode
-    * as a pass-through column instead of a second scan + id join —
-    * hash-identical (the old left join only ever reattached the
-    * caption to statement rows of the same entity), and the plan drops
-    * from two file scans + a join to one narrow codegen'd pipeline. */
-  def loadFrame(s: SparkSession): DataFrame = {
-    val cf = dumpMi(s)
-      .select(col("id"),
-        col("labels").getItem("en").getField("value").as("en_caption"),
-        explode(col("statements")).as(Seq("pid", "stmts")))
-      .select(col("id"), col("en_caption"), col("pid"),
-        explode(col("stmts")).as("st"))
-      .select(col("id"), col("en_caption"), col("pid"),
-        col("st.id").as("statement_id"),
-        col("st.mainsnak.datavalue.type").as("dv_type"),
-        col("st.mainsnak.datavalue.value").as("dv_raw"))
-    TypedValues.typed(cf, passThrough = Seq("en_caption"))
-      .select(miSchema.fieldNames.map(col).toSeq: _*)
-  }
+    * flatten → the SAME typed datavalue extraction and single-scan
+    * statements builder the entity ETL uses (mediainfo statements are
+    * ordinary statements, under the `statements` map) → English caption
+    * enrichment as a pass-through column, in DDL order. ONE dump scan
+    * (round-17 verdict 4): one narrow codegen'd pipeline, no caption
+    * join. */
+  def loadFrame(s: SparkSession): DataFrame =
+    Etl.statementRows(Wd.mediainfoDump.readBz2(s), "statements", "en_caption")
 
   val queries: Map[String, Q] = Map(
     // The reference pipeline shape applied to the THIRD dump family:
@@ -123,24 +42,11 @@ object Mediainfo {
     // concurrent executor COPY streams.
     "etl_mediainfo_pg" -> ((s, _) => {
       val load = loadFrame(s)
-      if (PgServer.ensure()) {
-        val t = "graft_wd_mediainfo"
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$t"""")
-        PgServer.psql(PgDdl.createTable(t, miSchema))
+      val t = "graft_wd_mediainfo"
+      PgServer.roundTrip(s, t, Etl.statementsSchema("en_caption"),
+          Seq("id", "pid", "statement_id"), load) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
           perPartition = true).write(load)
-        val out = "/tmp/graft_wd_mediainfo_roundtrip.csv"
-        PgServer.psql(
-          s"""\\copy (SELECT * FROM "$t" ORDER BY id, pid, statement_id) TO '$out' WITH (FORMAT csv)""")
-        s.read.schema(miSchema)
-          .option("header", "false")
-          .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-          .csv(out)
-          .orderBy("id", "pid", "statement_id")
-      } else {
-        val out = Stage.p(s, "graft_wd_mediainfo_etl_twin")
-        ParquetSink(out).write(load)
-        s.read.parquet(out).orderBy("id", "pid", "statement_id")
       }
     }),
 
@@ -152,7 +58,7 @@ object Mediainfo {
     // a second scan of the same file, and its NULL-preserving
     // semantics are exactly explode_outer's).
     "wd_mediainfo_flatten" -> ((s, _) =>
-      mediainfo(s)
+      Wd.mediainfoDump.read(s)
         .select(col("id"),
           coalesce(size(col("statements")), lit(0)).as("n_statement_props"),
           col("lastrevid"),
@@ -165,7 +71,7 @@ object Mediainfo {
     // map — depicts (P180), copyright status, coordinates of the point
     // of view; what links media files into the item graph.
     "wd_mediainfo_statements" -> ((s, _) =>
-      mediainfo(s)
+      Wd.mediainfoDump.read(s)
         .select(col("id"), explode(col("statements")).as(Seq("pid", "stmts")))
         .select(col("id"), col("pid"), explode(col("stmts")).as("st"))
         .select(col("id"), col("pid"),

@@ -10,7 +10,7 @@ import graft.sources.{PgCopySink, PgDdl, PgServer}
   *
   * The probe drives EXACTLY the declared key's Spark side
   * (Etl.loadFrame — bz2 ingest → flatten → typed extraction → label
-  * join) into PgCopySink with shards = N, and times the complete load
+  * pass-through) into PgCopySink with shards = N, and times the complete load
   * (staging COPYs + the one cross-shard promote transaction). The
   * Spark-side work is identical at every N, so statements/s vs N
   * isolates the writer ceiling from the protocol. Same single box —
@@ -29,8 +29,9 @@ import graft.sources.{PgCopySink, PgDdl, PgServer}
   *   promote = rewrite (default) | attach — attach promotes staged
   *   tables as inheritance children (zero data rewrite), the measured
   *   answer to the rewrite promote being WAL/disk-bound.
-  * Env: SPARK_GRAFT_WD_BZ2 points at a GenWd dump (unset = KB fixture),
-  *   SPARK_GRAFT_CPUS, SPARK_GRAFT_KEEP_TABLES=1 to skip the drop.
+  * Conf: spark.graft.wd.bz2 points at a GenWd dump (unset = KB fixture;
+  *   under sbt pass it as SPARK_GRAFT_EXTRA_OPTS=-Dspark.graft.wd.bz2=…).
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_KEEP_TABLES=1 to skip the drop.
   * Emits one PGSHARD JSON line with per-shard row counts (the
   * determinism/preservation evidence PgSpec asserts at test scale).
   */
@@ -51,9 +52,9 @@ object PgShardProbe {
     // fresh slate: base + shard tables of any earlier probe run
     // (CASCADE reaps attach-mode segment children along with parents)
     (Seq(t) ++ (0 until 8).map(i => s"${t}_s$i")).foreach { x =>
-      PgServer.psql(s"""DROP TABLE IF EXISTS "$x" CASCADE""")
+      PgServer.exec(s"""DROP TABLE IF EXISTS "$x" CASCADE""")
     }
-    PgServer.psql(PgDdl.createTable(t, Etl.targetSchema))
+    PgServer.exec(PgDdl.createTable(t, Etl.targetSchema))
 
     val load = Etl.loadFrame(spark)
     val counted = spark.sparkContext.longAccumulator("probe_rows")
@@ -87,7 +88,7 @@ object PgShardProbe {
 
     if (!sys.env.get("SPARK_GRAFT_KEEP_TABLES").contains("1"))
       (Seq(t) ++ tables).distinct.foreach { x =>
-        PgServer.psql(s"""DROP TABLE IF EXISTS "$x" CASCADE""")
+        PgServer.exec(s"""DROP TABLE IF EXISTS "$x" CASCADE""")
       }
     spark.stop()
   }

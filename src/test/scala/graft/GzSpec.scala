@@ -39,11 +39,11 @@ class GzSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).toSet
 
   private lazy val plainRows = rowsOf(
-    spark.read.schema(EntitySchema.entity).json(Wd.ensureFixture(spark)))
+    spark.read.schema(EntitySchema.entity).json(Wd.entityDump.stage(spark)))
 
   test("gz NDJSON dump parses row-identical to the plain fixture") {
     val p = Stage.p(spark, "graft_gzspec_plain.ndjson.gz")
-    Stage.write(spark, p, gzBytes(fileBytes(Wd.ensureFixture(spark))))
+    Stage.write(spark, p, gzBytes(fileBytes(Wd.entityDump.stage(spark))))
     val df = Wd.readDump(spark, p, EntitySchema.entity)
     assert(rowsOf(df) === plainRows)
   }
@@ -57,7 +57,7 @@ class GzSpec extends AnyFunSuite {
 
   test("rechunk of a gz NDJSON dump is row-identical with exact fan-out") {
     val src = Stage.p(spark, "graft_gzspec_rc_src.ndjson.gz")
-    Stage.write(spark, src, gzBytes(fileBytes(Wd.ensureFixture(spark))))
+    Stage.write(spark, src, gzBytes(fileBytes(Wd.entityDump.stage(spark))))
     val out = Stage.p(spark, "graft_gzspec_rc_plain")
     val n = Wd.rechunk(spark, src, out, parts = 4)
     assert(n === 12) // 10 entities + 2 redirect stubs
@@ -78,7 +78,7 @@ class GzSpec extends AnyFunSuite {
 
   test("rechunk bz2 output round-trips (block-splittable scale form)") {
     val src = Stage.p(spark, "graft_gzspec_rcb_src.ndjson.gz")
-    Stage.write(spark, src, gzBytes(fileBytes(Wd.ensureFixture(spark))))
+    Stage.write(spark, src, gzBytes(fileBytes(Wd.entityDump.stage(spark))))
     val out = Stage.p(spark, "graft_gzspec_rc_bz2")
     Wd.rechunk(spark, src, out, parts = 2, codec = "bz2")
     val parts = new java.io.File(out).listFiles().map(_.getName).sorted
@@ -91,7 +91,7 @@ class GzSpec extends AnyFunSuite {
     // in one JVM must be re-detected, not served a stale cached format
     // (which would silently null every row).
     val p = Stage.p(spark, "graft_gzspec_rewrite.json")
-    Stage.write(spark, p, fileBytes(Wd.ensureFixture(spark)))
+    Stage.write(spark, p, fileBytes(Wd.entityDump.stage(spark)))
     assert(!Wd.isArrayDump(spark, p))
     // Rewrite with the wrapped twin; bump mtime explicitly — a
     // same-millisecond rewrite with identical length is otherwise

@@ -47,7 +47,9 @@ class HarnessSpec extends AnyFunSuite {
     assert(r.rows === q(spark, Spec.sf001).count())
   }
 
-  test("src/main builds a session in one place and reads SPARK_GRAFT_CPUS once") {
+  /** One entry per occurrence of `needle` in src/main: the file's path
+    * relative to src/main/scala. */
+  private def hits(needle: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root")
     val files: Seq[Path] = {
@@ -55,11 +57,26 @@ class HarnessSpec extends AnyFunSuite {
       try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally st.close()
     }
-    def hits(needle: String): Seq[String] = files.flatMap { f =>
+    files.sortBy(_.toString).flatMap { f =>
       val n = Pattern.quote(needle).r.findAllMatchIn(Files.readString(f)).size
       Seq.fill(n)(root.relativize(f).toString)
     }
+  }
+
+  test("src/main builds a session in one place and reads SPARK_GRAFT_CPUS once") {
     assert(hits("SparkSession.builder()") === Seq("graft/Harness.scala"))
     assert(hits("\"SPARK_GRAFT_CPUS\"") === Seq("graft/Harness.scala"))
+  }
+
+  test("src/main has one fixture reader, one bz2 writer and one Postgres export") {
+    // dump-family fixtures load through Wd.Family only
+    assert(hits("getResourceAsStream(") === Seq("graft/wikidata/Wd.scala"))
+    assert(hits("new org.apache.hadoop.io.compress.BZip2Codec()") ===
+      Seq("graft/Stage.scala"))
+    // dump overrides are confs only, and the format is always detected
+    assert(hits("\"SPARK_GRAFT_WD_") === Nil)
+    assert(hits("spark.graft.wd.format") === Nil)
+    // every load-and-read-back goes through PgServer.roundTrip
+    assert(hits("\\\\copy (") === Seq("graft/sources/PgCopy.scala"))
   }
 }

@@ -138,9 +138,7 @@ class PgSpec extends AnyFunSuite {
     // the dump override; rows must be identical to the plain-NDJSON run
     val src = graft.wikidata.Wd.ensureArrayFixture(spark)
     val wrapped = Stage.p(spark, "graft_wd_entities_array.json.bz2")
-    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
-    codec.setConf(spark.sparkContext.hadoopConfiguration)
-    val out = codec.createOutputStream(Stage.create(spark, wrapped))
+    val out = Stage.createBz2(spark, wrapped)
     try out.write(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(src)))
     finally out.close()
@@ -153,6 +151,38 @@ class PgSpec extends AnyFunSuite {
       assert(viaWrap === plain)
       assert(plain.size === 17)
     } finally spark.conf.unset("spark.graft.wd.bz2")
+  }
+
+  test("round trips are loud: a failed export or DDL throws, never a stale CSV") {
+    assume(PgServer.ensure(), "local Postgres unavailable")
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.types._
+    val t = "graft_pgspec_loud"
+    val schema = StructType(Seq(StructField("k", LongType)))
+    val frame = spark.range(3).toDF("k")
+    def load(): Unit =
+      PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(frame)
+    // a previous run's export sits at the scratch path
+    val scratch = Paths.get(PgServer.scratchCsv(spark, t))
+    Files.write(scratch, "41\n42\n".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](
+      PgServer.roundTrip(spark, t, schema, Seq("k"), frame,
+        from = """SELECT * FROM "graft_pgspec_no_such_table"""")(load()))
+    assert(e.getMessage.contains("psql failed"), e.getMessage)
+    // (psql may leave an empty file behind; the stale rows are gone)
+    assert(!Files.exists(scratch) || Files.readString(scratch).isEmpty,
+      "stale export survived a failed round trip")
+    // DDL failure: DROP TABLE on a view errors in Postgres
+    val v = "graft_pgspec_loud_view"
+    PgServer.exec(s"""CREATE OR REPLACE VIEW "$v" AS SELECT 1 AS one""")
+    try intercept[IllegalStateException](
+      PgServer.roundTrip(spark, t, schema, Seq("k"), frame, drop = Seq(v))(load()))
+    finally PgServer.exec(s"""DROP VIEW "$v"""")
+    // the same target round-trips exactly the written rows once it can
+    val back = PgServer.roundTrip(spark, t, schema, Seq("k"), frame)(load())
+      .collect().map(_.getLong(0)).toSeq
+    assert(back === Seq(0L, 1L, 2L))
+    PgServer.exec(s"""DROP TABLE "$t"""")
   }
 
   test("sink_pg_copy query round-trips through Postgres (or its twin)") {

@@ -59,6 +59,18 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), p.take(1500))
   }
 
+  test("dump→Postgres ETL frames scan the dump once: one json FileScan, no join") {
+    // the English label/caption rides the statements explode as a
+    // pass-through column; a second scan + id join is the regression
+    Seq("entity" -> graft.wikidata.Etl.loadFrame(spark),
+        "mediainfo" -> graft.wikidata.Mediainfo.loadFrame(spark)).foreach {
+      case (family, df) =>
+        val p = df.queryExecution.executedPlan.toString
+        assert("FileScan json".r.findAllIn(p).size === 1, s"$family plan:\n$p")
+        assert(!p.contains("Join"), s"$family plan:\n$p")
+    }
+  }
+
   test("agg_groupby_pricing has partial+final HashAggregate around one shuffle") {
     val p = plan("agg_groupby_pricing")
     assert("HashAggregate".r.findAllIn(p).length >= 2)

@@ -24,7 +24,7 @@ class WdArraySpec extends AnyFunSuite {
 
   test("array-wrapped twin parses row-identical to the NDJSON fixture") {
     val plain = spark.read.schema(EntitySchema.entity)
-      .json(Wd.ensureFixture(spark))
+      .json(Wd.entityDump.stage(spark))
     val wrapped = Wd.readDump(spark, Wd.ensureArrayFixture(spark),
       EntitySchema.entity)
     assert(rowsOf(wrapped) === rowsOf(plain))
@@ -76,7 +76,7 @@ class WdArraySpec extends AnyFunSuite {
 
   test("format auto-detection picks the array path only for wrapped files") {
     assert(Wd.isArrayDump(spark, Wd.ensureArrayFixture(spark)))
-    assert(!Wd.isArrayDump(spark, Wd.ensureFixture(spark)))
+    assert(!Wd.isArrayDump(spark, Wd.entityDump.stage(spark)))
   }
 
   test("GenWd arraywrap output is strict JSON and round-trips the reader") {
@@ -106,7 +106,7 @@ class WdArraySpec extends AnyFunSuite {
     val before = spark.conf.getOption(key)
     spark.conf.set("spark.graft.wd.autosplit", "true")
     try {
-      val df = Wd.readDump(spark, Wd.ensureFixture(spark), EntitySchema.entity)
+      val df = Wd.readDump(spark, Wd.entityDump.stage(spark), EntitySchema.entity)
       // autosplit NDJSON keeps the NATIVE json scan, planned in the
       // isolated child session (only array dumps take the text path)
       assert(df.count() === 12)

@@ -27,6 +27,42 @@ class WdTypedSpec extends AnyFunSuite {
     assert(rows(("Q5", "P1476")).getString(11) === "a title in english")
   }
 
+  test("Etl.loadFrame's single scan is row-identical to the two-scan label " +
+      "join (GenWd zipf dump, plain and array-wrapped bz2)") {
+    import org.apache.spark.sql.functions._
+    import graft.wikidata.{EntitySchema, Etl, GenWd, TypedValues, Wd}
+    val n = 300L
+    // The entity ETL before its label became a pass-through column: a
+    // second dump scan for the en labels, left-joined on id. Kept here
+    // only as the reference.
+    def twoScan(path: String) = {
+      val ents = Wd.readDump(spark, path, EntitySchema.entity)
+        .filter(col("redirect").isNull)
+      val en = ents.select(col("id"),
+        col("labels").getItem("en").getField("value").as("en_label"))
+      TypedValues.typed(Wd.claimsFlatten(ents)).join(en, Seq("id"), "left")
+    }
+    Seq("plain" -> false, "array" -> true).foreach { case (layout, wrap) =>
+      val path = Stage.p(spark, s"graft_wd_etl_equiv_$layout.json.bz2")
+      val out = Stage.createBz2(spark, path)
+      try (0L until n).foreach { i =>
+        val body = GenWd.entityJson(i, zipf = true)
+        val line = if (wrap) GenWd.wrapLine(body, i, n) else body
+        out.write((line + "\n").getBytes("UTF-8"))
+      } finally out.close()
+      spark.conf.set("spark.graft.wd.bz2", path)
+      try {
+        val single = Etl.loadFrame(spark)
+        val ref = twoScan(path).select(single.columns.map(col).toSeq: _*)
+        // not vacuous: statements of labelled and label-less entities
+        assert(single.filter(col("en_label").isNotNull).count() > n, layout)
+        assert(single.filter(col("en_label").isNull).count() > 0, layout)
+        assert(single.exceptAll(ref).count() === 0, layout)
+        assert(ref.exceptAll(single).count() === 0, layout)
+      } finally spark.conf.unset("spark.graft.wd.bz2")
+    }
+  }
+
   test("PgDdl maps Spark schemas to Postgres DDL") {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(

@@ -27,11 +27,15 @@ rm -rf "$BASE"; mkdir -p "$BASE/logs"
 sbt -batch package > "$BASE/package.log" 2>&1
 JAR=$(ls target/scala-2.13/*.jar | head -1)
 export SPARK_HOME=/opt/spark
-WDENV=()
+# the wd dump override confs: --conf on the spark-submit leg,
+# SPARK_GRAFT_EXTRA_OPTS (-D system properties) on the local sbt leg
+WDCONF=(); WDOPTS="${SPARK_GRAFT_EXTRA_OPTS:-}"
 if [ "$WDDIR" != "-" ]; then
   P="$WDDIR/plain"; [ -d "$P" ] || P="$WDDIR/bz2"
-  WDENV=(SPARK_GRAFT_WD_NDJSON="$(readlink -f "$P")"
-         SPARK_GRAFT_WD_BZ2="$(readlink -f "$WDDIR/bz2")")
+  for kv in "spark.graft.wd.path=$(readlink -f "$P")" \
+            "spark.graft.wd.bz2=$(readlink -f "$WDDIR/bz2")"; do
+    WDCONF+=(--conf "$kv"); WDOPTS="${WDOPTS:+$WDOPTS }-D$kv"
+  done
 fi
 
 SPARK_IDENT_STRING=gcm SPARK_LOG_DIR="$BASE/logs" \
@@ -64,10 +68,9 @@ fi
 # abort before the diagnostics print (and leave the killer un-reaped)
 rc=0
 env SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_MASTER=spark://127.0.0.1:7077 \
-  "${WDENV[@]}" \
   /opt/spark/bin/spark-submit --master spark://127.0.0.1:7077 \
   --class graft.Verify --driver-memory 8g \
-  --conf spark.executor.memory=10g \
+  --conf spark.executor.memory=10g "${WDCONF[@]}" \
   "$JAR" /root/testdata/sf0.01 "$BASE/out" > "$BASE/submit.log" 2>&1 || rc=$?
 echo "submit rc=$rc"
 grep "\[verify\]" "$BASE/submit.log" | tail -3 || true
@@ -80,7 +83,7 @@ fi
 stop_cluster
 trap - EXIT
 
-env SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_CPUS=32 "${WDENV[@]}" \
+env SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_EXTRA_OPTS="$WDOPTS" \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $BASE/out_local" \
   2>&1 | grep "\[verify\]" | tail -3
 python3 tools/parity.py "$BASE/out" "$BASE/out_local" ${KEYS//,/ }

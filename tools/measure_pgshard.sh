@@ -15,7 +15,8 @@ if [ -z "$BZ2" ]; then
   echo "usage: tools/measure_pgshard.sh <wdBz2Dir> [shardList] [numPartitions] [promote]"; exit 2
 fi
 for N in $SHARDS; do
-  SPARK_GRAFT_CPUS=32 SPARK_GRAFT_WD_BZ2="$(readlink -f "$BZ2")" \
+  SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_EXTRA_OPTS="${SPARK_GRAFT_EXTRA_OPTS:+$SPARK_GRAFT_EXTRA_OPTS }-Dspark.graft.wd.bz2=$(readlink -f "$BZ2")" \
     sbt -batch "runMain graft.wikidata.PgShardProbe $N $PARTS $PROMOTE" 2>&1 \
     | grep -E "PGSHARD|Exception"
 done

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Scoped wd-family bench at a GenWd fixture (the r12 scale-table
 # recipe): runs graft.Bench over the wd keys with the dump override
-# pointed at <wdDir>, writing the scoped detail to tmp/bd_<tag>.json
+# confs (spark.graft.wd.path / spark.graft.wd.bz2, passed through
+# SPARK_GRAFT_EXTRA_OPTS) pointed at <wdDir>, writing the scoped detail to tmp/bd_<tag>.json
 # and BENCHQ cold/warm lines to stdout.
 #
 # Usage: tools/measure_wd.sh <wdDir> <tag> [keys] [--bz2-as-plain]
@@ -23,7 +24,6 @@ fi
 PLAIN="$WDDIR/plain"
 if [ "$4" = "--bz2-as-plain" ] || [ ! -d "$PLAIN" ]; then PLAIN="$WDDIR/bz2"; fi
 SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE=32 \
-  SPARK_GRAFT_WD_NDJSON="$(readlink -f "$PLAIN")" \
-  SPARK_GRAFT_WD_BZ2="$(readlink -f "$WDDIR/bz2")" \
+  SPARK_GRAFT_EXTRA_OPTS="${SPARK_GRAFT_EXTRA_OPTS:+$SPARK_GRAFT_EXTRA_OPTS }-Dspark.graft.wd.path=$(readlink -f "$PLAIN") -Dspark.graft.wd.bz2=$(readlink -f "$WDDIR/bz2")" \
   SPARK_GRAFT_DETAIL_OUT="tmp/bd_${TAG}.json" \
   sbt -batch "runMain graft.Bench" 2>&1 | grep -E "BENCHQ|BENCHFAIL|\"metric\"" | sort -u
