@@ -12,6 +12,11 @@ import graft.functions._
   * native functions are registered; a query session built without it
   * cannot resolve them. Injection points for custom Rules/Strategies
   * live here too (the as-of join strategy).
+  *
+  * Native functions: the vector kernels `dot_f`, `dotfx` and `l2fx`;
+  * the aggregates `heavy_hitters`, `topk_by`, `kmv_bottomk`,
+  * `bottomk_distinct_by` and `simhash64` (the 64-bit SimHash signature
+  * the near-dup keys group documents by).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -25,6 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     fn("heavy_hitters", classOf[HeavyHittersAgg], HeavyHittersAgg.build)
     fn("topk_by", classOf[TopKByAgg], TopKByAgg.build)
     fn("kmv_bottomk", classOf[KmvBottomKAgg], KmvBottomKAgg.build)
+    fn("simhash64", classOf[SimHash64Agg], SimHash64Agg.build)
     fn("bottomk_distinct_by", classOf[BottomKDistinctByAgg],
       BottomKDistinctByAgg.build)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -87,6 +87,34 @@ object Stage {
   def exists(s: SparkSession, path: String): Boolean =
     fs(s, path).exists(new org.apache.hadoop.fs.Path(path))
 
+  /** (length, mtime) of the file each [[writeOnce]] call last wrote. */
+  private val written =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]
+
+  /** Run `write` (which writes `path`) unless the file at `path` is
+    * still the one this JVM last wrote there: same length, same mtime.
+    * A file that is missing, or was changed or replaced since, is
+    * written again — the DuckDB oracle reads fixture paths directly,
+    * so they must hold the fixture's bytes — while repeated stagings of
+    * an unchanged fixture cost one metadata call instead of a rewrite
+    * (and, for a bz2 twin, a re-compression). Returns `path`. */
+  def writeOnce(s: SparkSession, path: String)(write: => Unit): String =
+    synchronized {
+      val f = fs(s, path)
+      val hp = new org.apache.hadoop.fs.Path(path)
+      def stamp: Option[(Long, Long)] =
+        if (!f.exists(hp)) None
+        else {
+          val st = f.getFileStatus(hp)
+          Some((st.getLen, st.getModificationTime))
+        }
+      if (stamp.isEmpty || stamp != Option(written.get(path))) {
+        write
+        written.put(path, stamp.get)
+      }
+      path
+    }
+
   /** Check-then-write under the staging lock: run `write` only if
     * `path/_SUCCESS` is absent, then return `path`. The lock closes the
     * race where two concurrently-invoked queries both see no marker and

@@ -23,14 +23,46 @@ object DedupOps {
 
   private def toks: Column = filter(split(col("text"), " "), t => t =!= lit(""))
 
-  /** 64-bit SimHash near-dup pairs over `docs` (doc_id, text); near-dups
-    * = hamming ≤ 1, candidates via 16-bit chunk pigeonhole (dist ≤ 1 < 4
-    * chunks ⇒ ≥1 equal chunk) so the join is equi on (chunk_idx,
-    * chunk_val) — never a cross product. 64 bits because a tiny
+  /** (doc_id, simhash): each document's 64-bit SimHash over its
+    * distinct tokens, as ONE native aggregate (functions/SimHash64: a
+    * 64-slot vote array per group) rather than 64 sum(CASE WHEN …)
+    * buffers plus a 64-term add — the same bits (a tie votes 0, as in
+    * the oracle's SQL form) from one buffer per group instead of 64.
+    * Distinct tokens via explode+distinct (codegen + one shuffle), not
+    * explode(array_distinct(hof)) — the HOF inlining trap. */
+  private[graft] def simhashSigs(docs: DataFrame): DataFrame =
+    // 60-bit token hash from md5's first 15 hex chars — md5 produces
+    // identical hex on every engine, so the DuckDB oracle can replay
+    // the whole pipeline (xxhash64 cannot be mirrored; the md5+conv
+    // path benches ~1.1 s over xxhash64 at sf0.1, the price of the
+    // hash gate). Bits 60-63 of the simhash are then constant 0:
+    // hamming and the chunk pigeonhole are unaffected, chunk 3 just
+    // carries 12 live bits. Production can swap any faster uniform
+    // 64-bit hash here without touching the shape.
+    docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+      .filter(col("t") =!= "")
+      .distinct()
+      .withColumn("h", expr(
+        "CAST(conv(substring(md5(concat('simhash:', t)), 1, 15), 16, 10) AS BIGINT)"))
+      .groupBy("doc_id")
+      .agg(expr("simhash64(h)").as("simhash"))
+
+  /** 64-bit SimHash near-dup pairs over `docs` (doc_id, text), ordered
+    * by (a, b): [[simhashEdges]] plus the sort the `dedup_simhash`
+    * output needs. Readers that only need the edge set (the components
+    * fixpoint) read [[simhashEdges]] and skip the range shuffle. */
+  def simhashPairs(docs: DataFrame, bucketCap: Int = 1000): DataFrame =
+    simhashEdges(docs, bucketCap).orderBy("a", "b")
+
+  /** 64-bit SimHash near-dup edges (a, b, hamming) over `docs` (doc_id,
+    * text), a < b, in no order; near-dups = hamming ≤ 1, candidates via
+    * 16-bit chunk pigeonhole (dist ≤ 1 < 4 chunks ⇒ ≥1 equal chunk) so
+    * the join is equi on (chunk_idx, chunk_val) — never a cross
+    * product. 64 bits because a tiny
     * vocabulary makes token sets overlap heavily: a 32-bit/dist-2 bar
     * reports >1M "near-dup" pairs at sf0.1 (true but useless).
-    * distinct tokens via explode+distinct (codegen + one shuffle), not
-    * explode(array_distinct(hof)) — the HOF inlining trap.
+    * Signatures come from [[simhashSigs]].
     *
     * `bucketCap` bounds hot buckets: a popular chunk value (e.g. 0x0000
     * from a sparse vocab) makes its (chunk, cv) bucket go quadratic in
@@ -50,38 +82,18 @@ object DedupOps {
     * with different simhashes — a star can't see it; the other 3
     * chunks still catch it unless they are hot too. The bucket stats
     * run in the same (chunk, cv) shuffle the self-join needs anyway. */
-  def simhashPairs(docs: DataFrame, bucketCap: Int = 1000): DataFrame = {
-    // 60-bit token hash from md5's first 15 hex chars — md5 produces
-    // identical hex on every engine, so the DuckDB oracle can replay
-    // the whole pipeline (xxhash64 cannot be mirrored; the md5+conv
-    // path benches ~1.1 s over xxhash64 at sf0.1, the price of the
-    // hash gate). Bits 60-63 of the simhash are then constant 0:
-    // hamming and the chunk pigeonhole are unaffected, chunk 3 just
-    // carries 12 live bits. Production can swap any faster uniform
-    // 64-bit hash here without touching the shape.
-    val th = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-      .filter(col("t") =!= "")
-      .distinct()
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat('simhash:', t)), 1, 15), 16, 10) AS BIGINT)"))
-    val bitSums = (0 until 64).map(bit =>
-      sum(when(col("h").bitwiseAND(lit(1L << bit)) =!= 0L, 1).otherwise(-1)).as(s"b$bit"))
+  def simhashEdges(docs: DataFrame, bucketCap: Int = 1000): DataFrame = {
     // Round-17 (opt): the signature table is materialized ONCE
     // (localCheckpoint; durable under spark.graft.checkpointDir). The
     // self-join's two arms plus the hot arm are THREE consumers of this
     // subtree, and the planner does not reuse the exchanges across them
     // (AQE replans each side), so the corpus-scale tokenize → distinct
-    // → 64-bit-sum pipeline executed 3x per run — measured in the r17
+    // → signature pipeline executed 3x per run — measured in the r17
     // before-plan (plans/r17/dedup_simhash_before.txt: the full
     // aggregate chain appears three times). Checkpointing 1 row/doc of
     // (doc_id, simhash) makes it once; everything downstream is
     // band-bucket-sized. Results identical (same rows, same hash).
-    val sim = Ckpt.df(th.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until 64).map(bit =>
-          when(col(s"b$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash")))
+    val sim = Ckpt.df(simhashSigs(docs))
     val chunked = sim.select(col("doc_id"), col("simhash"),
       posexplode(expr(
         "transform(sequence(0, 3), c -> (simhash >> (c * 16)) & 65535)"))
@@ -123,7 +135,6 @@ object DedupOps {
       .withColumn("hamming", bit_count(col("sha").bitwiseXOR(col("shb"))))
       .filter(col("hamming") <= 1)
       .select(col("a"), col("b"), col("hamming"))
-      .orderBy("a", "b")
   }
 
   private val MinhashSigs = 16
@@ -394,7 +405,8 @@ object DedupOps {
       // Connected components over the near-dup pair graph — the step a
       // real pipeline runs AFTER candidate generation, so each
       // duplicate cluster collapses to one representative (the min
-      // doc_id label). Pair generation stays declarative and is
+      // doc_id label). Pair generation (simhashEdges: one native
+      // simhash64 aggregate, no sort) stays declarative and is
       // localCheckpointed once; the fixpoint loop then runs on
       // partitioner-aware RDDs — the documented exception to
       // DataFrame-first (SURVEY §7.3): each loop round builds a FRESH
@@ -412,14 +424,16 @@ object DedupOps {
       // last-round decrease once totals pass 2^53 (~1e8 docs), exiting
       // before the fixpoint.
       val loop = Ckpt.loop(s)
-      val edges = simhashPairs(Tables.documents(s, d)).select(col("a"), col("b"))
+      // The edge SET is all the fixpoint reads (labels are min doc_ids
+      // whatever the edge order), so no range shuffle sorts it first.
+      val edges = simhashEdges(Tables.documents(s, d)).select(col("a"), col("b"))
       // Durable runs reliably checkpoint the edge list too: a
       // localCheckpoint's blocks live only on executors, so losing an
       // executor BEFORE byY materializes would kill exactly the job
       // the durable conf is meant to keep alive (proven by the round-9
       // worker-kill probe). Ckpt.df persists before the reliable
       // checkpoint so the checkpoint job reads the just-computed
-      // blocks instead of recomputing the full simhashPairs lineage a
+      // blocks instead of recomputing the full simhashEdges lineage a
       // second time (the same discipline as the fixpoint rounds below).
       val und = Ckpt.df(
         edges.union(edges.select(col("b").as("a"), col("a").as("b"))))

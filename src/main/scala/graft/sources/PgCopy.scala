@@ -182,6 +182,8 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
 }
 
 object PgCopySink {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** CSV cell under COPY's (FORMAT csv, NULL ''): unquoted empty = NULL,
     * quoted empty = empty string, quotes doubled. A cell of exactly
     * `\.` is quoted too — unquoted on its own line it would read as
@@ -451,9 +453,11 @@ object PgCopySink {
       * a long-lived executor. Never throws: it runs while the original
       * exception is in flight and must not mask it. */
     def abort(): Unit = {
-      try out.close() catch { case _: Throwable => () }
+      def warn(step: String)(e: Throwable): Unit = log.warn(
+        s"psql staged COPY (partition $partitionId, table $table): $step failed", e)
+      try out.close() catch { case e: Throwable => warn("closing stdin")(e) }
       try { proc.destroyForcibly(); proc.waitFor(); () }
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => warn("reaping psql")(e) }
     }
   }
 

@@ -45,7 +45,10 @@ private[graft] final class PgWire(host: String, port: Int, db: String,
       // which closes itself on failure): close the channel if the
       // socket file is absent/refusing, or it leaks per failed task
       try c.connect(UnixDomainSocketAddress.of(s"$host/.s.PGSQL.$port"))
-      catch { case e: Throwable => try c.close() catch { case _: Throwable => () }; throw e }
+      catch { case e: Throwable =>
+        try c.close() catch { case ce: Throwable => e.addSuppressed(ce) }
+        throw e
+      }
       c
     } else SocketChannel.open(new InetSocketAddress(host, port))
   private val out = new DataOutputStream(
@@ -252,13 +255,29 @@ private[graft] final class PgWire(host: String, port: Int, db: String,
     waitReady()
   }
 
+  /** The server socket, as the cleanup warnings name it. */
+  private def where: String =
+    if (host.startsWith("/")) s"$host/.s.PGSQL.$port" else s"$host:$port"
+
+  /** Say Terminate, then drop the socket. Neither step throws: the
+    * session's work is done, so a failure only leaves a WARN. */
   def close(): Unit = {
     try { send('X', Array.emptyByteArray); out.flush() }
-    catch { case _: Throwable => () }
-    try chan.close() catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      PgWire.log.warn(s"PgWire: Terminate to $where failed", e) }
+    closeAbort()
   }
 
   /** Failure-path close: just drop the socket — the server aborts any
-    * open transaction/copy, nothing commits. */
-  def closeAbort(): Unit = { try chan.close() catch { case _: Throwable => () } }
+    * open transaction/copy, nothing commits. Never throws (it runs
+    * while the caller's own exception is in flight); a failed close
+    * leaves a WARN. */
+  def closeAbort(): Unit =
+    try chan.close()
+    catch { case e: Throwable =>
+      PgWire.log.warn(s"PgWire: closing the socket to $where failed", e) }
+}
+
+private[graft] object PgWire {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[PgWire])
 }

@@ -40,20 +40,24 @@ object Wd {
       new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
         .split("\n").filter(_.trim.nonEmpty).toSeq
 
-    /** Stage the plain fixture at [[fixturePath]]. */
-    def stage(s: SparkSession): String = synchronized {
-      graft.Stage.write(s, fixturePath, bytes)
-    }
+    /** Stage the plain fixture at [[fixturePath]], once per JVM while
+      * the staged file is unchanged ([[graft.Stage.writeOnce]]). */
+    def stage(s: SparkSession): String =
+      graft.Stage.writeOnce(s, fixturePath)(
+        graft.Stage.write(s, fixturePath, bytes))
 
     /** Stage the fixture twice: the bz2 twin the composed ETL ingests,
       * and the plain copy the oracle reads — byte-identical content, so
-      * the oracle checks the decompress-and-parse path too. */
-    def stageBz2(s: SparkSession): String = synchronized {
+      * the oracle checks the decompress-and-parse path too. Each is
+      * written once while unchanged, so a key that reads the twin twice
+      * compresses it once. */
+    def stageBz2(s: SparkSession): String = {
       stage(s)
       val bz2 = graft.Stage.p(s, new java.io.File(fixturePath).getName + ".bz2")
-      val out = graft.Stage.createBz2(s, bz2)
-      try out.write(bytes) finally out.close()
-      bz2
+      graft.Stage.writeOnce(s, bz2) {
+        val out = graft.Stage.createBz2(s, bz2)
+        try out.write(bytes) finally out.close()
+      }
     }
 
     /** The family's dump: the `pathConf` override, else the fixture. */
@@ -97,21 +101,23 @@ object Wd {
     * download or a mid-line split corruption looks like. */
   val dirtyArrayFixturePath = "/tmp/graft_wd_entities_array_dirty.json"
 
-  def ensureArrayFixture(s: SparkSession): String = synchronized {
-    val body = "[\n" + entityDump.lines.mkString(",\n") + "\n]\n"
-    graft.Stage.write(s, arrayFixturePath,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  def ensureArrayFixture(s: SparkSession): String =
+    graft.Stage.writeOnce(s, arrayFixturePath) {
+      val body = "[\n" + entityDump.lines.mkString(",\n") + "\n]\n"
+      graft.Stage.write(s, arrayFixturePath,
+        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
 
-  def ensureDirtyArrayFixture(s: SparkSession): String = synchronized {
-    val ls = entityDump.lines.toBuffer
-    // two malformed shapes: a mid-object truncation and plain garbage
-    ls.insert(3, """{"type":"item","id":"Q9001","labels":{"en":{"langu""")
-    ls.insert(7, """!!! not json at all""")
-    val body = "[\n" + ls.mkString(",\n") + "\n]\n"
-    graft.Stage.write(s, dirtyArrayFixturePath,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  def ensureDirtyArrayFixture(s: SparkSession): String =
+    graft.Stage.writeOnce(s, dirtyArrayFixturePath) {
+      val ls = entityDump.lines.toBuffer
+      // two malformed shapes: a mid-object truncation and plain garbage
+      ls.insert(3, """{"type":"item","id":"Q9001","labels":{"en":{"langu""")
+      ls.insert(7, """!!! not json at all""")
+      val body = "[\n" + ls.mkString(",\n") + "\n]\n"
+      graft.Stage.write(s, dirtyArrayFixturePath,
+        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
 
   /** Conf-gated split-size autoscaling (round-15 verdict 6; OFF by
     * default so the driver gate's plans are untouched). The zipf probe

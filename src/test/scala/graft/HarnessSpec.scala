@@ -79,4 +79,10 @@ class HarnessSpec extends AnyFunSuite {
     // every load-and-read-back goes through PgServer.roundTrip
     assert(hits("\\\\copy (") === Seq("graft/sources/PgCopy.scala"))
   }
+
+  test("src/main swallows no cleanup failure silently") {
+    // a cleanup that fails leaves a WARN naming its table, partition or
+    // socket, or rides the in-flight exception as a suppressed one
+    assert(hits("case _: Throwable => ()") === Nil)
+  }
 }

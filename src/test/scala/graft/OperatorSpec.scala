@@ -63,6 +63,64 @@ class OperatorSpec extends AnyFunSuite {
     assert(rows.forall(r => r.getInt(2) <= 1))
   }
 
+  test("simhash64 equals the 64-vote SQL form, hash and sort-based aggregation") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    // 1,500 docs of 1-20 random BIGINT tokens (nextLong: about half have
+    // bit 63 set), 200 single-token docs, and 200 docs of a token and
+    // its complement, whose every bit votes a 0 tie
+    val many = (0L until 1500L).flatMap(d =>
+      Seq.fill(1 + rnd.nextInt(20))((d, rnd.nextLong())))
+    val single = (1500L until 1700L).map(d => (d, rnd.nextLong()))
+    val tied = (1700L until 1900L).flatMap { d =>
+      val h = rnd.nextLong(); Seq((d, h), (d, ~h))
+    }
+    val rows = many ++ single ++ tied
+    assert(rows.size >= 10000, rows.size)
+    val toks = rows.toDF("doc_id", "h").repartition(8)
+    // the 64-vote SQL form, the one the DuckDB oracle replays
+    val votes = (0 until 64).map(bit =>
+      sum(when(col("h").bitwiseAND(lit(1L << bit)) =!= 0L, 1).otherwise(-1))
+        .as(s"b$bit"))
+    val sql = toks.groupBy("doc_id").agg(votes.head, votes.tail: _*)
+      .select(col("doc_id"), (0 until 64).map(bit =>
+        when(col(s"b$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
+        .reduce(_ + _).as("simhash"))
+    def check(): org.apache.spark.sql.DataFrame = {
+      val nat = toks.groupBy("doc_id").agg(expr("simhash64(h)").as("simhash"))
+      assert(nat.exceptAll(sql).count() === 0)
+      assert(sql.exceptAll(nat).count() === 0)
+      val sig = nat.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(sig.size === 1900)
+      // not vacuous: bit 63 survives, complements cancel to 0, a single
+      // token is its own signature
+      assert(sig.values.exists(_ < 0))
+      assert((1700L until 1900L).forall(sig(_) == 0L))
+      assert(single.forall { case (d, h) => sig(d) == h })
+      nat
+    }
+    check()
+    // threshold 1 forces ObjectHashAggregate's sort-based fallback in
+    // every task with more than one group: buffers are serialized into
+    // the sorter, then deserialized and merged
+    val fallback = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    spark.conf.set(fallback, "1")
+    try {
+      val nat = check()
+      object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      val fellBack = Aqe.collect(nat.queryExecution.executedPlan) {
+        case o: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec =>
+          o.metrics("numTasksFallBacked").value
+      }
+      assert(fellBack.sum > 0, s"no task fell back to sort-based: $fellBack")
+    } finally spark.conf.unset(fallback)
+
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      toks.select(col("doc_id"), col("h").cast("int").as("h"))
+        .groupBy("doc_id").agg(expr("simhash64(h)")).collect())
+    assert(e.getMessage.contains("BIGINT"), e.getMessage)
+  }
+
   test("simhash hot-bucket cap: clique degrades to star, coverage survives") {
     import spark.implicits._
     // 6 identical docs: every (chunk, cv) bucket holds all 6 of them —

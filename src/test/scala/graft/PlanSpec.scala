@@ -299,7 +299,8 @@ class PlanSpec extends AnyFunSuite {
       .selectExpr("dot_f(a, b) AS d").head().getDouble(0)
     assert(r === 11.0)
     val missing = Seq("dot_f", "dotfx", "l2fx", "heavy_hitters", "topk_by",
-      "kmv_bottomk", "bottomk_distinct_by").filterNot(ns.catalog.functionExists)
+      "kmv_bottomk", "bottomk_distinct_by", "simhash64")
+      .filterNot(ns.catalog.functionExists)
     assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
   }
 
@@ -474,6 +475,42 @@ class PlanSpec extends AnyFunSuite {
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2, p.take(2000))
     assert(p.contains("partial_kmv_bottomk"), p.take(2000))
     assert(p.contains("Exchange"))
+  }
+
+  test("simhashEdges: no global sort or range shuffle, one native signature aggregate") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    val docs = Tables.documents(spark, Spec.sf001)
+    // the components loop's edge feed: partition-local sorts (the group
+    // window, sort-merge joins) only, nothing orders the edge list
+    val edges = operators.DedupOps.simhashEdges(docs).queryExecution.executedPlan
+    assert(Aqe.collect(edges) { case x: SortExec if x.global => x }.isEmpty,
+      edges.toString.take(3000))
+    assert(Aqe.collect(edges) {
+      case x: ShuffleExchangeExec
+          if x.outputPartitioning.isInstanceOf[RangePartitioning] => x
+    }.isEmpty, edges.toString.take(3000))
+    // the signature is one simhash64 per aggregate node (partial and
+    // final), not 64 sum(CASE WHEN …) buffers
+    val sigs = operators.DedupOps.simhashSigs(docs).queryExecution.executedPlan
+    val fns = Aqe.collect(sigs) {
+      case a: BaseAggregateExec if a.aggregateExpressions.nonEmpty =>
+        a.aggregateExpressions.map(_.aggregateFunction.prettyName)
+    }
+    assert(fns.nonEmpty && fns.forall(_ == Seq("simhash64")), fns)
+    // dedup_simhash's ordered output still ends in the global sort
+    val pairs = SparkEntry.queries("dedup_simhash")(spark, Spec.sf001)
+      .queryExecution.executedPlan
+    val root = pairs match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(root match { case x: SortExec => x.global; case _ => false },
+      root.toString.take(2000))
   }
 
   test("dedup_semantic joins pairs on the cluster key — no cartesian, compact arrays") {

@@ -168,4 +168,35 @@ class WdTypedSpec extends AnyFunSuite {
     // the tail is still long — hundreds of distinct pids at 2k entities
     assert(freq.size > 200, s"only ${freq.size} distinct pids")
   }
+
+  test("dump-family fixtures stage once per unchanged file, and restage " +
+      "when the file changes") {
+    import graft.wikidata.{Etl, Wd}
+    val fam = Wd.entityDump
+    val fs = Stage.fs(spark, fam.fixturePath)
+    def mtime(path: String): Long =
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(path)).getModificationTime
+    // a rewrite would move the mtime: every wait below is longer than
+    // the local FS's millisecond mtime resolution
+    fam.read(spark)
+    val plain0 = mtime(fam.fixturePath)
+    Thread.sleep(50)
+    fam.read(spark)
+    assert(mtime(fam.fixturePath) === plain0, "second read rewrote the fixture")
+
+    Etl.loadFrame(spark)
+    val bz2 = fam.stageBz2(spark)
+    val bz20 = mtime(bz2)
+    Thread.sleep(50)
+    Etl.redirectFrame(spark)
+    assert(mtime(bz2) === bz20, "redirectFrame re-compressed the bz2 twin")
+    assert(mtime(fam.fixturePath) === plain0)
+
+    // someone else's bytes at the oracle's path: the next read restages
+    Stage.write(spark, fam.fixturePath, "{}\n".getBytes("UTF-8"))
+    fam.read(spark)
+    val in = fs.open(new org.apache.hadoop.fs.Path(fam.fixturePath))
+    val staged = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(staged.split("\n").filter(_.trim.nonEmpty).toSeq === fam.lines)
+  }
 }
