@@ -27,14 +27,17 @@ import scala.util.Try
   * transaction that first replaces the staging table — so a retried or
   * speculated partition overwrites its own staging output (the second
   * attempt blocks on the DROP lock, then replaces), never appends
-  * twice. After the Spark job completes, the driver promotes every
-  * staging table into the target and drops them in a single atomic
-  * transaction. Staging names embed a per-run epoch, and promote only
-  * promotes THIS run's epoch — so a zombie task surviving from an
-  * ABORTED earlier run of the same target can at worst re-create its
-  * old-epoch staging table (dropped, never promoted, on the next run),
-  * and a zombie of this run committing after promote leaves only an
-  * orphan staging table. Never duplicate or stale target rows.
+  * twice. After the Spark job completes, ONE driver round trip runs the
+  * promote server-side ([[PgCopySink.promoteStaged]]): in a single atomic
+  * transaction it promotes every staging table of this run into the
+  * target, drops them, and reaps the leftover staging tables of every
+  * other epoch of the target. Staging names embed a per-run epoch, and
+  * promote only promotes THIS run's epoch — so a zombie task surviving
+  * from an ABORTED earlier run of the same target can at worst
+  * re-create its old-epoch staging table (reaped, never promoted, by
+  * the next promote), and a zombie of this run committing after
+  * promote leaves only an orphan staging table, reaped the same way.
+  * Never duplicate or stale target rows.
   */
 final case class PgCopySink(sockDir: String, port: Int, db: String,
     table: String, perPartition: Boolean = false,
@@ -111,13 +114,11 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
       val (sock, p, database, t) = (sockDir, port, db, table)
       val (br, usr, pw, nSh, wr) = (batchRows, user, password, shards, wire)
       val runId = java.util.UUID.randomUUID().toString.take(8)
-      (0 until nSh).foreach { i =>
-        val st = PgCopySink.shardName(t, i)
-        PgCopySink.psqlValue(sock, p, database,
-          s"""CREATE TABLE IF NOT EXISTS "$st" (LIKE "$t" INCLUDING ALL)""",
-          usr, pw)
-        PgCopySink.dropStaging(sock, p, database, st, usr, pw)
-      }
+      // every shard table in one round trip; each shard's promote reaps
+      // its own leftover staging
+      PgCopySink.psqlValue(sock, p, database, (0 until nSh).map { i =>
+        s"""CREATE TABLE IF NOT EXISTS "${PgCopySink.shardName(t, i)}" (LIKE "$t" INCLUDING ALL)"""
+      }.mkString("; "), usr, pw)
       import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
       // withColumn would silently REPLACE a pre-existing column of this
       // name and the writer drops the last column as the shard id — an
@@ -143,12 +144,9 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
       // close over plain fields, not `this`-heavy structures
       val (sock, p, database, t) = (sockDir, port, db, table)
       val (br, usr, pw, wr) = (batchRows, user, password, wire)
-      // per-run epoch: promote only ever touches THIS run's staging
-      // tables, so an old-epoch zombie committing between dropStaging
-      // and promote can never be promoted
+      // per-run epoch: promote only ever promotes THIS run's staging
+      // tables; other epochs' leftovers (a zombie's included) are reaped
       val runId = java.util.UUID.randomUUID().toString.take(8)
-      // clear staging leftovers (any epoch) of previous runs of this target
-      PgCopySink.dropStaging(sock, p, database, t, usr, pw)
       val t0 = System.nanoTime()
       d.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         if (rows.hasNext)
@@ -245,80 +243,68 @@ object PgCopySink {
       psqlBase(sock, port, db, user) ++ Seq("-Atc", sql),
       None, pwEnv(password): _*).!!.trim
 
-  /** Staging tables of `table` present in the database, sorted;
-    * `epoch` narrows to one run's tables (None = every epoch).
-    * `\_` escapes LIKE's wildcard meaning of the underscores. */
-  private def listStaging(sock: String, port: Int, db: String,
-      table: String, epoch: Option[String] = None,
-      user: String = "", password: String = ""): Seq[String] = {
-    val pat = epoch match {
-      case Some(r) => s"$table\\_\\_stg\\_$r\\_p%"
-      case None => s"$table\\_\\_stg\\_%"
-    }
-    psqlValue(sock, port, db,
-      s"""SELECT tablename FROM pg_tables
-          WHERE tablename LIKE '$pat'""", user, password)
-      .split("\n").toSeq.filter(_.nonEmpty).sorted
-  }
+  /** A SQL string literal of the LIKE pattern matching `prefix` and
+    * anything after it: `\`, `_` and `%` in the prefix match only
+    * themselves, so a write to `a_b` never matches the staging of a
+    * look-alike target `aXb`. Every staging-table lookup goes through
+    * here. */
+  private def stagingLike(prefix: String): String =
+    "'" + prefix.replace("\\", "\\\\").replace("_", "\\_").replace("%", "\\%")
+      .replace("'", "''") + "%'"
 
-  private[sources] def dropStaging(sock: String, port: Int, db: String,
-      table: String, user: String = "", password: String = ""): Unit = {
-    val stg = listStaging(sock, port, db, table, None, user, password)
-    if (stg.nonEmpty)
-      psqlValue(sock, port, db,
-        stg.map(x => s"""DROP TABLE IF EXISTS "$x"""").mkString("; "),
-        user, password)
-  }
-
-  /** Atomically move every staged partition of THIS run's epoch into
-    * the target: all the INSERT ... SELECTs plus the staging DROPs run
-    * as one multi-statement simple query = one implicit transaction.
-    * Readers see the whole load or none of it, re-running promote is a
-    * no-op (the staging tables are gone), and old-epoch staging tables
-    * — e.g. committed by a zombie task of an aborted earlier run after
-    * this run's dropStaging — are never promoted. */
+  /** Promote this run's staged partitions of `table` in ONE driver
+    * round trip, as one server-side statement: a DO block that, in one
+    * transaction, TRUNCATEs the target when `truncate` (also when
+    * nothing was staged: JDBC truncate=true under SaveMode.Overwrite
+    * clears the table even for an empty frame), then walks the target's
+    * staging tables. THIS run's epoch is promoted —
+    * rewritten into the target and dropped, or with `attach` made an
+    * inheritance child of the target (O(1) metadata, the COPY'd pages
+    * ARE the segment) and renamed out of the `__stg_` namespace so no
+    * later reap takes it — and every other epoch's leftover (a zombie
+    * task's of an aborted earlier run included) is dropped, never
+    * promoted. Readers see the old table until commit, then the whole
+    * load; re-running the promote is a no-op (the staging tables are
+    * gone). Returns the promoted count, which comes back as the last
+    * line of output; an explicit BEGIN carries a requested isolation
+    * level, else the multi-statement query is one implicit transaction
+    * at the server default. */
   private[sources] def promoteStaged(sock: String, port: Int, db: String,
       table: String, runId: String, truncate: Boolean = false,
       isolation: String = "", user: String = "",
       password: String = "", attach: Boolean = false): Int = {
-    val stg = listStaging(sock, port, db, table, Some(runId), user, password)
-    if (stg.isEmpty && truncate) {
-      // empty input still clears the target: JDBC truncate=true under
-      // SaveMode.Overwrite truncates even when the frame has no rows,
-      // and the staged path must not silently diverge on that edge
-      psqlValue(sock, port, db, s"""TRUNCATE "$table"""", user, password)
-    }
-    if (stg.nonEmpty) {
-      // truncate participates in the SAME transaction as the promote:
-      // readers see the old table until commit, then only the new load
-      // — the atomic-overwrite form of JDBC truncate=true. (On the
-      // attach path TRUNCATE cascades to existing inheritance children,
-      // clearing prior segment loads too.)
-      val trunc = if (truncate) Seq(s"""TRUNCATE "$table"""") else Nil
-      val body = if (attach) {
-        // zero-rewrite promote: each staged table becomes an
-        // inheritance child of the target (O(1) metadata — the COPY'd
-        // pages ARE the segment) and leaves the __stg_ namespace so the
-        // next run's dropStaging cannot reap it. Same one-transaction
-        // atomicity as the rewrite promote.
-        val attaches = stg.map { x =>
-          val seg = x.replace("__stg_", "__seg_")
-          s"""ALTER TABLE "$x" INHERIT "$table"; ALTER TABLE "$x" RENAME TO "$seg""""
-        }
-        (trunc ++ attaches).mkString("; ")
-      } else {
-        val inserts = stg.map(x => s"""INSERT INTO "$table" SELECT * FROM "$x"""")
-        val drop = s"DROP TABLE ${stg.map(x => s""""$x"""").mkString(", ")}"
-        (trunc ++ inserts :+ drop).mkString("; ")
-      }
-      // explicit BEGIN only when an isolation level is requested; the
-      // multi-statement simple query is already one implicit
-      // transaction at the server default otherwise
-      val sql = if (isolation.nonEmpty)
-        s"BEGIN ISOLATION LEVEL $isolation; $body; COMMIT" else body
-      psqlValue(sock, port, db, sql, user, password)
-    }
-    stg.size
+    val t = "'" + table.replace("'", "''") + "'"
+    val promote = s"""DO $$graft$$
+      |DECLARE
+      |  target text := $t;
+      |  n int := 0;
+      |  stg text;
+      |BEGIN
+      |  IF $truncate THEN EXECUTE format('TRUNCATE %I', target); END IF;
+      |  FOR stg IN SELECT tablename FROM pg_tables
+      |      WHERE schemaname = current_schema()
+      |        AND tablename LIKE ${stagingLike(s"${table}__stg_")}
+      |      ORDER BY tablename LOOP
+      |    IF stg NOT LIKE ${stagingLike(s"${table}__stg_${runId}_p")} THEN
+      |      EXECUTE format('DROP TABLE IF EXISTS %I', stg);
+      |    ELSIF $attach THEN
+      |      EXECUTE format('ALTER TABLE %I INHERIT %I', stg, target);
+      |      EXECUTE format('ALTER TABLE %I RENAME TO %I', stg,
+      |        target || '__seg_' || substr(stg, length(target || '__stg_') + 1));
+      |      n := n + 1;
+      |    ELSE
+      |      EXECUTE format('INSERT INTO %I SELECT * FROM %I', target, stg);
+      |      EXECUTE format('DROP TABLE %I', stg);
+      |      n := n + 1;
+      |    END IF;
+      |  END LOOP;
+      |  PERFORM set_config('graft.promoted', n::text, false);
+      |END $$graft$$""".stripMargin
+    val tx = if (isolation.nonEmpty)
+      s"BEGIN ISOLATION LEVEL $isolation; $promote; COMMIT" else promote
+    psqlValue(sock, port, db,
+      s"$tx; SELECT current_setting('graft.promoted')", user, password)
+      .linesIterator.toSeq.last.toInt
   }
 
   /** One executor-side staged COPY stream, two interchangeable
@@ -529,8 +515,9 @@ object PgCopySink {
   }
 
   /** Promote every shard's staged partitions — N CONCURRENT per-shard
-    * promotes, each one atomic (its shard's truncate + inserts +
-    * staging drops are one transaction, so no shard is ever torn).
+    * promotes, each one atomic and one round trip (its shard's
+    * truncate + inserts + staging drops + reap are one transaction, so
+    * no shard is ever torn).
     * Shards commit independently, exactly like JDBC's parallel INSERT
     * connections commit independently: the promote is a second full
     * write pass through one backend per target, and serializing all N

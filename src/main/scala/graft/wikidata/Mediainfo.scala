@@ -28,9 +28,12 @@ object Mediainfo {
     * ordinary statements, under the `statements` map) → English caption
     * enrichment as a pass-through column, in DDL order. ONE dump scan
     * (round-17 verdict 4): one narrow codegen'd pipeline, no caption
-    * join. */
+    * join. The dump is parsed with only the statement fields the load
+    * writes, as [[Etl.loadFrame]] does. */
   def loadFrame(s: SparkSession): DataFrame =
-    Etl.statementRows(Wd.mediainfoDump.readBz2(s), "statements", "en_caption")
+    Etl.statementRows(
+      Wd.mediainfoDump.readBz2(s, Etl.statementFields("statements"): _*),
+      "statements", "en_caption")
 
   val queries: Map[String, Q] = Map(
     // The reference pipeline shape applied to the THIRD dump family:

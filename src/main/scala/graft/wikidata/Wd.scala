@@ -65,10 +65,12 @@ object Wd {
       readDump(s, s.conf.getOption(pathConf).getOrElse(stage(s)), schema)
 
     /** The composed ETL's bz2 dump: the `bz2Conf` override, else the
-      * staged bz2 twin of the fixture. */
-    def readBz2(s: SparkSession): DataFrame =
+      * staged bz2 twin of the fixture. With `keep` paths it parses only
+      * those fields ([[EntitySchema.prune]]); with none, the whole
+      * schema. */
+    def readBz2(s: SparkSession, keep: String*): DataFrame =
       readDump(s, bz2Conf.flatMap(s.conf.getOption).getOrElse(stageBz2(s)),
-        schema)
+        if (keep.isEmpty) schema else EntitySchema.prune(schema, keep))
   }
 
   /** Items and properties (`latest-all.json`), the paper's dump. */

@@ -80,6 +80,18 @@ class HarnessSpec extends AnyFunSuite {
     assert(hits("\\\\copy (") === Seq("graft/sources/PgCopy.scala"))
   }
 
+  test("Postgres staging lookups go through the one escaping LIKE helper") {
+    // a hand-built LIKE literal leaves the target name's `_`/`%` as
+    // wildcards; the promote's reap must match the name literally
+    val pg = "graft/sources/PgCopy.scala"
+    assert(!hits("LIKE '").contains(pg))
+    assert(hits("LIKE ${stagingLike(").toSet === Set(pg))
+    // the per-partition write lists no staging from the driver: the
+    // server-side promote reaps in the same round trip
+    assert(hits("listStaging") === Nil)
+    assert(hits("dropStaging") === Nil)
+  }
+
   test("src/main swallows no cleanup failure silently") {
     // a cleanup that fails leaves a WARN naming its table, partition or
     // socket, or rides the in-flight exception as a suppressed one

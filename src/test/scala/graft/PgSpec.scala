@@ -58,9 +58,9 @@ class PgSpec extends AnyFunSuite {
     PgServer.psql(s"""DROP TABLE IF EXISTS "$t"""")
     PgServer.psql(PgDdl.createTable(t, schema))
     // stale old-epoch staging from a (simulated) aborted earlier run of
-    // this target: must be cleared before the new load, never promoted
-    // (promote filters on this run's epoch, so even a zombie re-creating
-    // this table mid-run could not get it promoted)
+    // this target: reaped by the promote, never promoted (promote
+    // filters on this run's epoch, so even a zombie re-creating this
+    // table mid-run could not get it promoted)
     PgServer.psql(s"""DROP TABLE IF EXISTS "${t}__stg_deadbeef_p99"""")
     PgServer.psql(s"""CREATE TABLE "${t}__stg_deadbeef_p99"
       (p_partkey BIGINT, p_name TEXT, tricky TEXT)""")
@@ -89,6 +89,57 @@ class PgSpec extends AnyFunSuite {
     val sparkVal = df.filter(col("p_partkey") === k).head().getString(2)
     assert(PgServer.psql(
       s"""SELECT tricky FROM "$t" WHERE p_partkey = $k""").get === sparkVal)
+  }
+
+  /** Staging tables of exactly `target`, any epoch. */
+  private def stagingOf(target: String): Long = PgServer.psql(
+    s"""SELECT count(*) FROM pg_tables
+        WHERE starts_with(tablename, '${target}__stg_')""").get.toLong
+
+  test("the promote's reap matches the target name literally: a look-alike " +
+      "target's staging survives") {
+    assume(PgServer.ensure(), "local Postgres unavailable")
+    // `_` is a LIKE wildcard: an unescaped pattern for a_b matches aXb
+    val (t, lookAlike) = ("graft_pgspec_a_b", "graft_pgspec_aXb")
+    val other = s"${lookAlike}__stg_deadbeef_p0"
+    Seq(t, lookAlike, other).foreach(x =>
+      PgServer.psql(s"""DROP TABLE IF EXISTS "$x" CASCADE"""))
+    Seq(t, lookAlike, other).foreach(x =>
+      PgServer.psql(s"""CREATE TABLE "$x" (k BIGINT)"""))
+    PgServer.psql(s"""INSERT INTO "$other" VALUES (7)""")
+    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
+      perPartition = true).write(spark.range(0, 10, 1, 2).toDF("k"))
+    assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === 10L)
+    assert(stagingOf(t) === 0L)
+    // another target's in-flight staging is not this write's to reap
+    assert(PgServer.psql(s"""SELECT count(*) FROM "$other"""").get.toLong === 1L)
+    Seq(t, lookAlike, other).foreach(x =>
+      PgServer.psql(s"""DROP TABLE IF EXISTS "$x" CASCADE"""))
+  }
+
+  test("a write whose task throws mid-partition leaves the target " +
+      "unchanged, and the next write reaps its staging") {
+    assume(PgServer.ensure(), "local Postgres unavailable")
+    val t = "graft_pgspec_task_fail"
+    PgServer.psql(s"""DROP TABLE IF EXISTS "$t"""")
+    PgServer.psql(s"""CREATE TABLE "$t" (k BIGINT)""")
+    PgServer.psql(s"""INSERT INTO "$t" VALUES (-1)""")
+    // partition 1 streams 19 rows, then throws; partition 0 commits its
+    // staging table well inside the pause
+    val boom = udf { (k: Long) =>
+      if (k == 39L) { Thread.sleep(1500); throw new IllegalStateException("boom") }
+      k
+    }
+    val sink = PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
+      perPartition = true)
+    intercept[org.apache.spark.SparkException](
+      sink.write(spark.range(0, 40, 1, 2).select(boom(col("id")).as("k"))))
+    assert(PgServer.psql(s"""SELECT string_agg(k::text, ',') FROM "$t"""").get === "-1")
+    assert(stagingOf(t) >= 1L, "no partition staged before the failure")
+    sink.write(spark.range(0, 40, 1, 2).toDF("k"))
+    assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === 41L)
+    assert(stagingOf(t) === 0L)
+    PgServer.psql(s"""DROP TABLE "$t"""")
   }
 
   test("etl_wikidata_pg composes the full dump->Postgres pipeline") {

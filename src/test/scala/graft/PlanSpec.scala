@@ -71,6 +71,27 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("dump→Postgres ETL frames parse only the statement fields they load") {
+    // Spark prunes a JSON scan at the top level only: without the pruned
+    // read schema every statement's snak trees are parsed and dropped
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+    Seq("entity" -> graft.wikidata.Etl.loadFrame(spark),
+        "mediainfo" -> graft.wikidata.Mediainfo.loadFrame(spark)).foreach {
+      case (family, df) =>
+        val reads = df.queryExecution.sparkPlan.collect {
+          case f: FileSourceScanExec if f.relation.fileFormat.isInstanceOf[JsonFileFormat] =>
+            f.requiredSchema.catalogString
+        }
+        assert(reads.size === 1, s"$family: $reads")
+        Seq("qualifiers", "references", "rank", "snaktype", "language").foreach { f =>
+          assert(!reads.head.contains(s"$f:"), s"$family ReadSchema: ${reads.head}")
+        }
+        assert(reads.head.contains("datavalue:struct<value:string,type:string>"),
+          s"$family ReadSchema: ${reads.head}")
+    }
+  }
+
   test("agg_groupby_pricing has partial+final HashAggregate around one shuffle") {
     val p = plan("agg_groupby_pricing")
     assert("HashAggregate".r.findAllIn(p).length >= 2)

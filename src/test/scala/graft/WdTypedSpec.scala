@@ -27,11 +27,33 @@ class WdTypedSpec extends AnyFunSuite {
     assert(rows(("Q5", "P1476")).getString(11) === "a title in english")
   }
 
+  private val equivN = 300L
+
+  /** A 300-entity GenWd zipf dump as bz2, plain NDJSON or array-wrapped;
+    * its path. */
+  private def zipfDump(layout: String, wrap: Boolean): String = {
+    import graft.wikidata.GenWd
+    val path = Stage.p(spark, s"graft_wd_etl_equiv_$layout.json.bz2")
+    val out = Stage.createBz2(spark, path)
+    try (0L until equivN).foreach { i =>
+      val body = GenWd.entityJson(i, zipf = true)
+      val line = if (wrap) GenWd.wrapLine(body, i, equivN) else body
+      out.write((line + "\n").getBytes("UTF-8"))
+    } finally out.close()
+    path
+  }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame, clue: String): Unit = {
+    assert(a.exceptAll(b).count() === 0, clue)
+    assert(b.exceptAll(a).count() === 0, clue)
+  }
+
   test("Etl.loadFrame's single scan is row-identical to the two-scan label " +
       "join (GenWd zipf dump, plain and array-wrapped bz2)") {
     import org.apache.spark.sql.functions._
-    import graft.wikidata.{EntitySchema, Etl, GenWd, TypedValues, Wd}
-    val n = 300L
+    import graft.wikidata.{EntitySchema, Etl, TypedValues, Wd}
+    val n = equivN
     // The entity ETL before its label became a pass-through column: a
     // second dump scan for the en labels, left-joined on id. Kept here
     // only as the reference.
@@ -43,13 +65,7 @@ class WdTypedSpec extends AnyFunSuite {
       TypedValues.typed(Wd.claimsFlatten(ents)).join(en, Seq("id"), "left")
     }
     Seq("plain" -> false, "array" -> true).foreach { case (layout, wrap) =>
-      val path = Stage.p(spark, s"graft_wd_etl_equiv_$layout.json.bz2")
-      val out = Stage.createBz2(spark, path)
-      try (0L until n).foreach { i =>
-        val body = GenWd.entityJson(i, zipf = true)
-        val line = if (wrap) GenWd.wrapLine(body, i, n) else body
-        out.write((line + "\n").getBytes("UTF-8"))
-      } finally out.close()
+      val path = zipfDump(layout, wrap)
       spark.conf.set("spark.graft.wd.bz2", path)
       try {
         val single = Etl.loadFrame(spark)
@@ -57,10 +73,33 @@ class WdTypedSpec extends AnyFunSuite {
         // not vacuous: statements of labelled and label-less entities
         assert(single.filter(col("en_label").isNotNull).count() > n, layout)
         assert(single.filter(col("en_label").isNull).count() > 0, layout)
-        assert(single.exceptAll(ref).count() === 0, layout)
-        assert(ref.exceptAll(single).count() === 0, layout)
+        sameRows(single, ref, layout)
       } finally spark.conf.unset("spark.graft.wd.bz2")
     }
+  }
+
+  test("the load frames' pruned dump read is row-identical to the " +
+      "full-EntitySchema read (GenWd zipf dump, plain and array-wrapped " +
+      "bz2; mediainfo fixture)") {
+    import org.apache.spark.sql.functions._
+    import graft.wikidata.{EntitySchema, Etl, Mediainfo, Wd}
+    Seq("plain" -> false, "array" -> true).foreach { case (layout, wrap) =>
+      val path = zipfDump(layout, wrap)
+      spark.conf.set("spark.graft.wd.bz2", path)
+      try {
+        val pruned = Etl.loadFrame(spark)
+        val full = Etl.statementRows(
+          Wd.readDump(spark, path, EntitySchema.entity).filter(col("redirect").isNull),
+          "claims", "en_label")
+        assert(pruned.count() > equivN, layout)
+        sameRows(pruned, full, layout)
+      } finally spark.conf.unset("spark.graft.wd.bz2")
+    }
+    val pruned = Mediainfo.loadFrame(spark)
+    val full = Etl.statementRows(Wd.mediainfoDump.readBz2(spark),
+      "statements", "en_caption")
+    assert(pruned.count() === 7)
+    sameRows(pruned, full, "mediainfo")
   }
 
   test("PgDdl maps Spark schemas to Postgres DDL") {
