@@ -1,46 +1,51 @@
 package graft.sources
 
 import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.StructType
 import scala.sys.process._
 import scala.util.Try
 
 /** COPY-based Postgres bulk load — the reference tool's actual ingest
-  * mechanism (psql \copy), runnable in this offline image where no JDBC
-  * jar resolves (SURVEY §7.5): it only needs the local Postgres 15
-  * server binaries.
+  * mechanism (COPY … FROM STDIN), runnable in this offline image where
+  * no JDBC jar resolves (SURVEY §7.5): it only needs the local Postgres
+  * 15 server binaries.
   *
-  * Two fan-outs behind one Sink:
-  *  - staged (perPartition = false): Spark stages CSV part files, the
-  *    driver streams each through `\copy` — simplest, serial.
-  *  - per-partition (perPartition = true, the 100 TB shape): every
-  *    partition COPYs itself from the executor via foreachPartition —
-  *    N concurrent COPY streams into Postgres, no driver staging, no
-  *    second pass over the data.
+  * One write path: every partition COPYs itself from the executor via
+  * foreachPartition — N concurrent COPY streams into Postgres, no driver
+  * staging, no second pass over the data. An unsharded write is the
+  * one-target case of the sharded one: the same partition writer, the
+  * same staging, the same promote.
   *
-  * The per-partition fan-out is IDEMPOTENT under task retries and
-  * speculative duplicates: a partition never touches the target table.
-  * It COPYs into a staging table keyed by partition id, inside one
-  * transaction that first replaces the staging table — so a retried or
-  * speculated partition overwrites its own staging output (the second
+  * The fan-out is IDEMPOTENT under task retries and speculative
+  * duplicates: a partition never touches a target table. It COPYs into
+  * a staging table keyed by target, run epoch and partition id, inside
+  * one transaction that first replaces the staging table — so a retried
+  * or speculated partition overwrites its own staging output (the second
   * attempt blocks on the DROP lock, then replaces), never appends
-  * twice. After the Spark job completes, ONE driver round trip runs the
-  * promote server-side ([[PgCopySink.promoteStaged]]): in a single atomic
-  * transaction it promotes every staging table of this run into the
-  * target, drops them, and reaps the leftover staging tables of every
-  * other epoch of the target. Staging names embed a per-run epoch, and
-  * promote only promotes THIS run's epoch — so a zombie task surviving
-  * from an ABORTED earlier run of the same target can at worst
-  * re-create its old-epoch staging table (reaped, never promoted, by
-  * the next promote), and a zombie of this run committing after
-  * promote leaves only an orphan staging table, reaped the same way.
-  * Never duplicate or stale target rows.
+  * twice. After the Spark job completes, ONE driver round trip per
+  * target runs the promote server-side ([[PgCopySink.promoteStaged]]):
+  * in a single atomic transaction it promotes every staging table of
+  * this run into the target, drops them, and reaps the leftover staging
+  * tables of every other epoch of the target. Staging names embed a
+  * per-run epoch, and promote only promotes THIS run's epoch — so a
+  * zombie task surviving from an ABORTED earlier run of the same target
+  * can at worst re-create its old-epoch staging table (reaped, never
+  * promoted, by the next promote), and a zombie of this run committing
+  * after promote leaves only an orphan staging table, reaped the same
+  * way. Never duplicate or stale target rows.
+  *
+  * One writer per target at a time: because the promote reaps every
+  * other epoch's staging of its target, a second write to the same
+  * target running concurrently can have its committed staging dropped
+  * before its own promote, and its rows are then lost. Serialize writes
+  * to one target (distinct targets, shards included, load in parallel).
   */
 final case class PgCopySink(sockDir: String, port: Int, db: String,
-    table: String, perPartition: Boolean = false,
+    table: String, perPartition: Boolean = true,
     numPartitions: Int = 0,
     batchRows: Int = 0,
     truncate: Boolean = false,
@@ -51,9 +56,11 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
     shardCol: String = "",
     attachPromote: Boolean = false,
     wire: Boolean = false) extends Sink {
-  // JdbcSink option twins, each proven against live Postgres (r11
-  // verdict task 5 — pgjdbc stays unresolvable offline, so the COPY
-  // writer carries the option surface instead):
+  // Options — JdbcSink option twins, each proven against live Postgres
+  // (pgjdbc stays unresolvable offline, so the COPY writer carries the
+  // option surface instead):
+  //  * perPartition — accepted for callers that still name it; it must
+  //    be true, the one write path being the per-partition fan-out.
   //  * numPartitions (>0) — coalesce before the fan-out: caps
   //    concurrent COPY connections exactly as JDBC's numPartitions
   //    caps concurrent INSERT connections.
@@ -65,25 +72,23 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
   //  * truncate — overwrite semantics that preserve DDL/grants/indexes:
   //    the promote transaction TRUNCATEs the target before inserting
   //    staged rows (atomic swap for readers), matching JDBC
-  //    truncate=true under SaveMode.Overwrite. On the driver-staged
-  //    path the TRUNCATE runs once before the \copy loop (JDBC's
-  //    truncate is equally a separate statement there).
+  //    truncate=true under SaveMode.Overwrite.
   //  * isolation — explicit transaction isolation for the promote
   //    (JDBC isolationLevel); empty = server default (READ COMMITTED).
   //  * user/password — role-authenticated connection (-U + PGPASSWORD),
   //    for targets not owned by the OS user.
   //  * shards/shardCol (shards > 1) — hash-sharded targets, the 100 TB
-  //    fan-out shape (r12 verdict task 1): each row routes to shard
-  //    table "<table>_s<i>" by pmod(xxhash64(shardCol), shards) — a
-  //    pure deterministic function of the key, so routing is stable
-  //    across runs, retries and cluster layouts. The route is computed
-  //    as a Spark column (codegen'd, no shuffle added: the existing
-  //    per-partition COPY streams just MULTIPLEX into one psql per
-  //    (partition, shard-touched) pair), every shard load keeps the
-  //    epoch-keyed staging idempotence, and the N shards promote
-  //    CONCURRENTLY — each shard's promote is one atomic transaction
-  //    (never a torn shard); shards commit independently, the same
-  //    contract as JDBC's parallel INSERT connections.
+  //    fan-out shape: each row routes to shard table "<table>_s<i>" by
+  //    pmod(xxhash64(shardCol), shards) — a pure deterministic function
+  //    of the key, so routing is stable across runs, retries and
+  //    cluster layouts. The route is computed as a Spark column
+  //    (codegen'd, no shuffle added: the per-partition COPY streams
+  //    just MULTIPLEX into one stream per (partition, shard-touched)
+  //    pair), every shard load keeps the epoch-keyed staging
+  //    idempotence, and the N shards promote CONCURRENTLY — each
+  //    shard's promote is one atomic transaction (never a torn shard);
+  //    shards commit independently, the same contract as JDBC's
+  //    parallel INSERT connections.
   //    What the sharded sweep actually measured (SCALE.md round-13):
   //    the COPY stage pipelines entirely under the Spark compute (stage
   //    wall ≈ the no-sink floor), so the writer ceiling is the PROMOTE —
@@ -105,77 +110,55 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
   //    psql-binary dependency on executor hosts (a real constraint on
   //    container clusters); unix-socket/TCP reach is all that's
   //    needed. Same staging/epoch/transaction semantics — PgSpec
-  //    asserts the two writers produce byte-identical tables.
-  override def write(df: DataFrame): Unit = {
+  //    asserts the two transports produce byte-identical tables.
+  require(perPartition,
+    "PgCopySink has one write path, the per-partition fan-out: perPartition must be true")
+
+  override def write(df: DataFrame): Unit = stageAndPromote(df, None)
+
+  /** The write path: fan the frame out into this run's epoch staging of
+    * every target (the table, or its shard tables), then promote each
+    * target in one server-side transaction. `batch` is
+    * [[PgStreamSink]]'s commit-ledger guard, checked inside that
+    * transaction ([[PgCopySink.promoteStaged]]). */
+  private[graft] def stageAndPromote(df: DataFrame, batch: Option[Long]): Unit = {
     val d = if (numPartitions > 0) df.coalesce(numPartitions) else df
-    if (shards > 1) {
-      require(perPartition, "sharded mode rides the per-partition fan-out")
+    val targets =
+      if (shards > 1) (0 until shards).map(PgCopySink.shardName(table, _))
+      else Seq(table)
+    val routed = if (shards > 1) {
       require(shardCol.nonEmpty, "sharded mode needs a shardCol to route by")
-      val (sock, p, database, t) = (sockDir, port, db, table)
-      val (br, usr, pw, nSh, wr) = (batchRows, user, password, shards, wire)
-      val runId = java.util.UUID.randomUUID().toString.take(8)
-      // every shard table in one round trip; each shard's promote reaps
-      // its own leftover staging
-      PgCopySink.psqlValue(sock, p, database, (0 until nSh).map { i =>
-        s"""CREATE TABLE IF NOT EXISTS "${PgCopySink.shardName(t, i)}" (LIKE "$t" INCLUDING ALL)"""
-      }.mkString("; "), usr, pw)
-      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
       // withColumn would silently REPLACE a pre-existing column of this
       // name and the writer drops the last column as the shard id — an
       // input that already carries __graft_shard would be misrouted and
       // lose a data column. Refuse loudly instead.
       require(!d.columns.contains("__graft_shard"),
         "input already has a __graft_shard column; rename it before a sharded write")
-      val routed = d.withColumn("__graft_shard",
-        pmod(xxhash64(col(shardCol)), lit(nSh)))
-      val t0 = System.nanoTime()
-      routed.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        if (rows.hasNext)
-          PgCopySink.copyPartitionSharded(sock, p, database, t, nSh, runId,
-            org.apache.spark.TaskContext.getPartitionId(), rows, br, usr, pw, wr)
-      }
-      val t1 = System.nanoTime()
-      PgCopySink.lastPromoted = PgCopySink.promoteStagedSharded(
-        sock, p, database, t, nSh, runId, truncate, isolation, usr, pw,
-        attachPromote)
-      PgCopySink.lastStageSec = (t1 - t0) / 1e9
-      PgCopySink.lastPromoteSec = (System.nanoTime() - t1) / 1e9
-    } else if (perPartition) {
-      // close over plain fields, not `this`-heavy structures
-      val (sock, p, database, t) = (sockDir, port, db, table)
-      val (br, usr, pw, wr) = (batchRows, user, password, wire)
-      // per-run epoch: promote only ever promotes THIS run's staging
-      // tables; other epochs' leftovers (a zombie's included) are reaped
-      val runId = java.util.UUID.randomUUID().toString.take(8)
-      val t0 = System.nanoTime()
-      d.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        if (rows.hasNext)
-          PgCopySink.copyPartitionStaged(sock, p, database, t, runId,
-            org.apache.spark.TaskContext.getPartitionId(), rows, br, usr, pw, wr)
-      }
-      val t1 = System.nanoTime()
-      PgCopySink.lastPromoted = PgCopySink.promoteStaged(
-        sock, p, database, t, runId, truncate, isolation, usr, pw,
-        attachPromote)
-      PgCopySink.lastStageSec = (t1 - t0) / 1e9
-      PgCopySink.lastPromoteSec = (System.nanoTime() - t1) / 1e9
-    } else {
-      val tmp = Files.createTempDirectory("graft_pgcopy").toFile
-      d.write.mode("overwrite")
-        .option("header", "false").option("nullValue", "")
-        .csv(tmp.getAbsolutePath)
-      if (truncate)
-        PgCopySink.psqlValue(sockDir, port, db, s"""TRUNCATE "$table"""",
-          user, password)
-      tmp.listFiles().filter(_.getName.endsWith(".csv")).sortBy(_.getName)
-        .foreach { part =>
-          val rc = scala.sys.process.Process(
-            PgCopySink.psqlBase(sockDir, port, db, user) :+ "-c" :+
-              s"""\\copy "$table" FROM '${part.getAbsolutePath}' WITH (FORMAT csv, NULL '')""",
-            None, PgCopySink.pwEnv(password): _*).!
-          require(rc == 0, s"psql \\copy failed (exit $rc) for $part")
-        }
+      // every shard table in one round trip; each shard's promote reaps
+      // its own leftover staging
+      PgCopySink.psqlValue(sockDir, port, db, targets.map { s =>
+        s"""CREATE TABLE IF NOT EXISTS "$s" (LIKE "$table" INCLUDING ALL)"""
+      }.mkString("; "), user, password)
+      d.withColumn("__graft_shard", pmod(xxhash64(col(shardCol)), lit(shards)))
+    } else d
+    // close over plain fields, not `this`
+    val (sock, p, database, ts) = (sockDir, port, db, targets.toArray)
+    val (br, usr, pw, wr) = (batchRows, user, password, wire)
+    // per-run epoch: promote only ever promotes THIS run's staging
+    // tables; other epochs' leftovers (a zombie's included) are reaped
+    val runId = java.util.UUID.randomUUID().toString.take(8)
+    val t0 = System.nanoTime()
+    routed.foreachPartition { (rows: Iterator[Row]) =>
+      if (rows.hasNext)
+        PgCopySink.copyPartition(sock, p, database, ts, runId,
+          org.apache.spark.TaskContext.getPartitionId(), rows, br, usr, pw, wr)
     }
+    val t1 = System.nanoTime()
+    PgCopySink.lastPromoted = PgCopySink.promoteAll(targets, t =>
+      PgCopySink.promoteStaged(sockDir, port, db, t, runId, truncate,
+        isolation, user, password, attachPromote, batch))
+    PgCopySink.lastStageSec = (t1 - t0) / 1e9
+    PgCopySink.lastPromoteSec = (System.nanoTime() - t1) / 1e9
   }
 }
 
@@ -213,16 +196,16 @@ object PgCopySink {
   private[sources] def shardName(table: String, shard: Int) =
     s"${table}_s$shard"
 
-  /** Staging-table count of the most recent perPartition promote —
-    * observability hook (also what PgSpec asserts the numPartitions
-    * connection cap through; a metrics sink would read the same). */
+  /** Staging-table count of the most recent promote — observability
+    * hook (also what PgSpec asserts the numPartitions connection cap
+    * through; a metrics sink would read the same). */
   @volatile var lastPromoted: Int = -1
 
-  /** Phase timing of the most recent perPartition/sharded write:
-    * executor COPY fan-out seconds vs promote seconds. The split is
-    * what the shard-scaling analysis reads — a flat total with a
-    * growing stage share means the promote, not the COPY, is the
-    * ceiling (measured in SCALE.md round-13). */
+  /** Phase timing of the most recent write: executor COPY fan-out
+    * seconds vs promote seconds. The split is what the shard-scaling
+    * analysis reads — a flat total with a growing stage share means the
+    * promote, not the COPY, is the ceiling (measured in SCALE.md
+    * round-13). */
   @volatile var lastStageSec: Double = -1
   @volatile var lastPromoteSec: Double = -1
 
@@ -265,27 +248,47 @@ object PgCopySink {
     * task's of an aborted earlier run included) is dropped, never
     * promoted. Readers see the old table until commit, then the whole
     * load; re-running the promote is a no-op (the staging tables are
-    * gone). Returns the promoted count, which comes back as the last
-    * line of output; an explicit BEGIN carries a requested isolation
-    * level, else the multi-statement query is one implicit transaction
-    * at the server default. */
+    * gone).
+    *
+    * With `batch` = Some(id) the same transaction first consults the
+    * target's `<table>__commits` ledger: if `id` is recorded, this
+    * epoch's staging is dropped like any leftover and nothing is
+    * truncated or promoted; otherwise `id` is recorded along with the
+    * promote. A redelivered micro-batch that raced past the stream
+    * sink's fast-path check therefore still lands once.
+    *
+    * Returns the promoted count, which comes back as the last line of
+    * output; an explicit BEGIN carries a requested isolation level,
+    * else the multi-statement query is one implicit transaction at the
+    * server default. */
   private[sources] def promoteStaged(sock: String, port: Int, db: String,
       table: String, runId: String, truncate: Boolean = false,
       isolation: String = "", user: String = "",
-      password: String = "", attach: Boolean = false): Int = {
+      password: String = "", attach: Boolean = false,
+      batch: Option[Long] = None): Int = {
     val t = "'" + table.replace("'", "''") + "'"
     val promote = s"""DO $$graft$$
       |DECLARE
       |  target text := $t;
+      |  batch bigint := ${batch.fold("NULL")(_.toString)};
+      |  dup boolean := false;
       |  n int := 0;
       |  stg text;
       |BEGIN
-      |  IF $truncate THEN EXECUTE format('TRUNCATE %I', target); END IF;
+      |  IF batch IS NOT NULL THEN
+      |    EXECUTE format('SELECT EXISTS (SELECT 1 FROM %I WHERE batch_id = $$1)',
+      |      target || '__commits') INTO dup USING batch;
+      |    IF NOT dup THEN
+      |      EXECUTE format('INSERT INTO %I VALUES ($$1)', target || '__commits')
+      |        USING batch;
+      |    END IF;
+      |  END IF;
+      |  IF $truncate AND NOT dup THEN EXECUTE format('TRUNCATE %I', target); END IF;
       |  FOR stg IN SELECT tablename FROM pg_tables
       |      WHERE schemaname = current_schema()
       |        AND tablename LIKE ${stagingLike(s"${table}__stg_")}
       |      ORDER BY tablename LOOP
-      |    IF stg NOT LIKE ${stagingLike(s"${table}__stg_${runId}_p")} THEN
+      |    IF dup OR stg NOT LIKE ${stagingLike(s"${table}__stg_${runId}_p")} THEN
       |      EXECUTE format('DROP TABLE IF EXISTS %I', stg);
       |    ELSIF $attach THEN
       |      EXECUTE format('ALTER TABLE %I INHERIT %I', stg, target);
@@ -307,53 +310,74 @@ object PgCopySink {
       .linesIterator.toSeq.last.toInt
   }
 
-  /** One executor-side staged COPY stream, two interchangeable
-    * transports (psql subprocess / pure-JVM wire client), one
-    * contract: the whole stream is one transaction that first replaces
-    * the partition's staging table, so a task retry or speculative
-    * duplicate REPLACES rather than appends; finish() commits and
-    * requires success; abort() guarantees nothing commits and nothing
-    * (process or socket) outlives the task. */
-  private sealed trait CopyStream {
-    def writeRow(r: org.apache.spark.sql.Row, nCols: Int): Unit
-    def finish(): Unit
-    def abort(): Unit
-  }
+  /** Promote every target and return the summed promoted count: inline
+    * for one target; for N (the shards of a sharded write) N CONCURRENT
+    * per-target promotes, each one atomic and one round trip (its
+    * target's truncate + inserts + staging drops + reap are one
+    * transaction, so no shard is ever torn).
+    * Shards commit independently, exactly like JDBC's parallel INSERT
+    * connections commit independently: the promote is a second full
+    * write pass through one backend per target, and serializing all N
+    * through a single transaction made the promote THE single-writer
+    * bottleneck sharding exists to remove (measured: the 3M-entity
+    * N=4 sweep ran 2× slower than N=1 under the one-transaction
+    * promote; SCALE.md round-13 has the phase split). */
+  private def promoteAll(targets: Seq[String], promote: String => Int): Int =
+    if (targets.size == 1) promote(targets.head)
+    else {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val threads = targets.map { t =>
+        val th = new Thread(() => {
+          try n.addAndGet(promote(t))
+          catch { case e: Throwable => errs.add(e) }
+        }, s"graft-pg-promote-$t")
+        th.start(); th
+      }
+      threads.foreach(_.join())
+      if (!errs.isEmpty) throw errs.peek()
+      n.get()
+    }
 
-  private def mkStream(wire: Boolean, sock: String, port: Int, db: String,
-      table: String, runId: String, partitionId: Int, batchRows: Int,
-      user: String, password: String): CopyStream =
-    if (wire) new WireStagedCopy(sock, port, db, table, runId, partitionId,
-      batchRows, user, password)
-    else new StagedCopy(sock, port, db, table, runId, partitionId,
-      batchRows, user, password)
-
-  /** Wire-transport staged COPY stream: BEGIN + staging replace + COPY
-    * FROM STDIN over one PgWire connection. batchRows ends and
-    * re-opens the COPY statement inside the same transaction, exactly
-    * like the psql twin. */
-  private final class WireStagedCopy(sock: String, port: Int, db: String,
-      table: String, runId: String, partitionId: Int, batchRows: Int,
-      user: String, password: String) extends CopyStream {
-    private val stg = stagingName(table, runId, partitionId)
-    private val copySql = s"""COPY "$stg" FROM STDIN WITH (FORMAT csv, NULL '')"""
-    private val w = new PgWire(sock, port, db, user, password)
-    // Setup runs in the constructor, BEFORE the stream is handed to the
-    // caller — a throw here (bad table name, permission) would escape
-    // mkStream with no owner to abort() it, leaking the socket and its
-    // Postgres backend on a long-lived executor (round-15 advice). Drop
-    // the connection ourselves and let the original exception win.
-    try {
-      w.exec("BEGIN")
-      w.exec(s"""DROP TABLE IF EXISTS "$stg"; CREATE TABLE "$stg" (LIKE "$table")""")
-      w.copyInBegin(copySql)
-    } catch { case e: Throwable => w.closeAbort(); throw e }
+  /** One executor-side COPY stream into the staging table of `target`
+    * for (runId, partitionId). It owns the row encoding: each row is one
+    * CSV line of [[csvCell]]s, and with batchRows > 0 the COPY statement
+    * ends and re-opens every batchRows rows (rows-per-statement, the
+    * JDBC batchsize twin: it bounds the server's per-statement working
+    * set, and everything stays inside the stream's one transaction, so
+    * atomicity and retry idempotence are the unbatched stream's).
+    *
+    * A transport supplies the rest — copyBegin, copyBytes, copyEnd,
+    * finish, abort — under one contract: its constructor opens one
+    * transaction that first runs [[replaceSql]] (so a task retry or
+    * speculative duplicate REPLACES rather than appends) and then opens
+    * the first COPY; finish() ends the COPY, commits and requires
+    * success; abort() guarantees nothing commits and nothing (process or
+    * socket) outlives the task, and never throws. */
+  private abstract class CopyStream(target: String, runId: String,
+      partitionId: Int, batchRows: Int) {
+    private val stg = stagingName(target, runId, partitionId)
+    /** The DROP stays (a retried task reuses its staging name); warning
+      * level keeps the drop of a new name from printing a NOTICE per
+      * stream. */
+    protected val replaceSql: String =
+      s"""SET client_min_messages = warning; DROP TABLE IF EXISTS "$stg"; """ +
+        s"""CREATE TABLE "$stg" (LIKE "$target")"""
+    protected val copySql: String =
+      s"""COPY "$stg" FROM STDIN WITH (FORMAT csv, NULL '')"""
     private val sb = new java.lang.StringBuilder(256)
     private var inBatch = 0
 
-    def writeRow(r: org.apache.spark.sql.Row, nCols: Int): Unit = {
+    protected def copyBegin(): Unit
+    protected def copyBytes(b: Array[Byte]): Unit
+    protected def copyEnd(): Unit
+    def finish(): Unit
+    def abort(): Unit
+
+    /** Append columns [0, nCols) of the row as one CSV line. */
+    final def writeRow(r: Row, nCols: Int): Unit = {
       if (batchRows > 0 && inBatch == batchRows) {
-        w.copyEnd(); w.copyInBegin(copySql); inBatch = 0
+        copyEnd(); copyBegin(); inBatch = 0
       }
       sb.setLength(0)
       var i = 0
@@ -363,26 +387,17 @@ object PgCopySink {
         i += 1
       }
       sb.append('\n')
-      val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      w.copyData(bytes, 0, bytes.length)
+      copyBytes(sb.toString.getBytes(UTF_8))
       inBatch += 1
     }
-
-    def finish(): Unit =
-      try { w.copyEnd(); w.exec("COMMIT"); w.close() }
-      catch { case e: Throwable => w.closeAbort(); throw e }
-
-    def abort(): Unit = w.closeAbort()
   }
 
-  /** psql-transport staged COPY stream: a subprocess whose whole
-    * script is one transaction (-1) — replace staging, COPY inline.
-    * Factored out so the sharded writer can multiplex several of these
-    * (one per shard touched) inside a single partition pass. */
-  private final class StagedCopy(sock: String, port: Int, db: String,
-      table: String, runId: String, partitionId: Int, batchRows: Int,
-      user: String, password: String) extends CopyStream {
-    private val stg = stagingName(table, runId, partitionId)
+  /** psql transport: a subprocess whose whole script is one
+    * transaction (-1) — replace staging, COPY inline. */
+  private final class PsqlCopy(sock: String, port: Int, db: String,
+      target: String, runId: String, partitionId: Int, batchRows: Int,
+      user: String, password: String)
+      extends CopyStream(target, runId, partitionId, batchRows) {
     private val proc = {
       val pb = new java.lang.ProcessBuilder(
         (psqlBase(sock, port, db, user) ++ Seq("-1", "-f", "-")): _*)
@@ -391,44 +406,21 @@ object PgCopySink {
       pb.redirectError(java.lang.ProcessBuilder.Redirect.INHERIT)
       pb.start()
     }
-    private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      proc.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-    private val sb = new java.lang.StringBuilder(256)
-    private var inBatch = 0
-    out.write(s"""DROP TABLE IF EXISTS "$stg";\n""")
-    out.write(s"""CREATE TABLE "$stg" (LIKE "$table");\n""")
-    out.write(s"""COPY "$stg" FROM STDIN WITH (FORMAT csv, NULL '');\n""")
+    private val out = new java.io.BufferedOutputStream(proc.getOutputStream, 1 << 16)
+    private def line(s: String): Unit = out.write(s"$s\n".getBytes(UTF_8))
+    line(s"$replaceSql;")
+    copyBegin()
 
-    /** Append columns [0, nCols) of the row as one CSV line. */
-    def writeRow(r: org.apache.spark.sql.Row, nCols: Int): Unit = {
-      // batchRows: rows-per-statement cap (the JDBC batchsize twin).
-      // Ending + re-opening COPY bounds the server's per-statement
-      // working set; everything stays inside the same psql -1
-      // transaction, so atomicity and retry idempotence are exactly
-      // the unbatched path's.
-      if (batchRows > 0 && inBatch == batchRows) {
-        out.write("\\.\n")
-        out.write(s"""COPY "$stg" FROM STDIN WITH (FORMAT csv, NULL '');\n""")
-        inBatch = 0
-      }
-      sb.setLength(0)
-      var i = 0
-      while (i < nCols) {
-        if (i > 0) sb.append(',')
-        sb.append(csvCell(r.get(i)))
-        i += 1
-      }
-      sb.append('\n')
-      out.write(sb.toString)
-      inBatch += 1
-    }
+    protected def copyBegin(): Unit = line(s"$copySql;")
+    protected def copyBytes(b: Array[Byte]): Unit = out.write(b)
+    protected def copyEnd(): Unit = line("\\.")
 
     /** Close the COPY and the transaction; require a clean exit. */
     def finish(): Unit = {
-      try out.write("\\.\n") finally out.close()
+      try copyEnd() finally out.close()
       val rc = proc.waitFor()
       require(rc == 0,
-        s"psql staged COPY (partition $partitionId, table $table) failed with exit $rc")
+        s"psql staged COPY (partition $partitionId, table $target) failed with exit $rc")
     }
 
     /** Failure-path teardown: tear the stream down WITHOUT completing
@@ -440,56 +432,69 @@ object PgCopySink {
       * exception is in flight and must not mask it. */
     def abort(): Unit = {
       def warn(step: String)(e: Throwable): Unit = log.warn(
-        s"psql staged COPY (partition $partitionId, table $table): $step failed", e)
+        s"psql staged COPY (partition $partitionId, table $target): $step failed", e)
       try out.close() catch { case e: Throwable => warn("closing stdin")(e) }
       try { proc.destroyForcibly(); proc.waitFor(); () }
       catch { case e: Throwable => warn("reaping psql")(e) }
     }
   }
 
-  /** Stream one partition's rows into its staging table. Runs on the
-    * executor; one psql subprocess per non-empty partition. A write-
-    * loop failure ABORTS the stream (rollback — committing a partial
-    * partition would hide the data loss behind a later promote) and
-    * the original exception wins over any teardown error. */
-  private def copyPartitionStaged(sock: String, port: Int, db: String,
-      table: String, runId: String, partitionId: Int,
-      rows: Iterator[org.apache.spark.sql.Row],
-      batchRows: Int = 0, user: String = "", password: String = "",
-      wire: Boolean = false): Unit = {
-    val s = mkStream(wire, sock, port, db, table, runId, partitionId,
-      batchRows, user, password)
-    var failed = false
-    try while (rows.hasNext) { val r = rows.next(); s.writeRow(r, r.length) }
-    catch { case e: Throwable => failed = true; s.abort(); throw e }
-    finally if (!failed) s.finish()
+  /** Wire transport: BEGIN + staging replace + COPY FROM STDIN over one
+    * PgWire connection. */
+  private final class WireCopy(sock: String, port: Int, db: String,
+      target: String, runId: String, partitionId: Int, batchRows: Int,
+      user: String, password: String)
+      extends CopyStream(target, runId, partitionId, batchRows) {
+    private val w = new PgWire(sock, port, db, user, password)
+    // Setup runs in the constructor, BEFORE the stream is handed to the
+    // caller — a throw here (bad table name, permission) would escape
+    // with no owner to abort() it, leaking the socket and its Postgres
+    // backend on a long-lived executor. Drop the connection ourselves
+    // and let the original exception win.
+    try { w.exec("BEGIN"); w.exec(replaceSql); copyBegin() }
+    catch { case e: Throwable => w.closeAbort(); throw e }
+
+    protected def copyBegin(): Unit = w.copyInBegin(copySql)
+    protected def copyBytes(b: Array[Byte]): Unit = w.copyData(b, 0, b.length)
+    protected def copyEnd(): Unit = w.copyEnd()
+
+    def finish(): Unit =
+      try { copyEnd(); w.exec("COMMIT"); w.close() }
+      catch { case e: Throwable => w.closeAbort(); throw e }
+
+    def abort(): Unit = w.closeAbort()
   }
 
-  /** Sharded twin: the row's LAST column is the precomputed shard id
-    * (pmod(xxhash64(shardCol), shards), codegen'd upstream); each row
-    * streams into its shard's staging table, all streams held open for
-    * the single partition pass. Connection budget: a partition opens at
-    * most min(shards, distinct shards present) psql processes — cap the
-    * total with numPartitions exactly as the unsharded fan-out does. */
-  private def copyPartitionSharded(sock: String, port: Int, db: String,
-      table: String, shards: Int, runId: String, partitionId: Int,
-      rows: Iterator[org.apache.spark.sql.Row],
-      batchRows: Int = 0, user: String = "", password: String = "",
-      wire: Boolean = false): Unit = {
-    val streams = new Array[CopyStream](shards)
+  /** Stream one partition's rows into their targets' staging tables.
+    * Runs on the executor. With one target every row goes to it whole;
+    * with N (the shards) the row's LAST column is the precomputed shard
+    * id (pmod(xxhash64(shardCol), shards), codegen'd upstream) and is
+    * not written. A target's stream opens at its first row and all stay
+    * open for the single partition pass, so a partition opens at most
+    * min(targets, distinct targets present) connections — cap the total
+    * with numPartitions. A write-loop failure ABORTS every open stream
+    * (rollback — committing a partial partition would hide the data loss
+    * behind a later promote) and the original exception wins over any
+    * teardown error. */
+  private def copyPartition(sock: String, port: Int, db: String,
+      targets: Array[String], runId: String, partitionId: Int,
+      rows: Iterator[Row], batchRows: Int, user: String, password: String,
+      wire: Boolean): Unit = {
+    val routed = targets.length > 1
+    val streams = new Array[CopyStream](targets.length)
     var failed = false
     try {
       while (rows.hasNext) {
         val r = rows.next()
-        val sh = r.getLong(r.length - 1).toInt
-        if (streams(sh) == null)
-          streams(sh) = mkStream(wire, sock, port, db, shardName(table, sh),
-            runId, partitionId, batchRows, user, password)
-        streams(sh).writeRow(r, r.length - 1)
+        val i = if (routed) r.getLong(r.length - 1).toInt else 0
+        if (streams(i) == null) streams(i) =
+          if (wire) new WireCopy(sock, port, db, targets(i), runId,
+            partitionId, batchRows, user, password)
+          else new PsqlCopy(sock, port, db, targets(i), runId,
+            partitionId, batchRows, user, password)
+        streams(i).writeRow(r, if (routed) r.length - 1 else r.length)
       }
     } catch { case e: Throwable =>
-      // write-loop failure: abort EVERY open stream (rollback, process
-      // reaped) and let the original exception win
       failed = true
       streams.foreach(s => if (s != null) s.abort())
       throw e
@@ -513,47 +518,21 @@ object PgCopySink {
       if (first != null) throw first
     }
   }
-
-  /** Promote every shard's staged partitions — N CONCURRENT per-shard
-    * promotes, each one atomic and one round trip (its shard's
-    * truncate + inserts + staging drops + reap are one transaction, so
-    * no shard is ever torn).
-    * Shards commit independently, exactly like JDBC's parallel INSERT
-    * connections commit independently: the promote is a second full
-    * write pass through one backend per target, and serializing all N
-    * through a single transaction made the promote THE single-writer
-    * bottleneck sharding exists to remove (measured: the 3M-entity
-    * N=4 sweep ran 2× slower than N=1 under the one-transaction
-    * promote; SCALE.md round-13 has the phase split). */
-  private[sources] def promoteStagedSharded(sock: String, port: Int,
-      db: String, table: String, shards: Int, runId: String,
-      truncate: Boolean, isolation: String, user: String,
-      password: String, attach: Boolean = false): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = (0 until shards).map { i =>
-      val th = new Thread(() => {
-        try n.addAndGet(promoteStaged(sock, port, db, shardName(table, i),
-          runId, truncate, isolation, user, password, attach))
-        catch { case e: Throwable => errs.add(e) }
-      }, s"graft-pg-promote-s$i")
-      th.start(); th
-    }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-    n.get()
-  }
 }
 
 /** Exactly-once micro-batch loader for Structured Streaming's
-  * foreachBatch: COPY the batch into a per-batch staging table, then
-  * promote it into the target IFF this batchId is not yet recorded in
-  * the `<table>__commits` ledger — promote + ledger insert + staging
-  * drop run as ONE transaction, so a foreachBatch retry redelivering
-  * the same batchId (the failure mode foreachBatch documents) promotes
-  * nothing twice. Combined with the epoch-keyed PgCopySink staging
-  * underneath, the path is idempotent at both the task level and the
-  * micro-batch level.
+  * foreachBatch. One staging: a micro-batch fans out into the target's
+  * own epoch staging like any [[PgCopySink]] write, and its promote
+  * transaction carries the `<table>__commits` ledger guard — if the
+  * batchId is already recorded it drops this epoch's staging, otherwise
+  * it promotes and records the batchId; then it reaps as every promote
+  * does. Guard, promote, ledger insert and staging drops are ONE
+  * transaction, so a foreachBatch retry redelivering the same batchId
+  * (the failure mode foreachBatch documents) promotes nothing twice,
+  * and the epoch-keyed staging underneath makes every task retry
+  * idempotent too. A batch costs one ledger check, one COPY fan-out and
+  * one promote transaction.
+  * One writer per target, as for every [[PgCopySink]] target.
   */
 object PgStreamSink {
   /** Idempotently create the target's commit ledger. */
@@ -569,24 +548,14 @@ object PgStreamSink {
       batchId: Long, df: DataFrame): Unit = {
     // retry fast-path: a redelivered already-committed batch (crash
     // AFTER commit) must not re-run the Spark job and COPY just to
-    // have the transactional guard below discard it — one ledger
-    // SELECT makes that replay O(1) instead of O(batch)
+    // have the promote's guard discard it — one ledger SELECT makes
+    // that replay O(1) instead of O(batch). The guard stays even so: it
+    // is what makes a crash BETWEEN this check and the promote still
+    // exactly-once.
     val committed = PgCopySink.psqlValue(sock, port, db,
       s"""SELECT count(*) FROM "${table}__commits" WHERE batch_id = $batchId""")
-    if (committed.trim != "0") return
-    val stg = s"${table}__b$batchId"
-    PgCopySink.psqlValue(sock, port, db,
-      s"""DROP TABLE IF EXISTS "$stg"; CREATE TABLE "$stg" (LIKE "$table")""")
-    PgCopySink(sock, port, db, stg, perPartition = true).write(df)
-    // the guard stays even with the fast-path: it is what makes a
-    // crash BETWEEN the check and here still exactly-once
-    val guard =
-      s"""NOT EXISTS (SELECT 1 FROM "${table}__commits" WHERE batch_id = $batchId)"""
-    PgCopySink.psqlValue(sock, port, db,
-      s"""INSERT INTO "$table" SELECT * FROM "$stg" WHERE $guard;
-          INSERT INTO "${table}__commits" SELECT $batchId WHERE $guard;
-          DROP TABLE "$stg"""")
-    ()
+    if (committed.trim == "0")
+      PgCopySink(sock, port, db, table).stageAndPromote(df, Some(batchId))
   }
 }
 

@@ -459,8 +459,7 @@ object Sources {
       // path shared by driver and executors (NFS; an HDFS URI won't
       // work here — psql writes through the OS filesystem, not Hadoop).
       PgServer.roundTrip(s, t, schema, Seq("o_orderstatus"), agg) {
-        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-          perPartition = true).write(agg)
+        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(agg)
       }
     }),
 
@@ -482,7 +481,7 @@ object Sources {
       val t = "graft_order_stats_wire"
       PgServer.roundTrip(s, t, schema, Seq("o_orderstatus"), agg) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-          perPartition = true, wire = true).write(agg)
+          wire = true).write(agg)
       }
     }),
 
@@ -509,8 +508,7 @@ object Sources {
       PgServer.roundTrip(s, t, schema, Seq("o_custkey"), agg, drop = shards,
           from = shards.map(x => s"""SELECT * FROM "$x"""").mkString(" UNION ALL ")) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-          perPartition = true, numPartitions = 8,
-          shards = 3, shardCol = "o_custkey").write(agg)
+          numPartitions = 8, shards = 3, shardCol = "o_custkey").write(agg)
       }
     }),
 
@@ -533,8 +531,7 @@ object Sources {
       val t = "graft_order_by_cust_att"
       PgServer.roundTrip(s, t, schema, Seq("o_custkey"), agg) {
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-          perPartition = true, numPartitions = 8,
-          attachPromote = true).write(agg)
+          numPartitions = 8, attachPromote = true).write(agg)
       }
     }),
 

@@ -121,10 +121,9 @@ object Etl {
       // relation, never rows in the statements surface
       PgServer.roundTrip(s, t, targetSchema, Seq("id", "pid", "statement_id"),
           load, side = Seq(rt -> redirectsSchema)) {
-        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-          perPartition = true).write(load)
-        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, rt,
-          perPartition = true).write(redirectFrame(s))
+        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(load)
+        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, rt)
+          .write(redirectFrame(s))
       }
     })
   )

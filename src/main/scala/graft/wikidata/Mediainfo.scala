@@ -48,8 +48,7 @@ object Mediainfo {
       val t = "graft_wd_mediainfo"
       PgServer.roundTrip(s, t, Etl.statementsSchema("en_caption"),
           Seq("id", "pid", "statement_id"), load) {
-        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-          perPartition = true).write(load)
+        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(load)
       }
     }),
 

@@ -70,7 +70,7 @@ object PgShardProbe {
       }
     } else {
       PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-        perPartition = true, numPartitions = parts,
+        numPartitions = parts,
         shards = shards, shardCol = if (shards > 1) "id" else "",
         attachPromote = attach).write(load)
     }

@@ -92,6 +92,17 @@ class HarnessSpec extends AnyFunSuite {
     assert(hits("dropStaging") === Nil)
   }
 
+  test("the Postgres sink has one write path, one row encoder and one staging") {
+    val pg = "graft/sources/PgCopy.scala"
+    // one executor fan-out; the only \copy left is the round-trip export
+    assert(hits(".foreachPartition").count(_ == pg) === 1)
+    assert(hits("\\\\copy ") === Seq(pg))
+    // both transports share one CSV row loop
+    assert(hits("append(csvCell(") === Seq(pg))
+    // the stream sink stages into the target's own epoch staging
+    assert(!hits("__b$").contains(pg))
+  }
+
   test("src/main swallows no cleanup failure silently") {
     // a cleanup that fails leaves a WARN naming its table, partition or
     // socket, or rides the in-flight exception as a suppressed one

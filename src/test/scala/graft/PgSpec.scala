@@ -41,7 +41,7 @@ class PgSpec extends AnyFunSuite {
     assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === pgCount)
   }
 
-  test("per-partition COPY fan-out loads the same rows as the staged path") {
+  test("COPY fan-out loads every row with CSV fidelity and never promotes a stale epoch") {
     assume(PgServer.ensure(), "local Postgres unavailable")
     import org.apache.spark.sql.types._
     val t = "graft_pgspec_parallel"
@@ -65,8 +65,7 @@ class PgSpec extends AnyFunSuite {
     PgServer.psql(s"""CREATE TABLE "${t}__stg_deadbeef_p99"
       (p_partkey BIGINT, p_name TEXT, tricky TEXT)""")
     PgServer.psql(s"""INSERT INTO "${t}__stg_deadbeef_p99" VALUES (-1, 'stale', 'junk')""")
-    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true).write(df)
+    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(df)
     assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === df.count())
     // the stale row never reached the target...
     assert(PgServer.psql(
@@ -76,10 +75,9 @@ class PgSpec extends AnyFunSuite {
       s"""SELECT count(*) FROM pg_tables
           WHERE tablename LIKE '$t\\_\\_stg\\_%'""").get.toLong === 0L)
     // re-running the whole load after TRUNCATE lands identical counts
-    // (the batch-overwrite pattern under the staged fan-out)
+    // (the batch-overwrite pattern)
     PgServer.psql(s"""TRUNCATE "$t"""")
-    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true).write(df)
+    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(df)
     assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === df.count())
     assert(PgServer.psql(
       s"""SELECT count(*) FROM "$t" WHERE p_name IS NULL""").get.toLong
@@ -107,8 +105,8 @@ class PgSpec extends AnyFunSuite {
     Seq(t, lookAlike, other).foreach(x =>
       PgServer.psql(s"""CREATE TABLE "$x" (k BIGINT)"""))
     PgServer.psql(s"""INSERT INTO "$other" VALUES (7)""")
-    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true).write(spark.range(0, 10, 1, 2).toDF("k"))
+    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t)
+      .write(spark.range(0, 10, 1, 2).toDF("k"))
     assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === 10L)
     assert(stagingOf(t) === 0L)
     // another target's in-flight staging is not this write's to reap
@@ -130,8 +128,7 @@ class PgSpec extends AnyFunSuite {
       if (k == 39L) { Thread.sleep(1500); throw new IllegalStateException("boom") }
       k
     }
-    val sink = PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true)
+    val sink = PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t)
     intercept[org.apache.spark.SparkException](
       sink.write(spark.range(0, 40, 1, 2).select(boom(col("id")).as("k"))))
     assert(PgServer.psql(s"""SELECT string_agg(k::text, ',') FROM "$t"""").get === "-1")
@@ -140,6 +137,34 @@ class PgSpec extends AnyFunSuite {
     assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === 41L)
     assert(stagingOf(t) === 0L)
     PgServer.psql(s"""DROP TABLE "$t"""")
+  }
+
+  test("the ledger guard drops an already-committed batch's staging, target unchanged") {
+    assume(PgServer.ensure(), "local Postgres unavailable")
+    import graft.sources.PgStreamSink
+    val t = "graft_pgspec_guard"
+    PgServer.psql(s"""DROP TABLE IF EXISTS "$t", "${t}__commits"""")
+    PgServer.psql(s"""CREATE TABLE "$t" (k BIGINT)""")
+    PgStreamSink.ensureCommits(PgServer.sockDir, PgServer.port, PgServer.db, t)
+    def rows() = PgServer.psql(
+      s"""SELECT string_agg(k::text, ',' ORDER BY k) FROM "$t"""").get
+    def ledger() = PgServer.psql(
+      s"""SELECT string_agg(batch_id::text, ',') FROM "${t}__commits"""").get
+    val sink = PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t)
+    val batch = spark.range(0, 6, 1, 2).toDF("k")
+    sink.stageAndPromote(batch, Some(7L))
+    assert(rows() === "0,1,2,3,4,5")
+    assert(ledger() === "7")
+    // batch 7 redelivered past writeBatch's fast-path check: it stages
+    // again, and the promote transaction's guard discards it
+    sink.stageAndPromote(batch, Some(7L))
+    assert(PgCopySink.lastPromoted === 0)
+    assert(rows() === "0,1,2,3,4,5")
+    assert(ledger() === "7")
+    assert(stagingOf(t) === 0L)
+    assert(PgServer.psql(s"""SELECT count(*) FROM pg_tables
+        WHERE starts_with(tablename, '${t}__b')""").get.toLong === 0L)
+    PgServer.psql(s"""DROP TABLE "$t", "${t}__commits"""")
   }
 
   test("etl_wikidata_pg composes the full dump->Postgres pipeline") {
@@ -266,33 +291,30 @@ class PgSpec extends AnyFunSuite {
     // connections (JDBC numPartitions semantics) — observed as exactly
     // 2 staged partitions promoted
     PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, numPartitions = 2).write(df)
+      numPartitions = 2).write(df)
     assert(PgCopySink.lastPromoted === 2)
     assert(count() === n)
 
     // batchsize twin (3-row COPY statements) + truncate=true: the
     // reload REPLACES the previous load and is content-identical
     PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, batchRows = 3, truncate = true).write(df)
+      batchRows = 3, truncate = true).write(df)
     assert(count() === n)
     assert(sortedNames() === names)
 
     // default append mode (JDBC SaveMode.Append): second load doubles
-    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true).write(df)
+    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(df)
     assert(count() === 2 * n)
 
     // isolationLevel: explicit SERIALIZABLE promote transaction
     PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, truncate = true,
-      isolation = "SERIALIZABLE").write(df)
+      truncate = true, isolation = "SERIALIZABLE").write(df)
     assert(count() === n)
     assert(sortedNames() === names)
 
-    // driver-staged path carries truncate too
-    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      truncate = true).write(df)
-    assert(count() === n)
+    // one write path: perPartition stays an accepted argument, true only
+    intercept[IllegalArgumentException](PgCopySink(PgServer.sockDir,
+      PgServer.port, PgServer.db, t, perPartition = false))
   }
 
   test("truncate=true on EMPTY input still clears the target " +
@@ -304,13 +326,8 @@ class PgSpec extends AnyFunSuite {
     PgServer.psql(s"""INSERT INTO "$t" VALUES (1, 'stale')""")
     val empty = Tables.nation(spark, Spec.sf001)
       .select(col("n_nationkey"), col("n_name")).filter(lit(false))
-    // perPartition path: no partition stages rows, the promote still
-    // TRUNCATEs — JDBC truncate=true clears the table even on empty input
-    PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, truncate = true).write(empty)
-    assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === 0L)
-    // and the driver-staged path agrees
-    PgServer.psql(s"""INSERT INTO "$t" VALUES (2, 'stale2')""")
+    // no partition stages rows, the promote still TRUNCATEs — JDBC
+    // truncate=true clears the table even on empty input
     PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
       truncate = true).write(empty)
     assert(PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong === 0L)
@@ -341,7 +358,7 @@ class PgSpec extends AnyFunSuite {
           o_orderstatus, ',' ORDER BY o_orderkey)) FROM "${t}_s$i"""").get
 
     PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, shards = nSh, shardCol = "o_custkey").write(df)
+      shards = nSh, shardCol = "o_custkey").write(df)
     val counts = (0 until nSh).map(shardCount)
     // every input row lands in exactly one shard
     assert(counts.sum === df.count())
@@ -365,8 +382,7 @@ class PgSpec extends AnyFunSuite {
     // per-shard promotes leave no staging behind on any shard
     val digests = (0 until nSh).map(shardDigest)
     PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, shards = nSh, shardCol = "o_custkey",
-      truncate = true).write(df)
+      shards = nSh, shardCol = "o_custkey", truncate = true).write(df)
     assert((0 until nSh).map(shardCount) === counts)
     assert((0 until nSh).map(shardDigest) === digests)
     assert(PgServer.psql(
@@ -394,7 +410,7 @@ class PgSpec extends AnyFunSuite {
     PgServer.psql(PgDdl.createTable(t, schema))
     def count() = PgServer.psql(s"""SELECT count(*) FROM "$t"""").get.toLong
     val sink = PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, attachPromote = true)
+      attachPromote = true)
     sink.write(df)
     // reads see every row through the parent, content-identical...
     assert(count() === n)
@@ -450,8 +466,7 @@ class PgSpec extends AnyFunSuite {
     val df = Tables.region(spark, Spec.sf001)
       .select(col("r_regionkey"), col("r_name"))
     PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-      perPartition = true, user = "graft_pw",
-      password = "graft-secret").write(df)
+      user = "graft_pw", password = "graft-secret").write(df)
     assert(asRole(s"""SELECT count(*) FROM "$t"""").toLong === df.count())
     assert(asRole(s"""SELECT tableowner FROM pg_tables
         WHERE tablename = '$t'""") === "graft_pw")
@@ -484,31 +499,35 @@ class PgSpec extends AnyFunSuite {
       PgServer.psql(PgDdl.createTable(t, schema))
       // batchRows exercises the COPY end/re-open inside one transaction
       PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-        perPartition = true, batchRows = 100, wire = w).write(df)
+        batchRows = 100, wire = w).write(df)
       digest(t)
     }
     assert(digests.head === digests(1))
     assert(digests.head.startsWith(df.count().toString + ":"))
-    // sharded fan-out through the wire multiplexer matches psql too
-    val nSh = 2
-    val shardDigests = Seq(false, true).map { w =>
-      val t = if (w) "graft_pgspec_wire_sh_jvm" else "graft_pgspec_wire_sh_psql"
+    // the sharded fan-out matches across transports too: two shards
+    // unbatched, and three shards whose every (partition, shard) stream
+    // re-opens its COPY each 5 rows
+    def dropAll(t: String, nSh: Int): Unit =
       (Seq(t) ++ (0 until nSh).map(i => s"${t}_s$i")).foreach { x =>
         PgServer.psql(s"""DROP TABLE IF EXISTS "$x" CASCADE""")
       }
-      PgServer.psql(PgDdl.createTable(t, schema))
-      PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-        perPartition = true, shards = nSh, shardCol = "p_partkey",
-        wire = w).write(df)
-      (0 until nSh).map(i => digest(s"${t}_s$i"))
+    Seq((2, 0), (3, 5)).foreach { case (nSh, br) =>
+      val shardDigests = Seq(false, true).map { w =>
+        val t = s"graft_pgspec_wire_sh${nSh}_${if (w) "jvm" else "psql"}"
+        dropAll(t, nSh)
+        PgServer.psql(PgDdl.createTable(t, schema))
+        PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
+          shards = nSh, shardCol = "p_partkey", batchRows = br,
+          wire = w).write(df)
+        val got = (0 until nSh).map(i => digest(s"${t}_s$i"))
+        dropAll(t, nSh)
+        got
+      }
+      assert(shardDigests.head === shardDigests(1))
+      assert(shardDigests.head.map(_.takeWhile(_ != ':').toLong).sum
+        === df.count())
     }
-    assert(shardDigests.head === shardDigests(1))
-    Seq("graft_pgspec_wire_jvm", "graft_pgspec_wire_psql",
-      "graft_pgspec_wire_sh_jvm", "graft_pgspec_wire_sh_psql").foreach { t =>
-      PgServer.psql(s"""DROP TABLE IF EXISTS "$t" CASCADE""")
-      (0 until nSh).foreach(i =>
-        PgServer.psql(s"""DROP TABLE IF EXISTS "${t}_s$i" CASCADE"""))
-    }
+    Seq("graft_pgspec_wire_jvm", "graft_pgspec_wire_psql").foreach(dropAll(_, 0))
   }
 
   test("wire client authenticates via SCRAM-SHA-256 over TCP and the " +
@@ -559,11 +578,9 @@ class PgSpec extends AnyFunSuite {
         PgServer.psql(s"""GRANT ALL ON TABLE "$t" TO graft_pw""")
         if (wire)
           PgCopySink("127.0.0.1", PgServer.port, PgServer.db, t,
-            perPartition = true, wire = true, user = "graft_pw",
-            password = "graft-secret").write(df)
+            wire = true, user = "graft_pw", password = "graft-secret").write(df)
         else
-          PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-            perPartition = true).write(df)
+          PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t).write(df)
         digest(t)
       }
     assert(flatDigests.head === flatDigests(1))
@@ -580,11 +597,11 @@ class PgSpec extends AnyFunSuite {
       PgServer.psql(s"""GRANT ALL ON TABLE "$t" TO graft_pw""")
       if (wire)
         PgCopySink("127.0.0.1", PgServer.port, PgServer.db, t,
-          perPartition = true, shards = nSh, shardCol = "n_nationkey",
+          shards = nSh, shardCol = "n_nationkey",
           wire = true, user = "graft_pw", password = "graft-secret").write(df)
       else
         PgCopySink(PgServer.sockDir, PgServer.port, PgServer.db, t,
-          perPartition = true, shards = nSh, shardCol = "n_nationkey").write(df)
+          shards = nSh, shardCol = "n_nationkey").write(df)
       (0 until nSh).map(i => digest(s"${t}_s$i"))
     }
     assert(shardDigests.head === shardDigests(1))
