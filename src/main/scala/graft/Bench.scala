@@ -53,17 +53,22 @@ object Bench {
     // but SHUFFLE BYTES are a deterministic function of plan + data —
     // a changed byte count is a changed plan (or changed input),
     // never box noise. The final pass records each key's KeyRecord
-    // (shuffle, spill, jobs, stages, tasks, executor and job wall
-    // time, rows) and bench_detail.json carries it per key.
+    // (shuffle, spill, jobs, stages, tasks, executor, GC and job wall
+    // time, codegen compiles, rows) and bench_detail.json carries it per
+    // key. Keys run one at a time, so the JVM-wide compile count is the
+    // key's own.
     val metrics = new Harness.KeyMetrics(spark.sparkContext)
     val recordByKey = scala.collection.mutable.Map.empty[String, Harness.KeyRecord]
     val selected = Harness.keys()
     // Steady-state timing: three full passes over the suite, median per
     // query, with a different deterministic shuffle of the query order each
-    // pass. Shuffling decorrelates one query's GC/codegen debris from a
-    // fixed neighbor; the median resists the ±50% single-run noise this
-    // box exhibits without rewarding a lucky cold-cache outlier the way
-    // min would under only two samples.
+    // pass. Shuffling decorrelates one query's GC debris from a fixed
+    // neighbor; the median resists the ±50% single-run noise this box
+    // exhibits without rewarding a lucky cold-cache outlier the way min
+    // would under only two samples. Warm samples do not recompile: the
+    // generated-class cache GraftExtensions sizes holds every class of a
+    // pass, so only a key's first run pays Janino (codegen_compiles in
+    // bench_detail.json shows what a warm run still compiles).
     val keys = selected.keys.toVector
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
@@ -219,11 +224,13 @@ object Bench {
     val rows = results.toSeq.sortBy(-_._2).map { case (k, v) =>
       val (c, wm) = coldWarm.getOrElse(k, (-1.0, -1.0))
       val r = recordByKey.getOrElse(k,
-        Harness.KeyRecord(-1, -1, -1, -1, -1, -1, -1, -1))
+        Harness.KeyRecord(-1, -1, -1, -1, -1, -1, -1, -1, -1, -1))
       s""""$k":{"med":${fmt(v)},"cold":${fmt(c)},"warm":${fmt(wm)},""" +
         s""""shr":${r.shr},"shw":${r.shw},"spill":${r.spill},""" +
         s""""jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks},""" +
-        s""""exec_ms":${r.execMs},"job_wall_ms":${r.jobWallMs},"rows":${r.rows}}"""
+        s""""exec_ms":${r.execMs},"gc_ms":${r.gcMs},""" +
+        s""""job_wall_ms":${r.jobWallMs},"codegen_compiles":${r.compiles},""" +
+        s""""rows":${r.rows}}"""
     }
     writeFile(detailPath, s"""{"ts":"$stamp","src":"$srcHash","sf":"$sfDir",""" +
       s""""passes":$passes,"cpus":${Harness.cpus},"shuffle":${Harness.shuffle},""" +

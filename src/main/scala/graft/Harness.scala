@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -19,8 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    typo'd or empty list fails loudly instead of running nothing.
   *  - [[warm]]: first-touch of every fixture table, so the first timed
   *    key does not absorb footer reads and codegen.
-  *  - [[KeyMetrics]]: per-key jobs/stages/tasks/executor time/job wall
-  *    and shuffle read/write/spill from one listener.
+  *  - [[KeyMetrics]]: per-key jobs/stages/tasks/executor time/GC
+  *    time/job wall, shuffle read/write/spill and codegen compiles from
+  *    one listener.
   *
   * The key-looping harnesses (Bench, Verify, Explain) call
   * `Ckpt.releaseScratch()` after each key.
@@ -101,21 +103,26 @@ object Harness {
       }
     }
 
-  /** One key's cost. `rows` is -1 until [[KeyMetrics.measure]] sets it. */
+  /** One key's cost. `rows` is -1 until [[KeyMetrics.measure]] sets it.
+    * `gcMs` is the stages' summed task JVM GC time. `compiles` counts
+    * the classes Janino compiled, i.e. misses of Spark's generated-class
+    * cache; the counter is JVM-wide, so it is exact only while keys run
+    * one at a time, as Bench runs them. */
   final case class KeyRecord(jobs: Long, stages: Long, tasks: Long,
-      execMs: Long, jobWallMs: Long, shr: Long, shw: Long, spill: Long,
-      rows: Long = -1L) {
+      execMs: Long, gcMs: Long, jobWallMs: Long, shr: Long, shw: Long,
+      spill: Long, compiles: Long, rows: Long = -1L) {
     def -(o: KeyRecord): KeyRecord = KeyRecord(jobs - o.jobs,
-      stages - o.stages, tasks - o.tasks, execMs - o.execMs,
-      jobWallMs - o.jobWallMs, shr - o.shr, shw - o.shw, spill - o.spill)
+      stages - o.stages, tasks - o.tasks, execMs - o.execMs, gcMs - o.gcMs,
+      jobWallMs - o.jobWallMs, shr - o.shr, shw - o.shw, spill - o.spill,
+      compiles - o.compiles)
   }
 
   /** Running totals over every job and stage of the context; a key's
     * record is the difference of two drained snapshots. Listener events
     * post asynchronously, so [[snapshot]] drains the bus first. */
   final class KeyMetrics(sc: SparkContext) extends SparkListener {
-    private val jobs, stages, tasks, execMs, jobWallMs, shr, shw, spill =
-      new AtomicLong
+    private val jobs, stages, tasks, execMs, gcMs, jobWallMs, shr, shw,
+      spill = new AtomicLong
     private val jobStart = new ConcurrentHashMap[Int, java.lang.Long]()
     sc.addSparkListener(this)
 
@@ -131,6 +138,7 @@ object Harness {
       val m = e.stageInfo.taskMetrics
       if (m != null) {
         execMs.addAndGet(m.executorRunTime)
+        gcMs.addAndGet(m.jvmGCTime)
         shr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         shw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
@@ -139,8 +147,9 @@ object Harness {
 
     def snapshot(): KeyRecord = {
       org.apache.spark.GraftListenerBridge.drain(sc)
-      KeyRecord(jobs.get, stages.get, tasks.get, execMs.get, jobWallMs.get,
-        shr.get, shw.get, spill.get)
+      KeyRecord(jobs.get, stages.get, tasks.get, execMs.get, gcMs.get,
+        jobWallMs.get, shr.get, shw.get, spill.get,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
     }
 
     /** Record of `action`, which returns the key's row count. */

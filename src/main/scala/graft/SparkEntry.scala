@@ -12,8 +12,11 @@ import graft.operators._
   * (`.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`): it is the one place
   * the native functions (dot_f, dotfx, l2fx, heavy_hitters, topk_by,
-  * kmv_bottomk, bottomk_distinct_by) and the as-of join strategy are
-  * registered, and no query registers them itself.
+  * kmv_bottomk, bottomk_distinct_by, simhash64) and the as-of join
+  * strategy are registered, and no query registers them itself. Only
+  * the `.withExtensions` form also sizes the generated-class cache (see
+  * `GraftExtensions`); a `spark.sql.extensions=` session has to set
+  * `GraftExtensions.CodegenCacheConf` itself.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

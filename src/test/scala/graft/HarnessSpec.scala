@@ -44,7 +44,43 @@ class HarnessSpec extends AnyFunSuite {
     assert(r.shw > 0, r)
     assert(r.shr > 0, r)
     assert(r.jobWallMs >= 0 && r.execMs >= 0 && r.spill >= 0, r)
+    assert(r.gcMs >= 0 && r.compiles >= 0, r)
     assert(r.rows === q(spark, Spec.sf001).count())
+  }
+
+  test("GraftExtensions sets the codegen cache default only when it is unset") {
+    import GraftExtensions.{CodegenCacheConf, CodegenCacheEntries}
+    val saved = Option(System.getProperty(CodegenCacheConf))
+    def applyExt(): Unit =
+      new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+    try {
+      System.clearProperty(CodegenCacheConf)
+      applyExt()
+      assert(System.getProperty(CodegenCacheConf) === CodegenCacheEntries.toString)
+      System.setProperty(CodegenCacheConf, "123")
+      applyExt()
+      assert(System.getProperty(CodegenCacheConf) === "123")
+    } finally saved match {
+      case Some(v) => System.setProperty(CodegenCacheConf, v)
+      case None => System.clearProperty(CodegenCacheConf)
+    }
+  }
+
+  test("a warm pass over more than 100 generated classes compiles none of them") {
+    // Spark's default cache holds 100 classes; a cyclic pass over 150
+    // distinct ones (each projection inlines its own literals) misses
+    // on every lookup unless the session sized the cache
+    val n = 150
+    def pass(): Long = (1 to n).map { i =>
+      spark.range(3).selectExpr(s"id * ${1000 + i} + $i AS x")
+        .collect().length.toLong
+    }.sum
+    val m = new Harness.KeyMetrics(spark.sparkContext)
+    val (cold, warm) = try (m.measure(pass()), m.measure(pass()))
+      finally m.close()
+    assert(cold.compiles >= n, cold)
+    assert(warm.compiles === 0, warm)
+    assert(warm.rows === 3L * n)
   }
 
   /** One entry per occurrence of `needle` in src/main: the file's path
@@ -66,6 +102,16 @@ class HarnessSpec extends AnyFunSuite {
   test("src/main builds a session in one place and reads SPARK_GRAFT_CPUS once") {
     assert(hits("SparkSession.builder()") === Seq("graft/Harness.scala"))
     assert(hits("\"SPARK_GRAFT_CPUS\"") === Seq("graft/Harness.scala"))
+  }
+
+  test("the codegen cache size is named in one place") {
+    assert(hits("spark.sql.codegen.cache.maxEntries") ===
+      Seq("graft/GraftExtensions.scala"))
+    assert(hits("CodegenCacheEntries = ") === Seq("graft/GraftExtensions.scala"))
+    // a build-level -D would hide whether the builder-time default works
+    Seq("build.sbt", "perfbench/build.sbt").foreach { f =>
+      assert(!Files.readString(Paths.get(f)).contains("codegen.cache"), f)
+    }
   }
 
   test("src/main has one fixture reader, one bz2 writer and one Postgres export") {
