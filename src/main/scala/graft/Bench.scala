@@ -49,14 +49,20 @@ object Bench {
     // doesn't absorb session initialization cost.
     Harness.warm(spark, sfDir)
     // Plan-shape regression tracking: wall-clock on this box drifts
-    // up to ±50% per key across rounds (BASELINE.md warm-band table),
-    // but SHUFFLE BYTES are a deterministic function of plan + data —
-    // a changed byte count is a changed plan (or changed input),
-    // never box noise. The final pass records each key's KeyRecord
-    // (shuffle, spill, jobs, stages, tasks, executor, GC and job wall
-    // time, codegen compiles, rows) and bench_detail.json carries it per
-    // key. Keys run one at a time, so the JVM-wide compile count is the
-    // key's own.
+    // up to ±50% per key across rounds (BASELINE.md warm-band table).
+    // Shuffle bytes drift far less, but they are not exact:
+    // wd_property_stats over a 3,000-entity GenWd zipf dump (local[4],
+    // four runs in each of two JVMs, through KeyMetrics) wrote
+    // 668,031–675,312 B, about 1%, within one JVM as much as across
+    // JVMs, while jobs (5), stages (5), tasks (8) and shuffle records
+    // (32,935) held every run; likely a reducer's row order follows
+    // block-fetch order, and compressed sizes follow row order. So a
+    // byte move of about 1% is noise, while a larger one, or any change
+    // of record count, points at the plan or the input. The final pass
+    // records each key's KeyRecord (shuffle, spill, jobs, stages,
+    // tasks, executor, GC and job wall time, codegen compiles, rows)
+    // and bench_detail.json carries it per key. Keys run one at a time,
+    // so the JVM-wide compile count is the key's own.
     val metrics = new Harness.KeyMetrics(spark.sparkContext)
     val recordByKey = scala.collection.mutable.Map.empty[String, Harness.KeyRecord]
     val selected = Harness.keys()

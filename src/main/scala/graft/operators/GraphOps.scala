@@ -75,7 +75,7 @@ object GraphOps {
     * the newly-dead node set, which AQE broadcasts while it fits; the
     * evolving checkpointed frame is the node-sized degree table. */
   private def kcorePeel(s: SparkSession, e: DataFrame, dg: DataFrame,
-      kth: Long, converge: Boolean, cap: Int): DataFrame = {
+      kth: Long): DataFrame = {
     val ck = Ckpt.loop(s)
     var deg = ck.df(dg)
     def dead: DataFrame = deg.filter(col("degree") < kth).select("node")
@@ -92,15 +92,7 @@ object GraphOps {
         .select(col("node"),
           (col("degree") - coalesce(col("minus"), lit(0L))).as("degree")))
     }
-    if (converge) {
-      var rounds = 0
-      while (dead.limit(1).count() > 0 && rounds < cap) {
-        step()
-        rounds += 1
-      }
-    } else {
-      for (_ <- 1 to KCoreRounds) step()
-    }
+    for (_ <- 1 to KCoreRounds) step()
     // final induction by the last survivor set: drop the last dead
     // generation's edges; nodes isolated by it leave the output
     step()
@@ -212,9 +204,7 @@ object GraphOps {
   }
 
   /** One damped fixed-point PageRank update: contribution fan-out on
-    * the symmetric edges, dst-keyed sum, exact integer damping. Shared
-    * by the fixed-unroll (oracle-replayed) and run-to-convergence
-    * modes of graph_pagerank so the two can never drift. */
+    * the symmetric edges, dst-keyed sum, exact integer damping. */
   private def prStep(dg: DataFrame, u: DataFrame, r: DataFrame): DataFrame = {
     val sums = u.join(r, col("src") === col("node"))
       .select(col("dst"), expr("fx div degree").as("c"))
@@ -361,43 +351,10 @@ object GraphOps {
       // across engines and accumulation orders. One dst-keyed shuffle
       // per iteration; the deg/und exchanges are identical across
       // iterations, so AQE reuses them instead of rescanning.
-      //
-      // Config gate (spark.graft.pagerank.converge=true): run to a
-      // fixed point instead — iterate until the max |Δfx| across nodes
-      // drops under spark.graft.pagerank.tolFx (default Q/10⁴ ≈ 1e-4
-      // rank units; EXACT integer comparison, so "converged" can't
-      // drift with accumulation order), with the components fixpoint's
-      // checkpoint discipline truncating lineage per round. The
-      // DECLARED key keeps the fixed unroll so the oracle can replay
-      // it; the gate is the production mode for graphs whose diameter
-      // is unknown up front.
       val dg = degrees(s, d)
       val u = und(s, d)
       var r = dg.select(col("node"), col("degree"), lit(Qfx).as("fx"))
-      if (s.conf.get("spark.graft.pagerank.converge", "false").toBoolean) {
-        val tol = s.conf.get("spark.graft.pagerank.tolFx",
-          (Qfx / 10000L).toString).toLong
-        val cap = s.conf.get("spark.graft.pagerank.maxIters", "50").toInt
-        // one loop: run-to-convergence is exactly the unbounded-rounds
-        // case where per-round durable checkpoints pile up (delta
-        // reads generations N and N-1 — both inside keep-last-2)
-        val ck = Ckpt.loop(s)
-        var iters = 0
-        var done = false
-        while (!done && iters < cap) {
-          val nxt = ck.df(prStep(dg, u, r))
-          val delta = nxt.as("n")
-            .join(r.select(col("node").as("pn"), col("fx").as("pfx")),
-              col("node") === col("pn"))
-            .agg(max(abs(col("fx") - col("pfx"))).as("d"))
-            .head().getLong(0)
-          done = delta <= tol
-          r = nxt
-          iters += 1
-        }
-      } else {
-        for (_ <- 1 to Iters) r = prStep(dg, u, r)
-      }
+      for (_ <- 1 to Iters) r = prStep(dg, u, r)
       r.select(col("node"),
           (col("fx").cast(DoubleType) / Qfx.toDouble).as("pr"))
         .orderBy("node")
@@ -470,8 +427,8 @@ object GraphOps {
       // not). Each round drops nodes whose CURRENT induced degree < k
       // and recomputes degrees on the induced subgraph. Rounds are
       // FIXED (like PageRank's Iters) so the oracle replays the exact
-      // peel depth; full convergence at 100 TB = the converge gate
-      // below with the components fixpoint's change-count discipline.
+      // peel depth; full convergence at 100 TB loops the peel step
+      // until the dead set is empty.
       //
       // Round-14 restructure (found by the sf10 decade sweep): DELTA
       // peeling — degrees are MAINTAINED, never recomputed. The old
@@ -511,9 +468,7 @@ object GraphOps {
       val kth = dg.agg(
         ceil(expr("percentile(degree, 0.5)") * lit(0.7))
           .cast(LongType).as("kth")).head().getLong(0)
-      val converge = s.conf.get("spark.graft.kcore.converge", "false").toBoolean
-      val cap = s.conf.get("spark.graft.kcore.maxRounds", "50").toInt
-      kcorePeel(s, e, dg, kth, converge, cap)
+      kcorePeel(s, e, dg, kth)
     }),
 
     "graph_link_predict" -> ((s, d) => {

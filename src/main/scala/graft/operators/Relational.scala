@@ -340,11 +340,16 @@ object Relational {
       // not results (both paths compute the same join), so the oracle
       // stays the plain-join SQL. (AQE's OptimizeSkewedJoin is the
       // automatic runtime variant; this is the plan-time hand-tool.)
-      // MEASURED (SkewProbe, round 10, 40%-skewed twin): AQE's runtime
-      // split beats this recipe at both sf1 and sf3 — the probe/semi/
-      // anti passes cost more than the straggler they remove. Use AQE
-      // first; this shape earns its keep only where AQE cannot split
-      // (skewed agg keys, order-constrained SMJ, known hot lists).
+      // MEASURED (SkewProbe on a 40%-skewed twin, commit 9503c2d; the
+      // probe is recoverable from 8993cd5, and OperatorSpec pins the
+      // twin's result equality): AQE's runtime split beat this recipe
+      // at both sf1 and sf3. That twin's hot keys missed the row sample
+      // below (SCALE.md, "Deleted probes"), so the recipe's timing there
+      // is its probe and routing passes without hot-key salting. Use
+      // AQE first; this shape earns its keep only where AQE cannot
+      // split (skewed agg keys, order-constrained SMJ, known hot lists).
+      // The sample hashes (l_orderkey, l_linenumber), so it samples rows
+      // only while that pair is unique, as it is in TPC-H lineitem.
       val salts = 8
       val fact = Tables.lineitem(s, d)
       val dim = Tables.orders(s, d)

@@ -147,7 +147,6 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
     // per-run epoch: promote only ever promotes THIS run's staging
     // tables; other epochs' leftovers (a zombie's included) are reaped
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val t0 = System.nanoTime()
     routed.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.hasNext)
         PgCopySink.copyPartition(sock, p, database, ts, runId,
@@ -157,7 +156,6 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
     PgCopySink.lastPromoted = PgCopySink.promoteAll(targets, t =>
       PgCopySink.promoteStaged(sockDir, port, db, t, runId, truncate,
         isolation, user, password, attachPromote, batch))
-    PgCopySink.lastStageSec = (t1 - t0) / 1e9
     PgCopySink.lastPromoteSec = (System.nanoTime() - t1) / 1e9
   }
 }
@@ -201,12 +199,9 @@ object PgCopySink {
     * through; a metrics sink would read the same). */
   @volatile var lastPromoted: Int = -1
 
-  /** Phase timing of the most recent write: executor COPY fan-out
-    * seconds vs promote seconds. The split is what the shard-scaling
-    * analysis reads — a flat total with a growing stage share means the
-    * promote, not the COPY, is the ceiling (measured in SCALE.md
-    * round-13). */
-  @volatile var lastStageSec: Double = -1
+  /** Promote seconds of the most recent write, the part of a load's
+    * wall time after the executor COPY fan-out (perfbench's
+    * `sources.promote_s`). */
   @volatile var lastPromoteSec: Double = -1
 
   private[sources] def pwEnv(password: String): Seq[(String, String)] =

@@ -5,7 +5,7 @@ package graft.streaming
   * step() fold as the batch key — never a row list; the only sort is
   * over ONE micro-batch's rows for the key. Lives in main (not the
   * spec) because both StreamingSpec's parity tests and the
-  * StreamRate sustained-throughput probe drive it.
+  * StreamSoak `tws` shape drive it.
   */
 class TwsSessionizer
     extends org.apache.spark.sql.streaming.StatefulProcessor[

@@ -80,8 +80,8 @@ object Etl {
   /** The dump → warehouse-row frame the load writes: bz2 ingest →
     * explicit-schema parse → claims flatten → typed extraction →
     * en-label enrichment, in DDL column order. Factored out so the
-    * shard-fan-out probe (PgShardProbe) measures EXACTLY the declared
-    * key's Spark side, not a reconstruction of it. A GenWd bz2 dump
+    * specs and perfbench's `wd_load` run EXACTLY the declared key's
+    * Spark side, not a reconstruction of it. A GenWd bz2 dump
     * (spark.graft.wd.bz2) replaces the staged fixture bz2 for scale
     * measurement; unset = fixture. The shared dump reader accepts the
     * array-wrapped public layout too (auto-detected). Redirect stubs

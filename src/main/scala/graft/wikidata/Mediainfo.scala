@@ -12,7 +12,7 @@ import graft.sources.{PgCopySink, PgServer}
   * no aliases/sitelinks. Same recipe as the lexeme family — its own
   * `Wd.Family` (fixture, override confs) and flatten keys — read
   * through the shared `Wd.readDump`, so the array-wrapped Commons dump
-  * layout and per-scan autosplit come for free.
+  * layout comes for free.
   *
   * At 100 TB (the real mediainfo dump is ~100 GB, Commons-wide): the
   * same explicit-schema parse + codegen'd explode chains with no

@@ -121,52 +121,6 @@ object Wd {
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
-  /** Conf-gated split-size autoscaling (round-15 verdict 6; OFF by
-    * default so the driver gate's plans are untouched). The zipf probe
-    * measured wd_property_stats' residual e≈1.2 as partly PER-TASK
-    * VOLUME at the fixture's fixed bz2 split count: a dump much
-    * smaller than cpus×128 MB under-parallelizes the parse. With
-    * `spark.graft.wd.autosplit=true` the dump read targets
-    * input/(4×parallelism) bytes per split, clamped to [4 MiB, 128 MiB]
-    * — at 100 TB the clamp leaves the default untouched; on
-    * probe-sized dumps every core gets work.
-    * Round-16 (r15 advice 4 / what's-wrong 3): the knob now lives in
-    * an isolated CHILD session (see [[readerSession]]) — the caller's
-    * `spark.sql.files.maxPartitionBytes` is never touched, so the
-    * shrunken split size can no longer leak into unrelated scans
-    * later in the same session. */
-  private def autosplitOn(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.wd.autosplit")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-
-  /** Per-split byte target for an autosplit dump read: input over
-    * 4× parallelism, clamped. Pure math, unit-tested directly. */
-  private[graft] def splitTarget(bytes: Long, par: Int): Long =
-    math.min(128L << 20,
-      math.max(4L << 20, bytes / (4L * math.max(1, par))))
-
-  /** The session the dump read should plan in: the caller's, or — with
-    * autosplit on — an ISOLATED child session (`newSession()`: private
-    * SQLConf, shared SparkContext) carrying the shrunken
-    * maxPartitionBytes. This is the join_bloom_pruned per-workload-
-    * tuning pattern: the split knob reaches the file scan without
-    * mutating the caller's session (r15 advice 4), and it applies to
-    * BOTH the native json scan and the text scan of the array path.
-    * (A textFile(minPartitions) formulation was measured and REJECTED:
-    * on a 1M-entity bz2 dump it ran ×1.6 SLOWER than no autosplit at
-    * all — RDD-line ingest forfeits the file-source's batched reader.) */
-  private def readerSession(s: SparkSession, path: String): SparkSession =
-    if (!autosplitOn(s)) s
-    else {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bytes = fs.getContentSummary(p).getLength
-      val child = s.newSession()
-      child.conf.set("spark.sql.files.maxPartitionBytes",
-        splitTarget(bytes, s.sparkContext.defaultParallelism).toString)
-      child
-    }
-
   /** Dump file-format detection (round-16 verdict 1). The LIVE export
     * and our fixtures are clean NDJSON, but the published
     * `latest-all.json[.bz2]` is ONE JSON ARRAY: a `[` line, one entity
@@ -242,10 +196,9 @@ object Wd {
   private val WrapCol = "_graft_wrapper"
 
   /** Read a dump at `path` with `schema`, handling the public file
-    * shapes. Clean NDJSON keeps the native json scan — with autosplit
-    * on, the SAME native scan planned in the isolated child session
-    * (round-16 advice 1). The array-wrapped format ALSO reads through
-    * the native json file source (round-17 verdict 2): the scan
+    * shapes. Clean NDJSON keeps the native json scan. The array-wrapped
+    * format ALSO reads through the native json file source (round-17
+    * verdict 2): the scan
     * carries a PERMISSIVE corrupt-record column, so the `[`/`]`
     * wrapper lines parse as corrupt and one codegen'd filter drops
     * exactly them — a genuinely malformed entity line stays visible as
@@ -265,19 +218,21 @@ object Wd {
     * round-17). `.gz` dumps decompress transparently on either path
     * but as ONE split per file — see [[rechunk]] for the bounded
     * re-chunk that parallelizes the most-downloaded dump form. At
-    * 100 TB both paths are one narrow parse pipeline, zero shuffle. */
+    * 100 TB both paths are one narrow parse pipeline, zero shuffle.
+    * Split size is stock Spark's: a dump much smaller than cpus × 128 MB
+    * feeds every core with `spark.sql.files.minPartitionNum` set to
+    * about 4 × parallelism. */
   private[graft] def readDump(s: SparkSession, path: String,
       schema: StructType): DataFrame = {
-    val rs = readerSession(s, path)
     if (!isArrayDump(s, path))
-      rs.read.schema(schema).json(path)
+      s.read.schema(schema).json(path)
     else {
       require(!schema.fieldNames.contains(WrapCol),
         s"dump schema may not contain $WrapCol")
       require(schema.fieldNames.contains("id"),
         "dump schema must carry the entity id")
       val t = trim(col(WrapCol))
-      rs.read
+      s.read
         .schema(StructType(schema.fields :+ StructField(WrapCol, StringType)))
         .option("columnNameOfCorruptRecord", WrapCol)
         .json(path)

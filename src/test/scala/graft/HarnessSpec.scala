@@ -83,20 +83,71 @@ class HarnessSpec extends AnyFunSuite {
     assert(warm.rows === 3L * n)
   }
 
+  private val root = Paths.get("src/main/scala")
+
+  /** The files under `dir` whose name ends with `suffix`, path-sorted. */
+  private def files(dir: Path, suffix: String): Seq[Path] = {
+    assert(Files.isDirectory(dir), s"run from the repo root: $dir")
+    val st = Files.walk(dir)
+    try st.iterator().asScala.filter(_.toString.endsWith(suffix)).toList
+      .sortBy(_.toString)
+    finally st.close()
+  }
+
   /** One entry per occurrence of `needle` in src/main: the file's path
     * relative to src/main/scala. */
-  private def hits(needle: String): Seq[String] = {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repo root: $root")
-    val files: Seq[Path] = {
-      val st = Files.walk(root)
-      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally st.close()
-    }
-    files.sortBy(_.toString).flatMap { f =>
+  private def hits(needle: String): Seq[String] =
+    files(root, ".scala").flatMap { f =>
       val n = Pattern.quote(needle).r.findAllMatchIn(Files.readString(f)).size
       Seq.fill(n)(root.relativize(f).toString)
     }
+
+  /** The objects in src/main that define `def main(`, named relative to
+    * package `graft`. */
+  private lazy val mains: Set[String] = files(root, ".scala").flatMap { f =>
+    val src = Files.readString(f)
+    val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(src).map(_.group(1)).get
+    val objects = "(?m)^object (\\w+)".r.findAllMatchIn(src).toSeq
+    "def main\\(".r.findAllMatchIn(src).map { m =>
+      val obj = objects.filter(_.start < m.start).last.group(1)
+      s"$pkg.$obj".stripPrefix("graft.")
+    }
+  }.toSet
+
+  test("src/main has exactly the harness, generator and streaming soak mains") {
+    assert(mains === Set("Bench", "Verify", "Explain", "GenScale",
+      "wikidata.GenWd", "wikidata.Rechunk", "StreamSoak"))
+  }
+
+  test("src/main reads exactly the kept spark.graft.* keys") {
+    // every mode a key switches on is declared or gone: no conf that
+    // only a spec turns on
+    val keys = files(root, ".scala").flatMap { f =>
+      "\"spark\\.graft\\.([\\w.]+)\"".r.findAllMatchIn(Files.readString(f))
+        .map(_.group(1))
+    }.toSet
+    assert(keys === Set("checkpointDir", "stage.dir", "wd.path", "wd.bz2",
+      "wd.lexemes", "wd.mediainfo", "wd.mediainfo.bz2", "kmeans.coarseAssign"))
+  }
+
+  test("tools scripts parse and every recipe names a main that exists") {
+    val scripts = files(Paths.get("tools"), ".sh")
+    assert(scripts.nonEmpty)
+    scripts.foreach { f =>
+      val p = new ProcessBuilder("bash", "-n", f.toString)
+        .redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+      assert(p.waitFor() === 0, s"bash -n $f: $out")
+    }
+    val recipes = scripts ++ files(Paths.get("tools"), ".py") :+
+      Paths.get("README.md")
+    val named = recipes.flatMap { f =>
+      "(?:runMain|--class)\\s+graft\\.([\\w.]+)".r
+        .findAllMatchIn(Files.readString(f)).map(m => f -> m.group(1))
+    }
+    assert(named.exists(_._2 == "StreamSoak"), "no recipe runs the soak main")
+    val dangling = named.filterNot { case (_, m) => mains(m) }
+    assert(dangling.isEmpty, s"recipes name missing mains: $dangling")
   }
 
   test("src/main builds a session in one place and reads SPARK_GRAFT_CPUS once") {

@@ -449,11 +449,9 @@ class OperatorSpec extends AnyFunSuite {
   // run and the harness has called Ckpt.releaseScratch, every RDD the
   // loop persisted is handed back — in local mode and in durable mode.
   // A fresh stage dir per run makes the stored LPA labels rerun their
-  // loop; pagerank runs its converge mode (the declared unroll has no
-  // loop state to release).
+  // loop.
   for (k <- Seq("dedup_components", "graph_kcore", "graph_lpa",
-         "graph_pagerank", "graph_sssp", "graph_khop", "sample_kcenter",
-         "sim_mmr_rerank");
+         "graph_sssp", "graph_khop", "sample_kcenter", "sim_mmr_rerank");
        durable <- Seq(false, true)) {
     val mode = if (durable) "durable" else "local"
     test(s"loop release contract: $k persists nothing past releaseScratch ($mode)") {
@@ -461,7 +459,6 @@ class OperatorSpec extends AnyFunSuite {
       val ck = java.nio.file.Files.createTempDirectory("graft-rel-ck").toString
       try {
         spark.conf.set("spark.graft.stage.dir", stage)
-        spark.conf.set("spark.graft.pagerank.converge", "true")
         if (durable) spark.conf.set(Ckpt.DirConf, ck)
         Ckpt.releaseScratch()
         val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -473,8 +470,7 @@ class OperatorSpec extends AnyFunSuite {
           left.values.map(r => s"${r.id}:${r.getClass.getSimpleName}")
             .mkString(", "))
       } finally {
-        Seq("spark.graft.stage.dir", "spark.graft.pagerank.converge",
-          Ckpt.DirConf).foreach(spark.conf.unset)
+        Seq("spark.graft.stage.dir", Ckpt.DirConf).foreach(spark.conf.unset)
         Seq(stage, ck).foreach(p =>
           org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
       }
@@ -1415,60 +1411,6 @@ class OperatorSpec extends AnyFunSuite {
     // integer truncation; mass can only drift DOWN from N, and barely
     assert(mass <= n + 1e-6 && mass >= 0.95 * n, s"mass $mass for $n nodes")
     assert(rows.forall(_.getDouble(1) > 0.0), "ranks are strictly positive")
-  }
-
-  test("graph_pagerank converge mode reaches an integer fixed point at sf0.01") {
-    // Run-to-convergence gate: with tolFx=0 the loop must hit an EXACT
-    // integer fixed point (every node's fx unchanged by one more damped
-    // round) before the iteration cap — and that fixed point must
-    // differ from the 3-round unroll only within the tolerance the
-    // geometric 0.85-damping tail allows.
-    spark.conf.set("spark.graft.pagerank.converge", "true")
-    spark.conf.set("spark.graft.pagerank.tolFx", "0")
-    try {
-      val conv = SparkEntry.queries("graph_pagerank")(spark, Spec.sf01)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      spark.conf.set("spark.graft.pagerank.converge", "false")
-      val fixed = SparkEntry.queries("graph_pagerank")(spark, Spec.sf01)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(conv.keySet === fixed.keySet)
-      val n = conv.size.toDouble
-      val mass = conv.values.sum
-      assert(mass <= n + 1e-6 && mass >= 0.95 * n,
-        s"converged mass $mass for $n nodes")
-      // after round t the remaining movement is bounded by 0.85^t; the
-      // 3-round unroll must already be within that envelope of the
-      // fixed point (loose 2×0.85³ ≈ 1.23 absolute bound per node)
-      val maxDiff = conv.keysIterator
-        .map(k => math.abs(conv(k) - fixed(k))).max
-      assert(maxDiff <= 2 * math.pow(0.85, 3),
-        s"3-round unroll vs fixed point: max |Δpr| = $maxDiff")
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.converge")
-      spark.conf.unset("spark.graft.pagerank.tolFx")
-    }
-  }
-
-  test("graph_kcore converge mode peels to a stable core at sf0.01") {
-    spark.conf.set("spark.graft.kcore.converge", "true")
-    try {
-      val core = SparkEntry.queries("graph_kcore")(spark, Spec.sf01)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.set("spark.graft.kcore.converge", "false")
-      val fixedRounds = SparkEntry.queries("graph_kcore")(spark, Spec.sf01)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // converged core ⊆ 3-round peel (peeling is monotone)
-      assert(core.keySet.subsetOf(fixedRounds.keySet),
-        "converged core must be a subset of the bounded peel")
-      assert(core.nonEmpty, "k-core converged to the empty graph")
-      // stability: every surviving node's induced degree clears the
-      // SAME threshold the peel used (recomputed here from the full
-      // degree table, exactly as the query derives it)
-      val kth = math.ceil(graft.operators.GraphOps.testDegrees(spark, Spec.sf01)
-        .agg(expr("percentile(degree, 0.5)")).head().getDouble(0) * 0.7).toLong
-      assert(core.values.forall(_ >= kth),
-        s"unstable core: some induced degree < $kth")
-    } finally spark.conf.unset("spark.graft.kcore.converge")
   }
 
   test("Stage.inputStamp: stable for unchanged inputs, rotates on rewrite") {
@@ -2484,5 +2426,86 @@ class OperatorSpec extends AnyFunSuite {
       case _ =>
       }
     }
+  }
+
+  test("join_skew_salted on a 40%-skewed twin equals the plain join and AQE's skew split") {
+    // The fixtures are key-uniform; this twin routes 40% of lineitem
+    // onto the two smallest orderkeys (md5 routing, the same twin every
+    // run), so the salted recipe's hot path really carries rows. A
+    // routed row also gets a fresh line number: (l_orderkey,
+    // l_linenumber) stays the key the recipe's row sample hashes, where
+    // a twin that keeps the old line numbers leaves each hot key ~7
+    // distinct pairs and the sample usually misses it.
+    val twin = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    try {
+      Tables.names.filter(_ != "lineitem").foreach { t =>
+        java.nio.file.Files.createSymbolicLink(
+          java.nio.file.Paths.get(s"$twin/$t.parquet"),
+          java.nio.file.Paths.get(s"${Spec.sf001}/$t.parquet"))
+      }
+      val hotKeys = Tables.orders(spark, Spec.sf001)
+        .orderBy("o_orderkey").limit(2).collect().map(_.getLong(0))
+      val route = expr(Det.md5SliceExpr(
+        "concat(l_orderkey, ':', l_linenumber, ':skew')", 1, 12)) % 100
+      val src = Tables.lineitem(spark, Spec.sf001)
+      val r = col("_route")
+      src.withColumn("_route", route)
+        .withColumn("l_linenumber", when(r < 40,
+            (col("l_orderkey") * 8 + col("l_linenumber"))
+              .cast(src.schema("l_linenumber").dataType))
+          .otherwise(col("l_linenumber")))
+        .withColumn("l_orderkey", when(r < 20, lit(hotKeys(0)))
+          .when(r < 40, lit(hotKeys(1))).otherwise(col("l_orderkey")))
+        .drop("_route")
+        // several files, so AQE has map outputs to split a hot partition by
+        .repartition(8, col("l_linenumber"))
+        .write.parquet(s"$twin/lineitem.parquet")
+      val li = Tables.lineitem(spark, twin)
+      val hotRows = li.filter(col("l_orderkey").isin(hotKeys.map(Long.box): _*)).count()
+      assert(hotRows >= 0.35 * li.count(), s"twin is not skewed: $hotRows hot rows")
+      // the key's own hot-key probe must pick both skewed keys, or the
+      // salted arm never runs and the pin is vacuous
+      val probed = li.filter(pmod(xxhash64(lit("skew-probe"), col("l_orderkey"),
+          col("l_linenumber")), lit(100L)) === 0L)
+        .groupBy("l_orderkey").count()
+        .orderBy(col("count").desc, col("l_orderkey")).limit(16)
+        .collect().map(_.getLong(0)).toSet
+      assert(hotKeys.forall(probed),
+        s"hot list $probed misses ${hotKeys.mkString(",")}")
+
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toString).toSeq
+      val salted = rows(SparkEntry.queries("join_skew_salted")(spark, twin))
+      val sqlS = spark.newSession()
+      Tables.registerAll(sqlS, twin)
+      assert(salted === rows(sqlS.sql(SparkEntry.oracleSql("join_skew_salted"))))
+      // plain shuffle join with AQE's runtime skew split, thresholds
+      // scaled to fixture bytes; 32 partitions so a hot partition is
+      // more than 5× the median
+      val aqe = spark.newSession()
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.shuffle.partitions" -> "32",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+        .foreach { case (k, v) => aqe.conf.set(k, v) }
+      val aqeDf = Tables.lineitem(aqe, twin)
+        .join(Tables.orders(aqe, twin), col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"), Det.sumMoney(col("l_quantity")).as("sum_qty"))
+        .orderBy("o_orderpriority")
+      assert(salted === rows(aqeDf))
+      assert(aqeDf.queryExecution.executedPlan.toString.contains("skew=true"),
+        "AQE did not split the skewed join")
+      // rerouting moves rows between priorities but loses none: the
+      // totals match the key at the original fixture
+      def totals(rs: Seq[org.apache.spark.sql.Row]): (Long, BigDecimal) =
+        (rs.map(_.getLong(1)).sum, rs.map(r => BigDecimal(r.getDouble(2))).sum)
+      val twinRows = SparkEntry.queries("join_skew_salted")(spark, twin).collect().toSeq
+      val orig = q("join_skew_salted").collect().toSeq
+      assert(totals(twinRows) === totals(orig))
+      assert(twinRows.map(_.toString) !== orig.map(_.toString))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(twin))
   }
 }

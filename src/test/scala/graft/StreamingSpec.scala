@@ -486,9 +486,9 @@ class RunningCountProcessor
   }
 }
 
-// TwsSessionizer moved to main (graft.streaming.TwsSessionizer): the
-// StreamRate sustained-throughput probe drives the same processor the
-// parity test here pins.
+// TwsSessionizer lives in main (graft.streaming.TwsSessionizer): the
+// StreamSoak `tws` shape drives the same processor the parity test here
+// pins.
 
 /** One shared local session for all suites (guide: one per JVM), built
   * by the harness builder with a fixed shape: the test partitioning does

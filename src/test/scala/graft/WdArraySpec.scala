@@ -8,10 +8,8 @@ import graft.wikidata.{EntitySchema, GenWd, Wd}
   * published latest-all.json is one JSON array — `[` line, entity
   * lines with trailing commas, `]` line — while the fixture and the
   * live export are clean NDJSON. These pin (a) wrapper-strip parity
-  * with the native NDJSON scan, (b) the auto-detection peek, (c) the
-  * GenWd arraywrap layout round-tripping through the reader, and
-  * (d) that autosplit no longer leaks a session-wide split-size conf
-  * (r15 advice 4 / what's-wrong 3).
+  * with the native NDJSON scan, (b) the auto-detection peek and (c) the
+  * GenWd arraywrap layout round-tripping through the reader.
   */
 class WdArraySpec extends AnyFunSuite {
   lazy val spark = Spec.spark
@@ -99,30 +97,6 @@ class WdArraySpec extends AnyFunSuite {
       org.apache.spark.sql.Encoders.STRING)
     val plainDf = spark.read.schema(EntitySchema.entity).json(plain)
     assert(rowsOf(parsed) === rowsOf(plainDf))
-  }
-
-  test("autosplit reads per-scan and never mutates the session split conf") {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val before = spark.conf.getOption(key)
-    spark.conf.set("spark.graft.wd.autosplit", "true")
-    try {
-      val df = Wd.readDump(spark, Wd.entityDump.stage(spark), EntitySchema.entity)
-      // autosplit NDJSON keeps the NATIVE json scan, planned in the
-      // isolated child session (only array dumps take the text path)
-      assert(df.count() === 12)
-      assert(spark.conf.getOption(key) === before,
-        "autosplit leaked a session-wide maxPartitionBytes")
-    } finally spark.conf.unset("spark.graft.wd.autosplit")
-  }
-
-  test("splitTarget math: clamped per-split bytes, every core fed") {
-    // 1 GiB on 32 cores: 1 GiB/128 = 8 MiB per split -> 128 splits
-    assert(Wd.splitTarget(1L << 30, 32) === (8L << 20))
-    // tiny fixture: clamps up to the 4 MiB floor (one split)
-    assert(Wd.splitTarget(16 * 1024, 32) === (4L << 20))
-    // 100 TB on 1000 cores: clamps to 128 MiB (the stock default) —
-    // autosplit is a no-op at the scale the clamp protects
-    assert(Wd.splitTarget(100L << 40, 1000) === (128L << 20))
   }
 
   test("dirty wrapped dump classifies wrapper/entity/malformed exactly") {

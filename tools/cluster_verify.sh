@@ -13,20 +13,18 @@
 #           delaySec (default 25) — driver log must show "Lost
 #           executor" or the kill missed (check, don't assume).
 # Outputs: /tmp/graft_cluster/{submit.log,out,out_local}; exit 0 iff
-# parity holds. Playbook notes baked in: never filter spark-submit
-# output through head (SIGPIPE kills the job); pkill patterns must
-# bracket ("deploy.[m]aster") or they match this script's own cmdline.
+# parity holds. Never filter spark-submit output through head (SIGPIPE
+# kills the job). The cluster and the killer come from tools/cluster_lib.sh.
 set -e
 cd "$(dirname "$0")/.."
+. tools/cluster_lib.sh
 KEYS="$1"; WDDIR="${2:--}"; KILL="${3:-}"; DELAY="${4:-25}"
 if [ -z "$KEYS" ]; then
   echo "usage: tools/cluster_verify.sh <keys> [wdDir|-] [--kill [delaySec]]"; exit 2
 fi
 BASE=/tmp/graft_cluster
-rm -rf "$BASE"; mkdir -p "$BASE/logs"
-sbt -batch package > "$BASE/package.log" 2>&1
-JAR=$(ls target/scala-2.13/*.jar | head -1)
-export SPARK_HOME=/opt/spark
+rm -rf "$BASE"; mkdir -p "$BASE"
+JAR=$(package_jar "$BASE/package.log")
 # the wd dump override confs: --conf on the spark-submit leg,
 # SPARK_GRAFT_EXTRA_OPTS (-D system properties) on the local sbt leg
 WDCONF=(); WDOPTS="${SPARK_GRAFT_EXTRA_OPTS:-}"
@@ -38,37 +36,16 @@ if [ "$WDDIR" != "-" ]; then
   done
 fi
 
-SPARK_IDENT_STRING=gcm SPARK_LOG_DIR="$BASE/logs" \
-  /opt/spark/sbin/start-master.sh -p 7077 --webui-port 8090
-sleep 5
-for w in 1 2; do
-  SPARK_IDENT_STRING=gcw$w SPARK_LOG_DIR="$BASE/logs" \
-    SPARK_LOCAL_DIRS="$BASE/scratch$w" SPARK_WORKER_DIR="$BASE/work$w" \
-    /opt/spark/sbin/start-worker.sh spark://127.0.0.1:7077 \
-    -c 16 -m 12g --webui-port 809$w
-done
-sleep 8
-stop_cluster() {
-  SPARK_IDENT_STRING=gcw1 /opt/spark/sbin/stop-worker.sh || true
-  SPARK_IDENT_STRING=gcw2 /opt/spark/sbin/stop-worker.sh || true
-  SPARK_IDENT_STRING=gcm /opt/spark/sbin/stop-master.sh || true
-}
-trap stop_cluster EXIT
-
+cluster_start "$BASE" 16 12g
 if [ "$KILL" = "--kill" ]; then
-  ( sleep "$DELAY"
-    PID=$(ps -eo pid,etimes,cmd | grep "[C]oarseGrainedExecutorBackend" \
-          | sort -k2 -n | head -1 | awk '{print $1}')
-    echo "KILLER: killing executor pid=$PID at $(date -u +%H:%M:%S)" \
-      >> "$BASE/killer.log"
-    [ -n "$PID" ] && kill -9 "$PID" ) &
+  ( sleep "$DELAY"; kill_youngest_executor "$BASE/killer.log" ) &
 fi
 
 # capture rc explicitly: under set -e a nonzero spark-submit would
 # abort before the diagnostics print (and leave the killer un-reaped)
 rc=0
-env SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_MASTER=spark://127.0.0.1:7077 \
-  /opt/spark/bin/spark-submit --master spark://127.0.0.1:7077 \
+env SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_MASTER="$CLUSTER_MASTER" \
+  /opt/spark/bin/spark-submit --master "$CLUSTER_MASTER" \
   --class graft.Verify --driver-memory 8g \
   --conf spark.executor.memory=10g "${WDCONF[@]}" \
   "$JAR" /root/testdata/sf0.01 "$BASE/out" > "$BASE/submit.log" 2>&1 || rc=$?
@@ -80,7 +57,7 @@ if [ "$KILL" = "--kill" ]; then
   echo "Lost-executor lines: $(grep -c 'Lost executor' "$BASE/submit.log" || true)"
 fi
 [ "$rc" -eq 0 ] || { echo "cluster_verify: spark-submit failed rc=$rc"; exit "$rc"; }
-stop_cluster
+cluster_stop
 trap - EXIT
 
 env SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_EXTRA_OPTS="$WDOPTS" \
