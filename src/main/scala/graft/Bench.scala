@@ -9,17 +9,17 @@ object Bench {
 
   // Round 18 (VERDICT item 2): the final one-line JSON's per-query set
   // is PINNED to this committed list — exactly the 55 keys visible in
-  // round 17's line (BENCH_r17.json) — instead of "slowest keys that
-  // fit 1500 chars". The old rule made the driver's round-over-round
-  // per-query comparison a moving, biased sample: when the visible
-  // cutoff drifted 0.80→1.02 s with box mood, 12 keys "dropped" and 14
-  // appeared without any code change (two of the phantom drops were
-  // the round's biggest WINS, leaving the line by getting fast).
-  // Membership now only changes by editing this list at a rebaseline;
-  // ordering stays slowest-first (human-readable) and the 1500-char
-  // budget guard stays as a backstop (worst case trims the FASTEST
-  // pinned keys, deterministically). Full per-key data is always in
-  // bench_detail.json regardless.
+  // round 17's line (git show 79d8cf5:BENCH_r17.json) — instead of
+  // "slowest keys that fit 1500 chars". The old rule made the driver's
+  // round-over-round per-query comparison a moving, biased sample: when
+  // the visible cutoff drifted 0.80→1.02 s with box mood, 12 keys
+  // "dropped" and 14 appeared without any code change (two of the
+  // phantom drops were the round's biggest WINS, leaving the line by
+  // getting fast). Membership now only changes by editing this list at
+  // a rebaseline; ordering stays slowest-first (human-readable) and the
+  // 1500-char budget guard stays as a backstop (worst case trims the
+  // FASTEST pinned keys, deterministically). Full per-key data is
+  // always in bench_detail.json regardless.
   private val PinnedLineKeys: Set[String] = Set(
     "agg_approx_quantile", "agg_assoc_rules", "agg_grouping_sets",
     "agg_ks_test", "dedup_components", "dedup_embedding",
@@ -49,7 +49,7 @@ object Bench {
     // doesn't absorb session initialization cost.
     Harness.warm(spark, sfDir)
     // Plan-shape regression tracking: wall-clock on this box drifts
-    // up to ±50% per key across rounds (BASELINE.md warm-band table).
+    // up to ±50% per key across rounds (the warm bands in bench_bands.json).
     // Shuffle bytes drift far less, but they are not exact:
     // wd_property_stats over a 3,000-entity GenWd zipf dump (local[4],
     // four runs in each of two JVMs, through KeyMetrics) wrote
@@ -210,7 +210,7 @@ object Bench {
     //
     // Two round-11-verdict rules:
     //  * The repo-root bench_detail.json is the committed full-surface
-    //    yardstick benchcheck.py joins against BASELINE.md — a SCOPED
+    //    yardstick benchcheck.py joins against bench_bands.json — a SCOPED
     //    run (SPARK_GRAFT_ONLY set) must never clobber it (commit
     //    0431c47 did exactly that), so scoped captures land in tmp/.
     //    SPARK_GRAFT_DETAIL_OUT overrides either path explicitly.

@@ -171,13 +171,14 @@ object Ckpt {
     }
 
   /** Storage level of every RDD a loop holds across rounds: SERIALIZED
-    * (round-17 verdict 5, measured in SCALE.md round-17). A deserialized
-    * block holds ~48-64 B of Tuple2/boxed-Long objects per pair where
-    * the serialized stream holds a fraction of that, which matters when
-    * a constrained heap pins the edge list + two generations at once.
-    * sf10 components, solo, 3-pass medians: 8 g SER 122.0 s vs deser
-    * 167.2 s (-27%); 16 g SER 155.5 s vs deser 150.3 s (+3%, box noise).
-    * localCheckpoint keeps a pre-set level, only adding the disk bit
+    * (round-17 verdict 5, measured in round-17 of
+    * git show 79d8cf5:SCALE.md). A deserialized block holds ~48-64 B of
+    * Tuple2/boxed-Long objects per pair where the serialized stream holds
+    * a fraction of that, which matters when a constrained heap pins the
+    * edge list + two generations at once. sf10 components, solo, 3-pass
+    * medians: 8 g SER 122.0 s vs deser 167.2 s (-27%); 16 g SER 155.5 s
+    * vs deser 150.3 s (+3%, box noise). localCheckpoint keeps a pre-set
+    * level, only adding the disk bit
     * (LocalRDDCheckpointData.transformStorageLevel), so the level holds
     * in both modes. */
   val Level: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
@@ -273,8 +274,8 @@ object Ckpt {
       * loop's lineage), then every other generation still held and
       * `alsoRelease` (the loop's inputs) are released — a lazy loop
       * that leaked its generations across bench passes measurably
-      * thrashed the heap (OPTIMIZATION_r17.md). `result` itself is
-      * released by the harness after the key's one action
+      * thrashed the heap (git show 79d8cf5:OPTIMIZATION_r17.md). `result`
+      * itself is released by the harness after the key's one action
       * ([[releaseScratch]]). */
     def finish[T](result: RDD[T], alsoRelease: RDD[_]*): RDD[T] = {
       if (base.isEmpty && !result.isCheckpointed) {

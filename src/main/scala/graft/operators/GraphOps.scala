@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,7 +109,7 @@ object GraphOps {
     Stage.p(s, s"graft_${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
       Stage.inputStamp(s, s"$d/lineitem.parquet"))
 
-  /** Rows per task of the graph RDD fixpoints' shared partitioner
+  /** Rows per task of [[frontierRelax]]'s shared partitioner
     * (Ckpt.Loop.partitioner). Round 17 moved sssp and khop onto the
     * dedup_components execution model — co-partitioned RDDs under one
     * shared HashPartitioner: the DataFrame formulation of a round
@@ -116,13 +117,58 @@ object GraphOps {
     * 3-round keys ran 27-30 driver-barrier jobs each at any scale; with
     * every per-round join narrow and persist-only lineage the whole
     * fixpoint executes as ONE job at action time with exactly one wide
-    * shuffle per round (OPTIMIZATION_r17.md). 500k pairs/task
-    * (~10-25 MB serialized) is the guide §2.2 block-count rule: these
-    * loops shuffle bare long pairs, so the components loop's 20k
-    * rows/task made per-task fixed costs (fetch of M×R tiny blocks,
-    * combiner setup) dominate the actual work (measured ~5x on the
-    * round-17 sssp rewrite). */
+    * shuffle per round (git show 79d8cf5:OPTIMIZATION_r17.md). 500k
+    * pairs/task (~10-25 MB serialized) is the guide §2.2 block-count
+    * rule: these loops shuffle small long tuples, so the components
+    * loop's 20k rows/task made per-task fixed costs (fetch of M×R tiny
+    * blocks, combiner setup) dominate the actual work (measured ~5x on
+    * the round-17 sssp rewrite). */
   private val FixpointRowsPerTask = 500000L
+
+  /** graph_khop's and graph_sssp's fixpoint: frontier Bellman-Ford, 3
+    * rounds, over the undirected edges `e` (a, b, w: BIGINT) from the
+    * nodes whose part has p_size = 50. Round k relaxes ONLY the nodes
+    * whose label improved in round k-1, so after k rounds dist = min
+    * cost over ≤k-edge paths while per-round work tracks the improving
+    * set, not the whole label table. Per round the only wide shuffle
+    * is the re-key of candidate labels by dst (reduceByKey min, whose
+    * map-side combine collapses the ×degree expansion); the improvement
+    * filter, the dist merge and the frontier join are narrow under the
+    * one shared partitioner, and with persist-only lineage the loop
+    * runs as ONE job (1 + 2×3 Ckpt.loop generations). */
+  private def frontierRelax(s: SparkSession, d: String,
+      e: DataFrame): RDD[(Long, Long)] = {
+    val seeds = Tables.part(s, d).filter(col("p_size") === 50)
+      .select(col("p_partkey").as("node"))
+      .join(degrees(s, d).select("node"), Seq("node"), "left_semi")
+    val rounds = Ckpt.loop(s)
+    val part = rounds.partitioner(e.count() * 2, FixpointRowsPerTask)
+    val wu = e.select("a", "b", "w").rdd.flatMap { r =>
+      val a = r.getLong(0); val b = r.getLong(1); val w = r.getLong(2)
+      Seq((a, (b, w)), (b, (a, w)))
+    }.partitionBy(part).persist(Ckpt.Level)
+    var dist = rounds.pin(
+      seeds.rdd.map(r => (r.getLong(0), 0L)).partitionBy(part))
+    rounds.done(dist)
+    var frontier = dist
+    for (_ <- 1 to 3) {
+      val relax = wu.join(frontier)
+        .map { case (_, ((dst, w), dv)) => (dst, dv + w) }
+        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+      val improved = rounds.pin(
+        relax.leftOuterJoin(dist)
+          .filter { case (_, (nd, od)) => od.forall(nd < _) }
+          .mapValues(_._1))
+      rounds.done(improved)
+      val merged = rounds.pin(
+        dist.union(improved) // PartitionerAwareUnion: stays narrow
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
+      rounds.done(merged)
+      dist = merged
+      frontier = improved
+    }
+    rounds.finish(dist, wu)
+  }
 
   /** Canonical undirected edge list (a < b), built once per fixture dir
     * and stored — all graph keys read the stored table. */
@@ -264,11 +310,11 @@ object GraphOps {
     * halving the dominant term of each serialized buffer entry
     * crossing the shuffle.
     *
-    * Round 17 (opt): the frame is MATERIALIZED once (Ckpt.df, fresh
-    * per invocation — the dedup signature-table discipline,
-    * OPTIMIZATION_r17.md). The key has THREE consumers of this
-    * aggregate (the pair generator plus the degree frame joined as
-    * deg_a and deg_b), and neither the planner nor AQE reused the
+    * Round 17 (opt): the frame is MATERIALIZED once (Ckpt.df, fresh per
+    * invocation — the dedup signature-table discipline,
+    * git show 79d8cf5:OPTIMIZATION_r17.md). The key has THREE consumers
+    * of this aggregate (the pair generator plus the degree frame joined
+    * as deg_a and deg_b), and neither the planner nor AQE reused the
     * exchange across them — the before-plan carries the full
     * orders⋈lineitem + bottomk chain three times
     * (plans/r17/graph_bipartite_project_{before,after}.txt), i.e. 3×
@@ -456,13 +502,13 @@ object GraphOps {
       // Round-17 (opt) built a co-partitioned RDD fixpoint; round 18's
       // verdict-driven A/B found its ONE-TIME edge shuffle (the 2|E|
       // re-key, 19.3 MB at sf0.1 → ~2 GB at sf10) REGRESSES the key at
-      // every measured scale (sf0.1 ×1.35–1.9, sf1 flat, sf10 SQL
-      // 30.4 s vs RDD 113.3 s — OPTIMIZATION_r18.md), because the delta
-      // peel never moves the edge list at all: per round it SCANS the
-      // columnar edge parquet and joins it against the (small,
+      // every measured scale (sf0.1 ×1.35–1.9, sf1 flat, sf10 SQL 30.4 s
+      // vs RDD 113.3 s — git show 79d8cf5:OPTIMIZATION_r18.md), because
+      // the delta peel never moves the edge list at all: per round it
+      // SCANS the columnar edge parquet and joins it against the (small,
       // shrinking) dead set, which AQE broadcasts. The RDD branch was
-      // deleted; only a measured point where a round's dead set
-      // outgrows a broadcast would bring it back.
+      // deleted; only a measured point where a round's dead set outgrows
+      // a broadcast would bring it back.
       val e = edges(s, d)
       val dg = degrees(s, d)
       val kth = dg.agg(
@@ -680,7 +726,8 @@ object GraphOps {
             concat(col("path"), lit("->"),
               col("dst").cast(StringType)).as("path"))
         // Round 17 examined this key's build sides and REVERTED both
-        // candidate fixes with measurements (OPTIMIZATION_r17.md):
+        // candidate fixes with measurements
+        // (git show 79d8cf5:OPTIMIZATION_r17.md):
         // the static planner broadcasts the ADJACENCY after step 1
         // (join size estimation is multiplicative, so the ≤20-row
         // frontier's estimate explodes), which looks wrong — but (a)
@@ -702,57 +749,14 @@ object GraphOps {
     }),
 
     "graph_khop" -> ((s, d) => {
-      // Bounded-hop reachability (3 hops) from a seed set — the
-      // contamination-spread / neighborhood-expansion primitive. Seeds:
-      // graph nodes whose part has p_size = 50. Per hop: frontier
-      // expansion is one src-keyed join + distinct + anti-join against
-      // the visited set; min-distance labels come free from the
-      // expansion order (a node is claimed by its FIRST reaching hop).
-      // The edge side is hash-partitioned on src ONCE and persisted:
-      // the checkpointed frontier's stats are opaque to the planner,
-      // so without this every hop's join re-shuffled the FULL edge
-      // list (fingerprint: 3 × edges ≈ 48 MB at sf0.1). With the
-      // partitioning pinned on the cached side, only the hop-sized
-      // frontier moves per round — the iterative-graph discipline
-      // that holds at 10⁹ edges (MEMORY_AND_DISK spills, never
-      // recomputes). sortWithinPartitions makes the SMJ sort a no-op.
-      // Round-17 (opt): co-partitioned RDD frontier loop (see
-      // FixpointRowsPerTask and the sssp note). Per hop the only wide
-      // shuffle is the re-key of expanded neighbors (reduceByKey keep-
-      // one = the old distinct); the anti-join against visited and the
-      // visited merge are narrow under the shared partitioner, and with
-      // persist-only lineage the whole BFS runs as ONE job instead of
-      // ~27 AQE stage-jobs + 7 eager checkpoints (OPTIMIZATION_r17.md).
-      // Semantics bit-identical: first-reaching hop claims the node.
-      val e = edges(s, d)
-      val seeds = Tables.part(s, d).filter(col("p_size") === 50)
-        .select(col("p_partkey").as("node"))
-        .join(degrees(s, d).select("node"), Seq("node"), "left_semi")
-      val rounds = Ckpt.loop(s)
-      val part = rounds.partitioner(e.count() * 2, FixpointRowsPerTask)
-      val u = e.rdd.flatMap { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        Seq((a, b), (b, a))
-      }.partitionBy(part).persist(Ckpt.Level)
-      var visited = rounds.pin(
-        seeds.rdd.map(r => (r.getLong(0), 0)).partitionBy(part))
-      rounds.done(visited)
-      var frontier: org.apache.spark.rdd.RDD[(Long, Int)] = visited
-      for (k <- 1 to 3) {
-        val next = rounds.pin(
-          u.join(frontier)
-            .map { case (_, (dst, _)) => (dst, k) }
-            .reduceByKey(part, (a: Int, _: Int) => a) // = distinct
-            .leftOuterJoin(visited) // narrow: anti-join against visited
-            .filter { case (_, (_, seen)) => seen.isEmpty }
-            .mapValues(_._1))
-        rounds.done(next)
-        val merged = rounds.pin(visited.union(next)) // PartitionerAwareUnion
-        rounds.done(merged)
-        visited = merged
-        frontier = next
-      }
-      val out = rounds.finish(visited, u)
+      // Bounded-hop reachability (3 hops) from the seed set — the
+      // contamination-spread / neighborhood-expansion primitive. It is
+      // graph_sssp with unit weights: with w = 1, round k's frontier
+      // holds exactly the nodes at distance k-1, so "improved" is
+      // "reached and not yet visited" and the label is the first
+      // reaching hop. dist stays INT, as the oracle declares it.
+      val out = frontierRelax(s, d, edges(s, d).withColumn("w", lit(1L)))
+        .mapValues(_.toInt)
       val sess = s
       import sess.implicits._
       out.toDF("node", "dist").orderBy("node")
@@ -762,60 +766,10 @@ object GraphOps {
       // Bounded single-source shortest paths (3 relaxation rounds) from
       // the khop seed set over WEIGHTED co-occurrence edges — khop asks
       // "what is reachable", this asks "how close is it" (nearest-hub
-      // routing, influence radius, weighted contamination spread).
-      // Frontier Bellman-Ford: round k relaxes ONLY nodes whose label
-      // improved in round k-1 — the classic invariant (after k rounds,
-      // dist = min cost over ≤k-edge paths) holds, but per-round work
-      // tracks the improving set, not the whole label table: the same
-      // delta discipline as khop's frontier and dedup_incremental. All
+      // routing, influence radius, weighted contamination spread). All
       // integer arithmetic (costs ∈ [1,9], BIGINT sums) so the oracle
-      // hash-matches with no float tolerance. Each round: one src-keyed
-      // equi-join + two aggregations — no driver-side state; Ckpt
-      // truncates the per-round lineage exactly like khop/components
-      // (durable under spark.graft.checkpointDir at 100 TB).
-      // Round-17 (opt): the DataFrame loop above in spirit, executed on
-      // co-partitioned RDDs (the components model, see FixpointRowsPerTask)
-      // — per round the ONLY wide shuffle is the re-key of candidate
-      // labels by dst (reduceByKey min = the old groupBy min); the
-      // improvement filter, the dist merge and the frontier join are all
-      // narrow under the one shared partitioner, and with persist-only
-      // lineage the fixpoint runs as ONE job instead of ~30 AQE
-      // stage-jobs + 7 eager checkpoints (measured: OPTIMIZATION_r17.md).
-      // Semantics bit-identical: same integer relaxation, same rounds.
-      val e = wedges(s, d)
-      val seeds = Tables.part(s, d).filter(col("p_size") === 50)
-        .select(col("p_partkey").as("node"))
-        .join(degrees(s, d).select("node"), Seq("node"), "left_semi")
-      val rounds = Ckpt.loop(s)
-      val part = rounds.partitioner(e.count() * 2, FixpointRowsPerTask)
-      val wu = e.rdd.flatMap { r =>
-        val a = r.getLong(0); val b = r.getLong(1); val w = r.getLong(2)
-        Seq((a, (b, w)), (b, (a, w)))
-      }.partitionBy(part).persist(Ckpt.Level)
-      var dist = rounds.pin(
-        seeds.rdd.map(r => (r.getLong(0), 0L)).partitionBy(part))
-      rounds.done(dist)
-      var frontier = dist
-      for (_ <- 1 to 3) {
-        // candidate labels out of the frontier, combined per node BEFORE
-        // the dist merge (reduceByKey's map-side combine collapses the
-        // ×degree expansion, as the old partial agg did)
-        val relax = wu.join(frontier)
-          .map { case (_, ((dst, w), dv)) => (dst, dv + w) }
-          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        val improved = rounds.pin(
-          relax.leftOuterJoin(dist)
-            .filter { case (_, (nd, od)) => od.forall(nd < _) }
-            .mapValues(_._1))
-        rounds.done(improved)
-        val merged = rounds.pin(
-          dist.union(improved) // PartitionerAwareUnion: stays narrow
-            .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
-        rounds.done(merged)
-        dist = merged
-        frontier = improved
-      }
-      val out = rounds.finish(dist, wu)
+      // hash-matches with no float tolerance.
+      val out = frontierRelax(s, d, wedges(s, d))
       val sess = s
       import sess.implicits._
       out.toDF("node", "dist").orderBy("node")

@@ -340,14 +340,14 @@ object Relational {
       // not results (both paths compute the same join), so the oracle
       // stays the plain-join SQL. (AQE's OptimizeSkewedJoin is the
       // automatic runtime variant; this is the plan-time hand-tool.)
-      // MEASURED (SkewProbe on a 40%-skewed twin, commit 9503c2d; the
-      // probe is recoverable from 8993cd5, and OperatorSpec pins the
-      // twin's result equality): AQE's runtime split beat this recipe
-      // at both sf1 and sf3. That twin's hot keys missed the row sample
-      // below (SCALE.md, "Deleted probes"), so the recipe's timing there
-      // is its probe and routing passes without hot-key salting. Use
-      // AQE first; this shape earns its keep only where AQE cannot
-      // split (skewed agg keys, order-constrained SMJ, known hot lists).
+      // UNMEASURED against AQE: SkewProbe's 40%-skewed twin (commit
+      // 9503c2d, recoverable from 8993cd5) timed AQE's runtime split
+      // ahead of this recipe at sf1 and sf3, but both of that twin's hot
+      // keys missed the row sample below (SCALE.md, join_skew_salted
+      // row), so the recipe ran its probe and routing without salting
+      // any hot key. OperatorSpec pins the twin's result equality only.
+      // Where AQE cannot split (skewed agg keys, order-constrained SMJ,
+      // known hot lists) this shape is the one tool either way.
       // The sample hashes (l_orderkey, l_linenumber), so it samples rows
       // only while that pair is unique, as it is in TPC-H lineitem.
       val salts = 8

@@ -97,7 +97,7 @@ object SimOps {
     * localCheckpoint blocks stay alive exactly as long as the lazy
     * pick plan references them, and skipping the eager pin removes one
     * driver-barrier job per round (sample_kcenter 21 → 16 jobs,
-    * sim_mmr_rerank 19 → 14 — OPTIMIZATION_r17.md). */
+    * sim_mmr_rerank 19 → 14 — git show 79d8cf5:OPTIMIZATION_r17.md). */
   private def pinPick(df: DataFrame): DataFrame =
     if (Ckpt.dir(df.sparkSession).isEmpty) df else Ckpt.df(df)
 
@@ -605,7 +605,7 @@ object SimOps {
       // Rayleigh contraction run inside ONE projection over a
       // single-row array image of the d×d matrix, replacing 5 rounds ×
       // (broadcast + agg + eager checkpoint) jobs over a 4096-row frame
-      // (41 jobs → ~9 measured; OPTIMIZATION_r17.md). The matrix is
+      // (41 jobs → ~9 measured; git show 79d8cf5:OPTIMIZATION_r17.md). The matrix is
       // corpus-size-independent (64×64 — only the covariance pass above
       // touches the corpus), so one-task evaluation IS the production
       // shape (the step a driver hands to LAPACK). The arithmetic is

@@ -705,7 +705,7 @@ object StatOps {
       // (18,113.9 KB both ways) and no timing move — AQE's
       // ReuseExchangeAndSubquery already serves both sides from the
       // one exchange at runtime, so the checkpoint only added a
-      // barrier job (OPTIMIZATION_r17.md).
+      // barrier job (git show 79d8cf5:OPTIMIZATION_r17.md).
       val c1 = baskets.select(explode(col("items")).as("pk"))
         .groupBy("pk").agg(count(lit(1)).as("c1"))
       // Round 18: stacked generators + fused filter instead of the

@@ -251,12 +251,13 @@ object TextOps {
       // min_by aggregate (same shuffle the bigram groupBy already
       // pays), the seed falls out of the same pass (c1 = Σ c12 per
       // w1), and the 8-step walk is one bound-map expression over a
-      // single row (~6 jobs; OPTIMIZATION_r17.md). Selection identical:
-      // min_by on (-c12, w2) replays the old per-step (c12 DESC, w2)
-      // TakeOrdered, min_by on (-c1, w1) the seed's; a walk reaching a
-      // word with no outgoing bigram stalls exactly like the old empty
-      // join. The one-row map is VOCAB-sized — the same bound as the
-      // old checkpointed bigram table (smaller: one entry per w1).
+      // single row (~6 jobs; git show 79d8cf5:OPTIMIZATION_r17.md).
+      // Selection identical: min_by on (-c12, w2) replays the old
+      // per-step (c12 DESC, w2) TakeOrdered, min_by on (-c1, w1) the
+      // seed's; a walk reaching a word with no outgoing bigram stalls
+      // exactly like the old empty join. The one-row map is
+      // VOCAB-sized — the same bound as the old checkpointed bigram
+      // table (smaller: one entry per w1).
       val grams = bigramPairs(Tables.documents(s, d))
       val bi = grams.groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("c12"))

@@ -89,7 +89,8 @@ final case class PgCopySink(sockDir: String, port: Int, db: String,
   //    shard's promote is one atomic transaction (never a torn shard);
   //    shards commit independently, the same contract as JDBC's
   //    parallel INSERT connections.
-  //    What the sharded sweep actually measured (SCALE.md round-13):
+  //    What the sharded sweep actually measured (round-13 of
+  //    git show 79d8cf5:SCALE.md):
   //    the COPY stage pipelines entirely under the Spark compute (stage
   //    wall ≈ the no-sink floor), so the writer ceiling is the PROMOTE —
   //    a second full write pass (INSERT INTO target SELECT FROM
@@ -316,7 +317,8 @@ object PgCopySink {
     * through a single transaction made the promote THE single-writer
     * bottleneck sharding exists to remove (measured: the 3M-entity
     * N=4 sweep ran 2× slower than N=1 under the one-transaction
-    * promote; SCALE.md round-13 has the phase split). */
+    * promote; round-13 of git show 79d8cf5:SCALE.md has the phase
+    * split). */
   private def promoteAll(targets: Seq[String], promote: String => Int): Int =
     if (targets.size == 1) promote(targets.head)
     else {

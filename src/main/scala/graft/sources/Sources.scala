@@ -515,10 +515,10 @@ object Sources {
     "sink_pg_attach" -> ((s, d) => {
       // Attach-promote COPY sink as DECLARED surface: the staged
       // tables become inheritance children (zero-rewrite promote —
-      // SCALE.md round-13 measures the rewrite it removes at 166-257s
-      // per 39M rows), and the read-back goes through the PARENT, so
-      // the oracle proves segment reads are indistinguishable from a
-      // single physical table.
+      // round-13 of git show 79d8cf5:SCALE.md measures the rewrite it
+      // removes at 166-257s per 39M rows), and the read-back goes through
+      // the PARENT, so the oracle proves segment reads are
+      // indistinguishable from a single physical table.
       import org.apache.spark.sql.types._
       val schema = StructType(Seq(
         StructField("o_custkey", LongType),

@@ -17,7 +17,8 @@ import graft.sources.{PgCopySink, PgServer}
   * At 100 TB (the real mediainfo dump is ~100 GB, Commons-wide): the
   * same explicit-schema parse + codegen'd explode chains with no
   * shuffle until the output sort — the family whose measured scaling
-  * evidence (SCALE.md wd rows) this inherits.
+  * evidence (the round-12 to round-16 wd sections of
+  * git show 79d8cf5:SCALE.md) this inherits.
   */
 object Mediainfo {
   type Q = (SparkSession, String) => DataFrame

@@ -214,10 +214,10 @@ object Wd {
     * the optimizer's SCHEMA PRUNING: flat ~4.6 s at 1M entities, 4.3×
     * native on a profile scan) vs this formulation, which keeps the
     * batched reader AND per-query nested pruning: 1.74 s profile /
-    * 4.39 s claims at 1M — ~1.0–1.3× the plain-NDJSON scan (SCALE.md
-    * round-17). `.gz` dumps decompress transparently on either path
-    * but as ONE split per file — see [[rechunk]] for the bounded
-    * re-chunk that parallelizes the most-downloaded dump form. At
+    * 4.39 s claims at 1M — ~1.0–1.3× the plain-NDJSON scan (round-17 of
+    * git show 79d8cf5:SCALE.md). `.gz` dumps decompress transparently on
+    * either path but as ONE split per file — see [[rechunk]] for the
+    * bounded re-chunk that parallelizes the most-downloaded dump form. At
     * 100 TB both paths are one narrow parse pipeline, zero shuffle.
     * Split size is stock Spark's: a dump much smaller than cpus × 128 MB
     * feeds every core with `spark.sql.files.minPartitionNum` set to
@@ -263,7 +263,8 @@ object Wd {
     * re-chunk VERBATIM: the `[` line lands in part-00000 (so
     * auto-detection still sees it), `]` and trailing commas are
     * handled by the array read path as usual — row identity is pinned
-    * by GzSpec and measured at 1M entities in SCALE.md round-17.
+    * by GzSpec and measured at 1M entities in round-17 of
+    * git show 79d8cf5:SCALE.md.
     * Returns the line count dealt. */
   def rechunk(s: SparkSession, inPath: String, outDir: String,
       parts: Int, codec: String = "none"): Long = {

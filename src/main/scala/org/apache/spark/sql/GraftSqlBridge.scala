@@ -35,7 +35,8 @@ object GraftSqlBridge {
     * materialized — a localCheckpointed frame's blocks are otherwise
     * pinned until the ContextCleaner happens to collect the RDD,
     * which under a 279-key bench pass is long after the query
-    * finished (round-17 block-hygiene work, OPTIMIZATION_r17.md). */
+    * finished (round-17 block-hygiene work,
+    * git show 79d8cf5:OPTIMIZATION_r17.md). */
   def backingRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)

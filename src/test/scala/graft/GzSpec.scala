@@ -16,8 +16,8 @@ import graft.wikidata.{EntitySchema, Wd}
   * (b) format auto-detection peeks THROUGH the codec, (c) rechunk is
   * row-identical for both layouts with the exact part fan-out, and
   * (d) rechunk round-trips bz2 output. The 1M-entity single-split
-  * reality and the re-chunked speedup are measured in SCALE.md
-  * round-17.
+  * reality and the re-chunked speedup are measured in round-17 of
+  * git show 79d8cf5:SCALE.md.
   */
 class GzSpec extends AnyFunSuite {
   lazy val spark = Spec.spark

@@ -150,6 +150,23 @@ class HarnessSpec extends AnyFunSuite {
     assert(dangling.isEmpty, s"recipes name missing mains: $dangling")
   }
 
+  test("every repo-root ledger that code, tools and recipes cite exists") {
+    // Root ledgers are named in capitals (README.md, SCALE.md,
+    // BENCH_r18.json); one that is gone is cited as
+    // `git show <sha>:<name>`. Lower-case names here are run outputs.
+    val sources = Seq("src", "tools", ".claude/skills").flatMap { d =>
+      Seq(".scala", ".py", ".sh", ".md").flatMap(files(Paths.get(d), _))
+    } ++ Seq(Paths.get("README.md"), Paths.get("build.sbt"))
+    val cite = "(git show [0-9a-f]{7,40}:)?(?<![\\w./-])([A-Z][\\w-]*\\.(?:md|json))\\b".r
+    val cited = sources.flatMap { f =>
+      cite.findAllMatchIn(Files.readString(f))
+        .collect { case m if m.group(1) == null => f -> m.group(2) }
+    }
+    assert(cited.exists(_._2 == "SURVEY.md"), "the scan finds no citation")
+    val dangling = cited.filterNot { case (_, n) => Files.exists(Paths.get(n)) }
+    assert(dangling.isEmpty, s"citations of missing root files: $dangling")
+  }
+
   test("src/main builds a session in one place and reads SPARK_GRAFT_CPUS once") {
     assert(hits("SparkSession.builder()") === Seq("graft/Harness.scala"))
     assert(hits("\"SPARK_GRAFT_CPUS\"") === Seq("graft/Harness.scala"))

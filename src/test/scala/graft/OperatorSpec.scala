@@ -2400,7 +2400,8 @@ class OperatorSpec extends AnyFunSuite {
     // SPARK_GRAFT_STAGE_DIR → /tmp. Env can't be mutated in-JVM, so
     // the testable layers are conf-beats-default and trailing-slash
     // normalization; the env layer is exercised end-to-end by the
-    // relocated-stage-dir Verify runs in SCALE.md.
+    // relocated-stage-dir Verify runs in round-10 of
+    // git show 79d8cf5:SCALE.md.
     val envBase = sys.env.get("SPARK_GRAFT_STAGE_DIR")
       .map(_.stripSuffix("/")).getOrElse("/tmp")
     assert(Stage.dir(spark) === envBase)

@@ -33,7 +33,7 @@ class WdArraySpec extends AnyFunSuite {
     // readDump deliberately does NOT strip the `,` terminating each
     // wrapped dump line: Spark's Jackson parse consumes one JSON value
     // and ignores trailing tokens (every strip formulation measured
-    // worse — SCALE.md round-16). If a Spark upgrade flips this to
+    // worse — round-16 of git show 79d8cf5:SCALE.md). If a Spark upgrade flips this to
     // strict (FAIL_ON_TRAILING_TOKENS semantics), THIS test names the
     // cause instead of the array scan silently nulling every row.
     val r = spark.sql("""SELECT from_json('{"a":1},', 'a INT').a AS v""")
@@ -48,7 +48,8 @@ class WdArraySpec extends AnyFunSuite {
     // reader apply to array dumps exactly as to NDJSON — the round-16
     // text→from_json path re-tokenized every line inside pushed-down
     // filters (~1.9× native; a pushdown-fence fix measured WORSE, 4.3×,
-    // by hiding the parse from schema pruning — SCALE.md round-17).
+    // by hiding the parse from schema pruning — round-17 of
+    // git show 79d8cf5:SCALE.md).
     val df = Wd.readDump(spark, Wd.ensureArrayFixture(spark),
         EntitySchema.entity)
       .filter(col("redirect").isNull)

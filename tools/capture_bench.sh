@@ -1,10 +1,10 @@
 #!/bin/bash
-# Round-close full-surface bench capture (the yardstick workflow the
-# README's "round close" section describes): N un-scoped graft.Bench
-# passes at the DRIVER config (local[32], shuffle=32, sf0.1), each
-# writing a full bench_detail capture to tmp/bd_<tag>_<i>.json.
-# Feed the results to tools/rebaseline.py, then commit the freshest
-# capture as bench_detail.json.
+# Full-surface bench capture (the README's "Performance regression
+# workflow"): N un-scoped graft.Bench runs at the DRIVER config
+# (local[32], shuffle=32, sf0.1), each writing a full bench_detail
+# capture to tmp/bd_<tag>_<i>.json. Feed them to tools/rebaseline.py,
+# which writes bench_bands.json, then commit the last capture as
+# bench_detail.json.
 #
 # Usage: tools/capture_bench.sh [tag] [passes]     (default: close, 3)
 #        tools/capture_bench.sh --dry-run          (print, don't run)

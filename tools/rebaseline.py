@@ -1,117 +1,90 @@
 #!/usr/bin/env python3
-"""rebaseline.py — regenerate BASELINE.md's warm-band + fingerprint
-tables from full-surface bench_detail captures (round-11).
+"""rebaseline.py — write bench_bands.json, benchcheck.py's yardstick,
+whole from full-surface Bench captures.
 
-The round-10 tables were assembled by hand from three runs; the hand
-step is exactly where the r10 close drifted (a 12-key scoped capture
-got committed as "the" detail and benchcheck's fingerprint compare went
-config-mismatched). This tool makes the yardstick mechanical:
+    tools/capture_bench.sh close 2            # tmp/bd_close_{1,2}.json
+    python3 tools/rebaseline.py tmp/bd_close_1.json tmp/bd_close_2.json
+    cp tmp/bd_close_2.json bench_detail.json  # commit both files
 
-  python3 tools/rebaseline.py --tag round-12 bd1.json bd2.json bd3.json
-      [--append BASELINE.md]
+How the bands are made:
 
-* warm band per key: median of each capture's `warm`, band = min–max
-  across captures (≥2 captures recommended; with 1 the band is a
-  point).
-* fingerprint per key: shr/shw MB from the LAST capture; if any
-  capture disagrees beyond 0.2% relative, ALL distinct values are
-  emitted " / "-separated — the documented AQE-flicker form, which
-  benchcheck accepts as alternative expectations.
-* keys with nonzero spill are annotated (the constrained-heap sweep is
-  the only config expected to produce them).
+* All captures share one config (sf, cpus, shuffle) and one source
+  stamp (`src`, Bench's md5 of src/main/scala): fingerprints shift
+  5–15% between 4 and 32 shuffle partitions on identical plans, and a
+  band that spans a code change would accept both plans. The file
+  carries that one stamp; benchcheck refuses a capture or BENCH line
+  stamped with another config.
+* warm: per key, the median across captures of each capture's `warm`
+  (the median of its later passes); band = [min, max] of those. Take
+  at least two captures — one gives a point band.
+* fingerprints: per key, the (shuffle read, shuffle write) bytes of
+  each capture. A capture that differs from every earlier alternative
+  beyond benchcheck's tolerance (`same_fingerprint`) adds one — an
+  AQE-elidable exchange or block-packing jitter — and benchcheck
+  accepts any of them.
+* spill: true if any capture spilled; only the constrained-heap sweep
+  is expected to.
 
-All captures must come from the SAME config (sf dir, cpus, shuffle) —
-the tool refuses mixed `sf` fields. benchcheck.py parses sections
-newest-last: appending a new tagged section SUPERSEDES older
-expectations per key, so regenerate once per round close after the
-final full-surface Bench run.
+Keys missing from a capture are dropped with a warning. The file holds
+the present only: earlier yardsticks are in git history.
 """
 import argparse
 import json
 import statistics
 import sys
 
+from benchcheck import same_fingerprint
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("details", nargs="+")
-    ap.add_argument("--tag", required=True, help="e.g. round-12")
-    ap.add_argument("--append", default=None,
-                    help="append the generated sections to this file")
-    args = ap.parse_args()
 
-    caps = [json.load(open(p)) for p in args.details]
-    # Config discipline (r11 verdict task 3): fingerprints are
-    # partition-count-sensitive (5–15% block-packing delta between 4
-    # and 32 shuffle partitions on identical plans), so captures must
-    # agree on (sf, cpus, shuffle) and the emitted section headers
-    # carry the stamp — benchcheck compares fingerprints only
-    # like-for-like.
-    for field in ("sf", "cpus", "shuffle"):
-        vals = {c.get(field) for c in caps}
-        if len(vals) != 1:
-            sys.exit(f"rebaseline: captures mix {field}: {vals}")
-    cpus, shuffle = caps[0].get("cpus"), caps[0].get("shuffle")
-    if cpus is None or shuffle is None:
-        sys.exit("rebaseline: captures carry no (cpus, shuffle) stamp — "
-                 "re-capture with the current graft.Bench, which records "
-                 "its config; unstamped captures would regenerate an "
-                 "un-keyed yardstick")
-    cfg = f"cpus={cpus}, shuffle={shuffle}"
-    keysets = [set(c["queries"]) for c in caps]
-    common = set.intersection(*keysets)
-    dropped = set.union(*keysets) - common
+def bands(caps):
+    keys = set.intersection(*(set(c["queries"]) for c in caps))
+    dropped = set.union(*(set(c["queries"]) for c in caps)) - keys
     if dropped:
         print(f"rebaseline: WARNING {len(dropped)} keys not in every "
               f"capture, skipped: {sorted(dropped)[:5]}...", file=sys.stderr)
+    out = {}
+    for k in sorted(keys):
+        rows = [c["queries"][k] for c in caps]
+        warms = [r["warm"] for r in rows]
+        alts = []
+        for r in rows:
+            fp = [r.get("shr", 0), r.get("shw", 0)]
+            if not any(same_fingerprint(fp, a) for a in alts):
+                alts.append(fp)
+        out[k] = {"warm": round(statistics.median(warms), 3),
+                  "band": [min(warms), max(warms)],
+                  "fingerprints": alts,
+                  "spill": any(r.get("spill", 0) > 0 for r in rows)}
+    return out
 
-    lines = []
-    lines.append(f"## {args.tag}: per-key warm bands "
-                 f"(regenerated by tools/rebaseline.py from "
-                 f"{len(caps)} captures, sf={caps[0].get('sf')}, {cfg})")
-    lines.append("")
-    lines.append("| key | warm median (s) | warm band (s) |")
-    lines.append("|---|---|---|")
-    for k in sorted(common):
-        warms = [c["queries"][k]["warm"] for c in caps]
-        med = statistics.median(warms)
-        lines.append(f"| {k} | {med:.3f} | {min(warms):.3f}–{max(warms):.3f} |")
-    lines.append("")
-    lines.append(f"## {args.tag}: per-key shuffle fingerprint "
-                 f"(regenerated; last capture, alternatives where "
-                 f"captures disagree >0.2%; sf={caps[0].get('sf')}, {cfg})")
-    lines.append("")
-    lines.append("| key | shuffle read (MB) | shuffle write (MB) |")
-    lines.append("|---|---|---|")
-    flicker = []
-    for k in sorted(common):
-        def mbs(field):
-            vals = []
-            for c in caps:
-                v = round(c["queries"][k].get(field, 0) / 1e6, 2)
-                close = any(abs(v - o) <= 0.002 * max(v, o, 0.01) for o in vals)
-                if not close:
-                    vals.append(v)
-            return vals
-        rs, ws = mbs("shr"), mbs("shw")
-        if len(rs) > 1 or len(ws) > 1:
-            flicker.append(k)
-        spill = max(c["queries"][k].get("spill", 0) for c in caps)
-        note = "  (spill!)" if spill else ""
-        lines.append(f"| {k} | {' / '.join(f'{v:.2f}' for v in rs)} "
-                     f"| {' / '.join(f'{v:.2f}' for v in ws)} |{note}")
-    if flicker:
-        lines.append("")
-        lines.append(f"Keys with capture-to-capture fingerprint variance "
-                     f"(AQE-elidable exchanges or block-packing jitter — "
-                     f"both values accepted): {', '.join(flicker)}")
-    out = "\n".join(lines) + "\n"
-    if args.append:
-        with open(args.append, "a", encoding="utf-8") as f:
-            f.write("\n" + out)
-        print(f"rebaseline: appended {len(common)} keys to {args.append}")
-    else:
-        print(out)
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("details", nargs="+", help="bench_detail captures")
+    ap.add_argument("--out", default="bench_bands.json")
+    args = ap.parse_args()
+
+    caps = [json.load(open(p)) for p in args.details]
+    stamp = {}
+    for field in ("sf", "cpus", "shuffle", "src"):
+        vals = {c.get(field) for c in caps}
+        if len(vals) != 1 or None in vals:
+            sys.exit(f"rebaseline: captures disagree on or lack {field}: {vals}")
+        stamp[field] = vals.pop()
+    keys = bands(caps)
+    with open(args.out, "w", encoding="utf-8") as f:
+        f.write("{\n")
+        for field, v in stamp.items():
+            f.write(f" {json.dumps(field)}: {json.dumps(v)},\n")
+        f.write(f' "captures": {json.dumps(sorted(c.get("ts") for c in caps))},\n')
+        f.write(' "keys": {\n')
+        f.write(",\n".join(f"  {json.dumps(k)}: {json.dumps(v)}"
+                           for k, v in keys.items()))
+        f.write("\n }\n}\n")
+    multi = [k for k, v in keys.items() if len(v["fingerprints"]) > 1]
+    print(f"rebaseline: wrote {len(keys)} keys from {len(caps)} captures to "
+          f"{args.out}; {len(multi)} keys carry more than one fingerprint"
+          f"{': ' + ', '.join(multi) if multi else ''}")
 
 
 if __name__ == "__main__":

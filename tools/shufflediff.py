@@ -12,12 +12,12 @@ box drift; different fingerprints = diff the code.
 import json
 import sys
 
-# Compressed shuffle sizes jitter by a few tens of bytes across runs
-# (block-packing order — measured on dedup_components and
-# join_geo_nearest, <0.01%); a relative tolerance keeps the diff
-# signal plan-only. BASELINE.md "two measured caveats" documents this
-# plus the one AQE-elidable-exchange flicker (bipartite), which is
-# real bytes and SHOULD print.
+# Compressed shuffle sizes jitter across runs of one plan (block-packing
+# order): join_geo_nearest by 986 B of 687 KB (0.14%) across three
+# full-surface captures at local[32]/shuffle 32, every other key by 0 B;
+# a relative tolerance keeps the diff signal plan-only. An AQE-elidable exchange (bipartite) moves real
+# bytes and SHOULD print; bench_bands.json records such keys with more
+# than one accepted fingerprint.
 TOL = 0.002
 
 
