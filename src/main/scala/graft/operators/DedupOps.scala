@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,9 +16,13 @@ import graft.{Ckpt, Stage, Tables}
   * (candidate generation is equi-join-shaped, so it shuffles on band
   * keys and never materializes the cross product); n-gram Jaccard and
   * embedding near-dup run the exact computation only on bounded
-  * candidate sets. All hashing is deterministic with FIXED literal
-  * seed strings (SURVEY §7.4.5 — resumable); the near-dup keys use md5
-  * as the hash family so the DuckDB oracle can replay them exactly.
+  * candidate sets. Near-dup clusters (dedup_components) are labelled by
+  * union-find over one shuffle of the SimHash edges, with a
+  * pointer-jumping merge only across the partitions AQE splits that
+  * shuffle into ([[componentLabels]]). All hashing is deterministic
+  * with FIXED literal seed strings (SURVEY §7.4.5 — resumable); the
+  * near-dup keys use md5 as the hash family so the DuckDB oracle can
+  * replay them exactly.
   */
 object DedupOps {
   type Q = (SparkSession, String) => DataFrame
@@ -28,8 +34,12 @@ object DedupOps {
     * 64-slot vote array per group) rather than 64 sum(CASE WHEN …)
     * buffers plus a 64-term add — the same bits (a tie votes 0, as in
     * the oracle's SQL form) from one buffer per group instead of 64.
-    * Distinct tokens via explode+distinct (codegen + one shuffle), not
-    * explode(array_distinct(hof)) — the HOF inlining trap. */
+    * Distinct tokens per row via array_distinct(array_remove(…)) —
+    * neither is a higher-order function, so the HOF inlining trap does
+    * not apply — so the groupBy is the only shuffle. That needs
+    * `doc_id` unique in `docs` (two rows of one doc_id would vote a
+    * shared token twice); it is in every fixture and in GenScale's
+    * shifted copies. */
   private[graft] def simhashSigs(docs: DataFrame): DataFrame =
     // 60-bit token hash from md5's first 15 hex chars — md5 produces
     // identical hex on every engine, so the DuckDB oracle can replay
@@ -40,9 +50,8 @@ object DedupOps {
     // carries 12 live bits. Production can swap any faster uniform
     // 64-bit hash here without touching the shape.
     docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-      .filter(col("t") =!= "")
-      .distinct()
+      .select(col("doc_id"),
+        explode(array_distinct(array_remove(split(col("text"), " "), ""))).as("t"))
       .withColumn("h", expr(
         "CAST(conv(substring(md5(concat('simhash:', t)), 1, 15), 16, 10) AS BIGINT)"))
       .groupBy("doc_id")
@@ -150,10 +159,183 @@ object DedupOps {
     * bounding any bucket's join cost to O(bucket), not O(bucket²). */
   private val MinhashBandCap = 1000
 
-  /** Rows per task of the dedup_components partitioner
+  /** Rows per task of the dedup_components merge loop's partitioner
     * (Ckpt.Loop.partitioner): ~20k edges per task. The bounded graph
     * loops use 500k (GraphOps.FixpointRowsPerTask). */
   private val ComponentsRowsPerTask = 20000L
+
+  /** Connected-component labels (vertex, min vertex id of its
+    * component) of an edge list, with the shape of the run: `partitions`
+    * union-find tasks and `rounds` merge-loop rounds (0 when one task
+    * covered the whole graph). */
+  private[graft] final case class Labelling(labels: RDD[(Long, Long)],
+      partitions: Int, rounds: Int)
+
+  /** Connected components of `edges` (a, b: BIGINT) by union-find.
+    *
+    * The edges go through ONE shuffle keyed on `a` whose partition count
+    * AQE picks from the runtime size, and each task union-finds its
+    * partition's edges ([[unionFind]]): (vertex, local root) for every
+    * endpoint it holds, the root being the min id of the vertex's
+    * component within that partition. With one partition that IS the
+    * whole graph, so the labels are exact and nothing else runs. With
+    * more, a vertex can hold one local root per partition its edges
+    * landed in, and [[pointerJump]] merges across partitions over the
+    * star edges vertex – local root: they connect exactly the original
+    * components (each local component is a star around its root), a
+    * k-clique inside one partition becomes k - 1 edges, and the loop's
+    * fused round 0, min(v, neighbours), is v's smallest local root —
+    * the union-find seeds the loop. */
+  private[graft] def componentLabels(edges: DataFrame): Labelling = {
+    // queryExecution.toRdd runs the AQE stages, so the coalesced
+    // partition count is known here
+    val local = edges.select(col("a"), col("b")).repartition(col("a"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val a = new mutable.ArrayBuilder.ofLong
+        val b = new mutable.ArrayBuilder.ofLong
+        rows.foreach { r => a += r.getLong(0); b += r.getLong(1) }
+        unionFind(a.result(), b.result())
+      }
+    val parts = local.getNumPartitions
+    if (parts <= 1) Labelling(local, parts, 0)
+    else {
+      val star = local.flatMap { case (v, r) =>
+        if (v == r) Nil else Seq((v, r), (r, v)) }
+      val (labels, rounds) = pointerJump(edges.sparkSession, star)
+      Labelling(labels, parts, rounds)
+    }
+  }
+
+  /** Union-find by min over one edge list: (vertex, root) for every
+    * endpoint, in vertex order, root = the min id of its component.
+    * Primitive arrays only: the endpoints sorted and deduplicated into a
+    * vertex table, each endpoint found by binary search, one Int parent
+    * per vertex, path halving. The smaller root wins every union, and in
+    * a sorted table the smaller index is the smaller id. Memory is
+    * about 32 B per edge (the two endpoint arrays and the table before
+    * deduplication), plus one Int per vertex and the builders' growth
+    * slack. */
+  private[graft] def unionFind(a: Array[Long], b: Array[Long])
+      : Iterator[(Long, Long)] = {
+    val n = a.length
+    val ids = new Array[Long](2 * n)
+    System.arraycopy(a, 0, ids, 0, n)
+    System.arraycopy(b, 0, ids, n, n)
+    java.util.Arrays.sort(ids)
+    var nv = 0
+    var i = 0
+    while (i < ids.length) {
+      if (nv == 0 || ids(i) != ids(nv - 1)) { ids(nv) = ids(i); nv += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(nv)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, nv, v)
+    i = 0
+    while (i < n) {
+      val ra = find(index(a(i)))
+      val rb = find(index(b(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    Iterator.tabulate(nv)(j => (ids(j), ids(find(j))))
+  }
+
+  /** Min-label propagation with hooking and pointer jumping over the
+    * symmetric edge list `und` (every vertex appears as a key):
+    * (vertex, min id of its component) and the number of rounds.
+    *
+    * A label is a pointer to the vertex of that id (its holder). Each
+    * round x takes the min of its neighbours' labels (nmin), the holder
+    * of x's label takes the min nmin of every vertex pointing at it
+    * (the hook), and x then jumps to its new label's new label. Without
+    * the hook a holder only learns from its own neighbours, so a label
+    * crosses a long run of vertices about one hop per round: that loop
+    * did not converge in 50 rounds on a 20,000-vertex path with shuffled
+    * ids and took 25 on 40 chained 12-cliques, where this one, seeded
+    * by a 4-partition union-find, takes 13 and 4 (OperatorSpec pins
+    * the counts). The hook is the stochastic hooking of FastSV (Zhang,
+    * Azad and Hu, SIAM PP 2020), of the Shiloach–Vishkin family; it
+    * costs one more small shuffle a round.
+    *
+    * Runs on partitioner-aware RDDs — the documented exception to
+    * DataFrame-first (SURVEY §7.3): each round as a fresh DataFrame plan
+    * paid ~0.8 s of whole-stage codegen (measured at sf0.1) vs ~0.3 s for
+    * the identical joins on RDDs under one shared HashPartitioner (the
+    * GraphX execution model). Each generation is pinned with truncate =
+    * true (persisted at Ckpt.Level, then reliably checkpointed —
+    * `spark.graft.checkpointDir` — or localCheckpointed), so round N
+    * never recomputes rounds 1..N-1, and released — blocks and, durable,
+    * checkpoint files — once its successor is materialized and the
+    * change count, its last reader, has run: a run holds O(1)
+    * generations, not O(rounds). */
+  private[graft] def pointerJump(s: SparkSession, und: RDD[(Long, Long)])
+      : (RDD[(Long, Long)], Int) = {
+    val loop = Ckpt.loop(s)
+    val part = loop.partitioner(und.count(), ComponentsRowsPerTask)
+    val minL = (a: Long, b: Long) => math.min(a, b)
+    // (y, x): keyed by the neighbour whose label flows to x — und is
+    // symmetric, so it already is that set. No eager count: round 1's
+    // one action materializes byY, lab and its own generation.
+    val byY = loop.pin(und.partitionBy(part), truncate = true)
+    // Fused round 0: with identity labels the first min-neighbour step
+    // is just min(x, min over neighbours of x) — one reduceByKey, no
+    // join, and the symmetric edge list guarantees every vertex
+    // appears as an x.
+    var lab = loop.pin(byY.map { case (y, x) => (x, math.min(x, y)) }
+      .reduceByKey(part, minL), truncate = true)
+    var changed = 1L
+    var rounds = 0
+    while (changed != 0L) {
+      require(rounds < 50, "dedup_components: no convergence in 50 rounds")
+      val nmin = byY.join(lab).map { case (_, (x, l)) => (x, l) }
+        .reduceByKey(part, minL)
+      val labNmin = lab.join(nmin)
+      val hook = labNmin
+        .flatMap { case (_, (l, n)) => if (n < l) Some((l, n)) else None }
+        .reduceByKey(part, minL)
+      // stepped carries (oldLabel, newLabel) so change detection rides
+      // the jump join instead of a separate jumped⋈lab join per round;
+      // every holder is a vertex of lab, so the hook is a left join
+      val stepped = labNmin.leftOuterJoin(hook).mapValues { case ((l, n), h) =>
+        (l, math.min(math.min(l, n), h.getOrElse(l))) }
+      // pointer jump: labels only ever hold existing ids, so
+      // label(label(x)) is a self-join on the (new) label value.
+      // Change detection: a LongAccumulator bumped where the final label
+      // differs from the round-entry label. Under task retry it may
+      // double-apply, so its VALUE is only an upper bound on the change
+      // count — but the loop tests exactly `!= 0`, and zero is
+      // retry-proof: a no-change task adds 0 however often it reruns,
+      // and a changed task adds ≥1 on every successful run. (A
+      // floating-point label SUM would instead absorb a small last-round
+      // decrease once totals pass 2^53 and exit before the fixpoint.)
+      val chAcc = s.sparkContext.longAccumulator("componentsChangedUB")
+      val jumped = loop.pin(stepped.map { case (x, (ol, c)) => (c, (x, ol)) }
+        .join(stepped.mapValues(_._2))
+        .map { case (c, ((x, ol), cc)) =>
+          val n = math.min(c, cc)
+          if (n != ol) chAcc.add(1L)
+          (x, n)
+        }
+        .partitionBy(part), truncate = true)
+      // the count is the checkpoint-materializing action; the
+      // accumulator is complete once it returns
+      jumped.count()
+      changed = chAcc.value
+      loop.release(lab) // jumped is materialized; the old round can go
+      lab = jumped
+      rounds += 1
+    }
+    // byY's last reader is the final round's nmin join; the final
+    // generation is released by the harness once the key's result is
+    // materialized (Ckpt.releaseScratch)
+    (loop.finish(lab), rounds)
+  }
 
   /** Banded MinHash index of a corpus: (doc_id, m1..m16, band, bh).
     *
@@ -406,119 +588,12 @@ object DedupOps {
       // real pipeline runs AFTER candidate generation, so each
       // duplicate cluster collapses to one representative (the min
       // doc_id label). Pair generation (simhashEdges: one native
-      // simhash64 aggregate, no sort) stays declarative and is
-      // localCheckpointed once; the fixpoint loop then runs on
-      // partitioner-aware RDDs — the documented exception to
-      // DataFrame-first (SURVEY §7.3): each loop round builds a FRESH
-      // DataFrame plan, and whole-stage codegen compilation alone costs
-      // ~0.8 s/round (measured at sf0.1) vs ~0.3 s/round for the
-      // identical joins on RDDs with a shared HashPartitioner (the
-      // GraphX execution model). Each round propagates the min label
-      // along edges and pointer-jumps (label(x) ← label(label(x)),
-      // O(log diameter) rounds); per-round checkpoint truncates
-      // lineage so round N never recomputes rounds 1..N-1 — durable
-      // (`spark.graft.checkpointDir`, see Ckpt) when configured, else
-      // localCheckpoint. Convergence = zero labels changed this round,
-      // counted exactly over a co-partitioned (narrow) self-join; a
-      // floating-point label SUM would silently absorb a small
-      // last-round decrease once totals pass 2^53 (~1e8 docs), exiting
-      // before the fixpoint.
-      val loop = Ckpt.loop(s)
-      // The edge SET is all the fixpoint reads (labels are min doc_ids
-      // whatever the edge order), so no range shuffle sorts it first.
-      val edges = simhashEdges(Tables.documents(s, d)).select(col("a"), col("b"))
-      // Durable runs reliably checkpoint the edge list too: a
-      // localCheckpoint's blocks live only on executors, so losing an
-      // executor BEFORE byY materializes would kill exactly the job
-      // the durable conf is meant to keep alive (proven by the round-9
-      // worker-kill probe). Ckpt.df persists before the reliable
-      // checkpoint so the checkpoint job reads the just-computed
-      // blocks instead of recomputing the full simhashEdges lineage a
-      // second time (the same discipline as the fixpoint rounds below).
-      val und = Ckpt.df(
-        edges.union(edges.select(col("b").as("a"), col("a").as("b"))))
-      // ~20k edges per task (Loop.partitioner). und is an EAGER
-      // checkpoint, so the count here reads materialized blocks, not a
-      // recompute.
-      val part = loop.partitioner(und.count(), ComponentsRowsPerTask)
-      // Each generation is pinned with truncate = true (persisted at
-      // Ckpt.Level, then reliably checkpointed or localCheckpointed), so
-      // round N never recomputes rounds 1..N-1, and released — blocks
-      // and, durable, checkpoint files — in BOTH modes once its
-      // successor is materialized and the change count, its last
-      // reader, has run: a run holds O(1) generations, not O(rounds)
-      // (unreleased local generations were the round-17 suite-context
-      // churn: fixpoint keys ran ~2× their solo time in a bench pass).
-      // (y, x): keyed by the neighbor whose label flows to x.
-      // Round 18: no eager byY.count()/lab.count() — the prefix stays
-      // LAZY (persist + localCheckpoint marks only) and round 1's one
-      // action materializes byY, lab and round 1's own generation in a
-      // single job (guide §2/§7: two fewer driver barriers per run;
-      // correctness unchanged — localCheckpoint truncation happens at
-      // first materialization regardless of which action drives it).
-      val byY = loop.pin(
-        und.rdd.map(r => (r.getLong(1), r.getLong(0))).partitionBy(part),
-        truncate = true)
-      // Fused round 0: with identity labels the first min-neighbor step
-      // is just min(x, min over neighbors of x) — one reduceByKey, no
-      // join, and the undirected edge list guarantees every vertex
-      // appears as an x. Saves a full join+jump round per run.
-      var lab = loop.pin(byY.map { case (y, x) => (x, math.min(x, y)) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)),
-        truncate = true)
-      var changed = 1L
-      var rounds = 0
-      while (changed != 0L) {
-        require(rounds < 50, "dedup_components: no convergence in 50 rounds")
-        val nmin = byY.join(lab).map { case (_, (x, l)) => (x, l) }
-          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        // stepped carries (oldLabel, newLabel) so change detection can
-        // ride the jump join instead of paying a separate jumped⋈lab
-        // join per round (round 18; the old label adds 8 bytes/row to
-        // ONE side of the jump shuffle and deletes a whole
-        // co-partitioned join + its scan of both persisted tables).
-        val stepped = lab.leftOuterJoin(nmin)
-          .mapValues { case (l, o) => (l, math.min(l, o.getOrElse(l))) }
-        // pointer jump: labels only ever hold existing doc_ids, so
-        // label(label(x)) is a self-join on the (new) label value.
-        // Change detection: a LongAccumulator bumped where the final
-        // label differs from the round-entry label. Accumulator updates
-        // in a transformation may double-apply under task retry, so the
-        // VALUE is only an upper bound on the true change count — but
-        // the loop tests exactly `!= 0`, and zero is retry-proof: a
-        // no-change task adds 0 no matter how often it reruns, and a
-        // changed task adds ≥1 on every successful run, so value == 0
-        // ⟺ true count == 0. The old exact-count join made the same
-        // loop decisions (its count was only ever compared to 0); the
-        // label arithmetic is untouched, so the fixpoint — and the
-        // output — is bit-identical.
-        val chAcc = s.sparkContext.longAccumulator("componentsChangedUB")
-        val jumped = loop.pin(stepped.map { case (x, (ol, c)) => (c, (x, ol)) }
-          .join(stepped.mapValues(_._2))
-          .map { case (c, ((x, ol), cc)) =>
-            val n = math.min(c, cc)
-            if (n != ol) chAcc.add(1L)
-            (x, n)
-          }
-          .partitionBy(part), truncate = true)
-        // the count is the checkpoint-materializing action; the
-        // accumulator is complete once it returns
-        jumped.count()
-        changed = chAcc.value
-        loop.release(lab) // jumped is materialized; the old round can go
-        lab = jumped
-        rounds += 1
-      }
-      // Round 17 block hygiene: the loop's inputs are dead once the
-      // fixpoint converges — the output depends ONLY on the final
-      // label generation's own (checkpointed) blocks — so the edge
-      // structures release here instead of lingering until a GC cycle
-      // feeds the ContextCleaner (und is read exactly twice, both
-      // materializations above; byY's last reader is the final round's
-      // nmin join). The final generation is released by the harness
-      // once the key's result is materialized (Ckpt.releaseScratch).
-      loop.finish(lab,
-        org.apache.spark.sql.GraftSqlBridge.backingRdd(und).toSeq: _*)
+      // simhash64 aggregate, no sort) stays declarative; the labels
+      // come from one union-find shuffle, merged across partitions by
+      // pointer jumping only when AQE splits it (componentLabels). The
+      // edge SET is all the labelling reads, so no range shuffle sorts
+      // it first.
+      val lab = componentLabels(simhashEdges(Tables.documents(s, d))).labels
       val sess = s
       import sess.implicits._
       lab.toDF("doc_id", "component").orderBy("doc_id")

@@ -125,9 +125,18 @@ object GraphOps {
     * the round-17 sssp rewrite). */
   private val FixpointRowsPerTask = 500000L
 
+  /** Bits of a packed (neighbour, weight) long that carry the weight:
+    * [[frontierRelax]] shuffles (node, neighbour << 4 | w), so both
+    * graph_khop (w = 1) and graph_sssp (w in 1..9) move (Long, Long)
+    * pairs, not (Long, (Long, Long)). Ids must fit in 59 bits. */
+  private val WeightBits = 4
+  private val WeightMask = (1L << WeightBits) - 1
+  private val MaxPackedId = Long.MaxValue >>> WeightBits
+
   /** graph_khop's and graph_sssp's fixpoint: frontier Bellman-Ford, 3
-    * rounds, over the undirected edges `e` (a, b, w: BIGINT) from the
-    * nodes whose part has p_size = 50. Round k relaxes ONLY the nodes
+    * rounds, over the undirected edges `e` (a, b, w: BIGINT; w packs
+    * into the neighbour id, see [[WeightBits]]) from the nodes whose
+    * part has p_size = 50. Round k relaxes ONLY the nodes
     * whose label improved in round k-1, so after k rounds dist = min
     * cost over ≤k-edge paths while per-round work tracks the improving
     * set, not the whole label table. Per round the only wide shuffle
@@ -145,7 +154,11 @@ object GraphOps {
     val part = rounds.partitioner(e.count() * 2, FixpointRowsPerTask)
     val wu = e.select("a", "b", "w").rdd.flatMap { r =>
       val a = r.getLong(0); val b = r.getLong(1); val w = r.getLong(2)
-      Seq((a, (b, w)), (b, (a, w)))
+      require(w >= 1 && w <= WeightMask,
+        s"frontierRelax: edge ($a, $b) weight $w outside 1..$WeightMask")
+      require(a >= 0 && a <= MaxPackedId && b >= 0 && b <= MaxPackedId,
+        s"frontierRelax: edge ($a, $b) id outside 0..$MaxPackedId")
+      Seq((a, (b << WeightBits) | w), (b, (a << WeightBits) | w))
     }.partitionBy(part).persist(Ckpt.Level)
     var dist = rounds.pin(
       seeds.rdd.map(r => (r.getLong(0), 0L)).partitionBy(part))
@@ -153,7 +166,7 @@ object GraphOps {
     var frontier = dist
     for (_ <- 1 to 3) {
       val relax = wu.join(frontier)
-        .map { case (_, ((dst, w), dv)) => (dst, dv + w) }
+        .map { case (_, (nw, dv)) => (nw >>> WeightBits, dv + (nw & WeightMask)) }
         .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
       val improved = rounds.pin(
         relax.leftOuterJoin(dist)

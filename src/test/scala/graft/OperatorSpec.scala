@@ -283,6 +283,93 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  /** Component labels (vertex -> min id of its component) by a
+    * driver-side BFS from each vertex in ascending order. */
+  private def bfsLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    val lab = scala.collection.mutable.Map.empty[Long, Long]
+    for (v <- adj.keys.toSeq.sorted if !lab.contains(v)) {
+      lab(v) = v
+      val queue = scala.collection.mutable.Queue(v)
+      while (queue.nonEmpty)
+        adj(queue.dequeue()).filterNot(lab.contains).foreach { y =>
+          lab(y) = v
+          queue.enqueue(y)
+        }
+    }
+    lab.toMap
+  }
+
+  /** The labelling graphs, each with the round count of the
+    * min-label + pointer-jumping loop that union-find replaced, run on
+    * the same graph (the path: that loop's 50-round cap, which it hit
+    * without converging). */
+  private val labellingGraphs: Seq[(String, Seq[(Long, Long)], Int)] = {
+    val rnd = new scala.util.Random(20261020L)
+    // distinct ids in random order, so no structure follows the ids
+    def ids(n: Int): IndexedSeq[Long] =
+      rnd.shuffle((0L until n.toLong).map(_ * 7919L + 13L))
+    val path = ids(20000).sliding(2).map(p => (p(0), p(1))).toSeq
+    val star = {
+      val v = ids(10001)
+      v.tail.map(leaf => (v.head, leaf))
+    }
+    val cliques = {
+      val v = ids(40 * 12).grouped(12).toIndexedSeq
+      v.flatMap(c => c.combinations(2).map(p => (p(0), p(1)))) ++
+        v.sliding(2).map(p => (p(0).last, p(1).head))
+    }
+    val pairs = ids(4000).grouped(2).map(p => (p(0), p(1))).toSeq
+    Seq(("shuffled 20k path", path, 50), ("star", star, 2),
+      ("chain of cliques", cliques, 25), ("isolated pairs", pairs, 1))
+  }
+
+  for ((name, g, jumpRounds) <- labellingGraphs; split <- Seq(false, true)) {
+    val mode = if (split) "several partitions" else "one partition"
+    test(s"dedup_components labelling: $name, $mode, equals BFS") {
+      import spark.implicits._
+      // either endpoint order: the labelling must not rely on a < b
+      val edges = g.map { case (a, b) => if ((a ^ b) % 2 == 0) (a, b) else (b, a) }
+      try {
+        // without AQE the union-find shuffle keeps all of
+        // spark.sql.shuffle.partitions; with it, a graph this small
+        // coalesces to one partition
+        if (split) spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val run = operators.DedupOps.componentLabels(edges.toDF("a", "b"))
+        assert(run.labels.collect().toMap === bfsLabels(g))
+        Ckpt.releaseScratch()
+        assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
+          "the loop left persisted RDDs past releaseScratch")
+        if (!split) assert((run.partitions, run.rounds) === ((1, 0)))
+        else {
+          assert(run.partitions > 1, run)
+          info(s"${run.partitions} partitions, ${run.rounds} rounds; " +
+            s"pointer jumping alone: $jumpRounds")
+          assert(run.rounds <= jumpRounds, run)
+        }
+      } finally {
+        spark.conf.unset("spark.sql.adaptive.enabled")
+        Ckpt.releaseScratch()
+      }
+    }
+  }
+
+  test("dedup_components runs at most 10 jobs at sf0.01") {
+    val m = new Harness.KeyMetrics(spark.sparkContext)
+    val r = try m.measure {
+      SparkEntry.queries("dedup_components")(spark, Spec.sf01)
+        .write.format("noop").mode("overwrite").save()
+      0L
+    } finally {
+      m.close()
+      Ckpt.releaseScratch()
+    }
+    info(r.toString)
+    assert(r.jobs <= 10, r)
+  }
+
   test("kmeans two-level coarse assignment: bounded quantizer loss vs the exact scan") {
     // The O(N·√k) two-level rung is the DECLARED path (round 9); the
     // exact O(N·k) scan stays behind coarseAssign=false as the
