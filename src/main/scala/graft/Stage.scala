@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Fixture staging through the Hadoop FileSystem API.
   *
-  * Sample inputs for the scan_* keys are tiny literal fixtures that must
-  * exist at a stable path for both Spark and the DuckDB oracle. They are
-  * written through the *Hadoop* filesystem (not java.nio) so that on a
-  * real cluster the bytes land on the cluster-visible default FS
+  * Two contracts, one call each:
+  *  - a code-literal fixture at a path the oracle reads: [[writeOnce]];
+  *  - a derived table keyed by its inputs (graph edges, dedup labels,
+  *    PQ codebooks, lineitem twins): [[stored]].
+  *
+  * Both write through the *Hadoop* filesystem (not java.nio) so that on
+  * a real cluster the bytes land on the cluster-visible default FS
   * (HDFS/S3A), readable by every executor; under local[*] the default FS
   * is file:// and the oracle reads the same local path. A driver-local
   * java.nio write would silently break on the first multi-node deploy.
@@ -84,7 +87,7 @@ object Stage {
       new java.io.BufferedOutputStream(create(s, path), 1 << 16))
   }
 
-  def exists(s: SparkSession, path: String): Boolean =
+  private def exists(s: SparkSession, path: String): Boolean =
     fs(s, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** (length, mtime) of the file each [[writeOnce]] call last wrote. */
@@ -115,31 +118,58 @@ object Stage {
       path
     }
 
-  /** Check-then-write under the staging lock: run `write` only if
-    * `path/_SUCCESS` is absent, then return `path`. The lock closes the
-    * race where two concurrently-invoked queries both see no marker and
-    * overwrite the same /tmp twin mid-read. */
-  def materializeOnce(s: SparkSession, path: String)(write: => Unit): String =
+  /** [[writeOnce]] of literal bytes. */
+  def writeOnce(s: SparkSession, path: String, bytes: Array[Byte]): String =
+    writeOnce(s, path)(write(s, path, bytes))
+
+  /** Where [[stored]] keeps `kind` derived from `inputs` (table names
+    * under the scale dir `d`): `graft_<kind>_<d, sanitised>_<stamp>`,
+    * the stamp being [[inputStamp]] of each `$d/<input>.parquet`. */
+  def storedPath(s: SparkSession, kind: String, d: String,
+      inputs: String*): String =
+    p(s, s"graft_${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
+      inputStamp(s, inputs.map(t => s"$d/$t.parquet"): _*))
+
+  /** Build a derived artifact once per input snapshot and return its
+    * path ([[storedPath]]). Under the staging lock, `build` runs with
+    * the path only while `path/_SUCCESS` is absent, and the marker is
+    * written after it when the writer left none (a directory of
+    * sub-tables, say). The lock closes the race where two concurrent
+    * queries both see no marker and overwrite the same twin mid-read;
+    * the input stamp in the path means a regenerated input resolves to
+    * a fresh path, so a stale marker is never consulted. */
+  def stored(s: SparkSession, kind: String, d: String, inputs: String*)(
+      build: String => Unit): String =
     synchronized {
-      if (!exists(s, s"$path/_SUCCESS")) write
+      val path = storedPath(s, kind, d, inputs: _*)
+      val marker = s"$path/_SUCCESS"
+      if (!exists(s, marker)) {
+        build(path)
+        if (!exists(s, marker)) write(s, marker, Array.emptyByteArray)
+      }
       path
     }
+
+  /** [[stored]] for the common case: `df` written as parquet, read back. */
+  def storedParquet(s: SparkSession, kind: String, d: String,
+      inputs: String*)(df: => DataFrame): DataFrame =
+    s.read.parquet(stored(s, kind, d, inputs: _*)(
+      df.write.mode("overwrite").parquet(_)))
 
   /** Cheap input fingerprint for derived-table cache paths: FNV-1a over
     * each source path's name, total length, and newest modification
     * time (recursive content summary + file statuses — metadata only,
     * no data scan).
     *
-    * Derived /tmp twins (graph edge lists, dedup component labels,
-    * sorted/z-ordered lineitem copies) are keyed by scale-dir tag and
-    * guarded by a `_SUCCESS` marker, which is correct until the driver
-    * regenerates the fixtures IN PLACE (it has: round 5) — then a
-    * stale marker would silently serve derived data from the previous
-    * fixture generation. Folding this stamp into the path makes a
-    * regenerated input resolve to a FRESH path (old caches are simply
-    * abandoned), so staleness is structurally impossible rather than
-    * policed. A rewrite with identical bytes also rotates the path
-    * (mtime moved) — one redundant rebuild, never a wrong answer. */
+    * A [[stored]] artifact is guarded by a `_SUCCESS` marker, which
+    * alone is correct only until the fixtures are regenerated IN PLACE
+    * (they have been: round 5) — then a stale marker would silently
+    * serve derived data from the previous fixture generation. Folding
+    * this stamp into the path makes a regenerated input resolve to a
+    * FRESH path (old caches are simply abandoned), so staleness is
+    * structurally impossible rather than policed. A rewrite with
+    * identical bytes also rotates the path (mtime moved) — one
+    * redundant rebuild, never a wrong answer. */
   def inputStamp(s: SparkSession, paths: String*): String = {
     var acc = 0xcbf29ce484222325L
     def mix(v: Long): Unit = { acc ^= v; acc *= 0x100000001b3L }

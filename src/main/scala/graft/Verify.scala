@@ -8,7 +8,7 @@ object Verify {
     // SPARK_GRAFT_MASTER (Harness) runs the same main against a real
     // cluster manager — the multi-JVM parity path. MULTI-HOST clusters
     // must set spark.graft.stage.dir (Stage.DirConf) to a shared
-    // path/URI: under /tmp on file://, the Stage.materializeOnce parts
+    // path/URI: under /tmp on file://, the Stage.stored artifact parts
     // would land on per-executor local disks and a later read silently
     // truncate. The same-host standalone parity run needs nothing.
     val spark = Harness.session()

@@ -510,20 +510,13 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  /** Stored component labels — built ONCE per corpus snapshot from the
-    * dedup_components fixpoint (path carries Stage.inputStamp so a
-    * regenerated fixture rotates the cache), read by every consumer
-    * (dedup_apply, dedup_cluster_stats). */
-  private def componentLabelsStored(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Stage.inputStamp(s, s"$d/documents.parquet")
-    val path = Stage.p(s, s"graft_components_$tag")
-    val labPath = Stage.materializeOnce(s, path) {
-      queries("dedup_components")(s, d)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(labPath)
-  }
+  /** Stored component labels — built ONCE per corpus snapshot from
+    * dedup_components ([[Stage.stored]]: a regenerated documents
+    * fixture rotates the path), read by every consumer (dedup_apply,
+    * dedup_cluster_stats). */
+  private def componentLabelsStored(s: SparkSession, d: String): DataFrame =
+    Stage.storedParquet(s, "components", d, "documents")(
+      queries("dedup_components")(s, d))
 
   val queries: Map[String, Q] = Map(
     "dedup_exact" -> ((s, d) => {
@@ -592,11 +585,13 @@ object DedupOps {
       // come from one union-find shuffle, merged across partitions by
       // pointer jumping only when AQE splits it (componentLabels). The
       // edge SET is all the labelling reads, so no range shuffle sorts
-      // it first.
-      val lab = componentLabels(simhashEdges(Tables.documents(s, d))).labels
+      // it first; one union-find task already emits its labels in
+      // doc_id order, so only a merged run sorts them afterwards.
+      val run = componentLabels(simhashEdges(Tables.documents(s, d)))
       val sess = s
       import sess.implicits._
-      lab.toDF("doc_id", "component").orderBy("doc_id")
+      val lab = run.labels.toDF("doc_id", "component")
+      if (run.partitions <= 1) lab else lab.orderBy("doc_id")
     }),
 
     "dedup_apply" -> ((s, d) => {
@@ -610,8 +605,8 @@ object DedupOps {
       // anti join against the (pair-participant-sized) drop list — at
       // 100 TB that list is the rare-duplicate slice, orders of
       // magnitude smaller than the corpus.
-      // Path carries Stage.inputStamp(documents): a regenerated fixture
-      // rotates the cache path, so stored labels can never go stale
+      // The stored path is keyed by the documents stamp: a regenerated
+      // fixture rotates it, so stored labels can never go stale
       // against the corpus they label (round-5 lesson).
       val drop = componentLabelsStored(s, d)
         .filter(col("doc_id") =!= col("component")).select("doc_id")

@@ -29,8 +29,8 @@ import graft.{Ckpt, Det, Stage, Tables}
   * before pairing — same discipline as dedup_simhash's hot-bucket cap).
   *
   * Scale notes (100 TB):
-  *  - The edge table is built ONCE per snapshot and stored
-  *    (Stage.materializeOnce → parquet), then every analytics key reads
+  *  - The edge table is built ONCE per lineitem snapshot and stored
+  *    (Stage.storedParquet), then every analytics key reads
   *    the stored table: build-once/query-many, exactly the production
   *    shape — and the single most effective shuffle saver here, since
   *    all four keys share the self-join+distinct that derives the edges.
@@ -101,13 +101,6 @@ object GraphOps {
       .select(col("node"), col("degree").as("core_degree"))
       .orderBy("node")
   }
-
-  /** Derived-graph cache paths carry Stage.inputStamp(lineitem) so a
-    * driver-side fixture regeneration rotates the path instead of
-    * serving a stale `_SUCCESS`-marked snapshot. */
-  private def gpath(s: SparkSession, d: String, kind: String): String =
-    Stage.p(s, s"graft_${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
-      Stage.inputStamp(s, s"$d/lineitem.parquet"))
 
   /** Rows per task of [[frontierRelax]]'s shared partitioner
     * (Ckpt.Loop.partitioner). Round 17 moved sssp and khop onto the
@@ -186,16 +179,14 @@ object GraphOps {
   /** Canonical undirected edge list (a < b), built once per fixture dir
     * and stored — all graph keys read the stored table. */
   private def edges(s: SparkSession, d: String): DataFrame = {
-    val p = Stage.materializeOnce(s, gpath(s, d, "edges")) {
+    Stage.storedParquet(s, "edges", d, "lineitem") {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
         .select(col("x.pk").as("a"), col("y.pk").as("b"))
         .distinct()
-        .write.mode("overwrite").parquet(gpath(s, d, "edges"))
     }
-    s.read.parquet(p)
   }
 
   /** Symmetric (directed-both-ways) view of the stored edges. */
@@ -229,12 +220,10 @@ object GraphOps {
     * and any corpus-weighting join downstream), so the 3-round fixpoint
     * runs once per snapshot and everything else reads parquet. */
   private def lpaLabels(s: SparkSession, d: String): DataFrame = {
-    val p = Stage.materializeOnce(s, gpath(s, d, "lpa")) {
+    Stage.storedParquet(s, "lpa", d, "lineitem") {
       lpaOnUnd(und(s, d),
         degrees(s, d).select(col("node"), col("node").as("label")))
-        .write.mode("overwrite").parquet(gpath(s, d, "lpa"))
     }
-    s.read.parquet(p)
   }
 
   /** The LPA fixpoint core over an explicit symmetric edge list and
@@ -283,7 +272,7 @@ object GraphOps {
     * (build-once/query-many); integer costs keep every path sum exact
     * and order-independent in both engines. */
   private def wedges(s: SparkSession, d: String): DataFrame = {
-    val p = Stage.materializeOnce(s, gpath(s, d, "wedges")) {
+    Stage.storedParquet(s, "wedges", d, "lineitem") {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -293,24 +282,20 @@ object GraphOps {
         .agg(count(lit(1)).as("cnt"))
         .select(col("a"), col("b"),
           (lit(10L) - least(col("cnt"), lit(9L))).cast(LongType).as("w"))
-        .write.mode("overwrite").parquet(gpath(s, d, "wedges"))
     }
-    s.read.parquet(p)
   }
 
 
   /** Per-node degree over the symmetric edges — stored next to the edge
-    * table (its own materializeOnce: degree is a graph attribute every
+    * table (its own stored artifact: degree is a graph attribute every
     * analytics pass needs, so PageRank's per-iteration deg reference and
     * the triangle orientation both become parquet scans instead of
     * repeated groupBy shuffles). */
   private def degrees(s: SparkSession, d: String): DataFrame = {
-    val p = Stage.materializeOnce(s, gpath(s, d, "degrees")) {
+    Stage.storedParquet(s, "degrees", d, "lineitem") {
       und(s, d).groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("degree"))
-        .write.mode("overwrite").parquet(gpath(s, d, "degrees"))
     }
-    s.read.parquet(p)
   }
 
   /** graph_bipartite_project's capped per-customer part array
@@ -364,7 +349,7 @@ object GraphOps {
     * The closure probe hash-builds the edge side (shuffle_hash hint):
     * sort-merge would sort the 41M-row wedge side. */
   private def triangles(s: SparkSession, d: String): DataFrame = {
-    val p = Stage.materializeOnce(s, gpath(s, d, "triangles")) {
+    Stage.storedParquet(s, "triangles", d, "lineitem") {
       val dg = degrees(s, d)
       val wd = edges(s, d)
         .join(dg.select(col("node").as("a"), col("degree").as("da")), "a")
@@ -385,9 +370,7 @@ object GraphOps {
         .hint("shuffle_hash")
       wedges.join(o3, col("t1") === col("s3") && col("t2") === col("t3"))
         .select(col("s"), col("t1"), col("t2"))
-        .write.mode("overwrite").parquet(gpath(s, d, "triangles"))
     }
-    s.read.parquet(p)
   }
 
   val queries: Map[String, Q] = Map(
@@ -707,12 +690,10 @@ object GraphOps {
       // per-run window rebuild was this key's dominant shuffle
       // (~2m-row sort per pass, every pass). Seeds are the 20
       // md5-smallest nodes (probe convention).
-      val adjP = Stage.materializeOnce(s, gpath(s, d, "adjidx")) {
+      val adj = Stage.storedParquet(s, "adjidx", d, "lineitem") {
         und(s, d).withColumn("idx", row_number().over(
             Window.partitionBy("src").orderBy("dst")) - 1)
-          .write.mode("overwrite").parquet(gpath(s, d, "adjidx"))
       }
-      val adj = s.read.parquet(adjP)
       val dg = degrees(s, d)
       val seeds = dg
         .orderBy(md5(col("node").cast(StringType)), col("node"))

@@ -141,12 +141,10 @@ object Multimodal {
       // parallelizes per file (small files pack into tasks under
       // maxPartitionBytes); the projection here builds the content-
       // addressed manifest (name, length, sha-256) that multimodal_
-      // digest then dedups on. Fixture blobs stage once per session.
+      // digest then dedups on. Each fixture blob is staged once while
+      // unchanged.
       val dir = Stage.p(s, "graft_blobs")
-      Stage.materializeOnce(s, dir) {
-        blobFixture.foreach { case (n, b) => Stage.write(s, s"$dir/$n", b) }
-        Stage.write(s, s"$dir/_SUCCESS", Array.emptyByteArray)
-      }
+      blobFixture.foreach { case (n, b) => Stage.writeOnce(s, s"$dir/$n", b) }
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(dir)
         .select(element_at(split(col("path"), "/"), -1).as("name"),
           col("length"), sha2(col("content"), 256).as("sha256"))

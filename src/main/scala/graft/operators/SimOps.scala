@@ -829,8 +829,8 @@ object SimOps {
     * (the sim_ann_ivf cev discipline) so both engines carry
     * bit-identical centroids into the next round. */
   /** Two-level (coarse-quantizer) nearest-centroid assignment — the
-    * DECLARED path since round 9 (`spark.graft.kmeans.coarseAssign=
-    * false` falls back to the exact broadcast scan): route each vector
+    * DECLARED path since round 9 (the exact broadcast scan survives
+    * only as [[testKmeansAssigned]]'s reference): route each vector
     * to its top-2 nearest of ⌈√k⌉ coarse cells (the md5-smallest fine
     * centers), then scan only those cells' fine centers — O(N·√k·d)
     * per round instead of O(N·k·d), the IVF tree idea applied to the
@@ -838,7 +838,7 @@ object SimOps {
     * vector whose true center sits outside both probed coarse cells
     * mis-assigns — classic quantizer loss, bounded in OperatorSpec by
     * label-agreement and inertia-ratio floors against the exact
-    * fallback), but fully DETERMINISTIC and REPLAYED BY THE ORACLE
+    * scan), but fully DETERMINISTIC and REPLAYED BY THE ORACLE
     * verbatim (kmAssign routes identically in DuckDB), so declared
     * correctness is exact-by-construction: the gate hashes the same
     * algorithm in both engines. Scale honesty: at toy k (√N keeps
@@ -900,17 +900,15 @@ object SimOps {
         first(col("embedding")).as("embedding"))
   }
 
-  private def kmeansAssigned(s: SparkSession, emb: DataFrame): DataFrame = {
+  private def kmeansAssigned(emb: DataFrame, exact: Boolean = false)
+      : DataFrame = {
     // Round 9: the two-level coarse assignment IS the declared path —
     // the oracle replays its routing exactly (see kmAssign), so the
-    // O(N·√k·d) rung no longer trades replayability for scale. Setting
-    // spark.graft.kmeans.coarseAssign=false falls back to the exact
-    // O(N·k·d) broadcast scan (kept as the quantizer-loss reference:
-    // OperatorSpec bounds the two paths against each other).
-    val exactGate = s.conf
-      .getOption("spark.graft.kmeans.coarseAssign").contains("false")
+    // O(N·√k·d) rung no longer trades replayability for scale. `exact`
+    // runs the O(N·k·d) broadcast scan instead, the quantizer-loss
+    // reference OperatorSpec bounds the declared path against.
     def assign(cents: DataFrame): DataFrame =
-      if (!exactGate) assignTwoLevel(emb, cents)
+      if (!exact) assignTwoLevel(emb, cents)
       else emb.join(broadcast(cents))
         .withColumn("d2l", expr("l2fx(embedding, cent_emb)"))
         .groupBy(col("vec_id"))
@@ -1005,60 +1003,32 @@ object SimOps {
   }
 
   /** Stored TRAINED codebook — the production index artifact: trained
-    * once per corpus snapshot (Stage.materializeOnce, path keyed by
-    * Stage.inputStamp(embeddings) so regeneration rotates it), then
-    * every encode/search pass reads the tiny parquet instead of
-    * re-running the Lloyd round. Identical rows to pqCents(emb) — the
-    * pipeline is deterministic — so the oracles are unaffected. */
-  private def pqCentsStored(s: SparkSession, d: String): DataFrame = {
-    val path = graft.Stage.p(s,
-      s"graft_pqcents_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
-        graft.Stage.inputStamp(s, s"$d/embeddings.parquet"))
-    val p = graft.Stage.materializeOnce(s, path) {
-      pqCents(Tables.embeddings(s, d))
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(p)
-  }
+    * once per corpus snapshot (Stage.stored, keyed by the embeddings
+    * stamp so regeneration rotates it), then every encode/search pass
+    * reads the tiny parquet instead of re-running the Lloyd round.
+    * Identical rows to pqCents(emb) — the pipeline is deterministic —
+    * so the oracles are unaffected. */
+  private def pqCentsStored(s: SparkSession, d: String): DataFrame =
+    graft.Stage.storedParquet(s, "pqcents", d, "embeddings")(
+      pqCents(Tables.embeddings(s, d)))
 
   /** Stored k-means assignment — same build-once/query-many shape for
     * the cluster labels sim_kmeans profiles and dedup_semantic buckets
     * by (production computes labels per snapshot, stores them, and
-    * applies them many times downstream — the dedup_apply precedent). */
-  private def kmeansAssignedStored(s: SparkSession, d: String): DataFrame = {
-    // The path keys on the ASSIGNMENT MODE as well as the input stamp:
-    // labels from the two-level path differ from the exact fallback, so
-    // one mode must never serve its labels to the other through the
-    // cache. The suffixes are NEW in round 9 ("_tl"/"_exact", vs the
-    // old ""/"_coarse") precisely because the default flipped: a stale
-    // round-8 cache dir holding exact labels under the unsuffixed path
-    // must not satisfy a two-level read.
-    val mode = if (s.conf.getOption("spark.graft.kmeans.coarseAssign")
-      .contains("false")) "_exact" else "_tl"
-    val path = graft.Stage.p(s,
-      s"graft_kmasg_${d.replaceAll("[^A-Za-z0-9]", "_")}$mode" +
-        "_" + graft.Stage.inputStamp(s, s"$d/embeddings.parquet"))
-    val p = graft.Stage.materializeOnce(s, path) {
-      kmeansAssigned(s, Tables.embeddings(s, d))
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(p)
-  }
+    * applies them many times downstream — the dedup_apply precedent).
+    * Kind `kmlabels`, not `kmasg`: `graft_kmasg_<d>_<stamp>` once held
+    * exact-scan labels, which a two-level read must never be served. */
+  private def kmeansAssignedStored(s: SparkSession, d: String): DataFrame =
+    graft.Stage.storedParquet(s, "kmlabels", d, "embeddings")(
+      kmeansAssigned(Tables.embeddings(s, d)))
 
   /** Stored per-subspace code table (vec_id, sub, bcode, sub_err) —
     * the compressed index payload itself, the third stored artifact:
     * production encodes the corpus once per snapshot and every search
     * scans ONLY these 8 small ints per vector. */
-  private def pqSubCodesStored(s: SparkSession, d: String): DataFrame = {
-    val path = graft.Stage.p(s,
-      s"graft_pqcodes_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
-        graft.Stage.inputStamp(s, s"$d/embeddings.parquet"))
-    val p = graft.Stage.materializeOnce(s, path) {
-      pqSubCodesWith(Tables.embeddings(s, d), pqCentsStored(s, d))
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(p)
-  }
+  private def pqSubCodesStored(s: SparkSession, d: String): DataFrame =
+    graft.Stage.storedParquet(s, "pqcodes", d, "embeddings")(
+      pqSubCodesWith(Tables.embeddings(s, d), pqCentsStored(s, d)))
 
   /** SEED codebook: 16 md5-sampled sub-vectors, exploded to (code, pos,
     * cv) with 0-based pos (code 0..15 by the same md5 order). */
@@ -1127,12 +1097,11 @@ object SimOps {
   }
 
   /** Test hook: run the full Lloyd pipeline fresh (bypassing the
-    * stored-assignment cache, whose mode suffix would otherwise have
-    * to be cleared between runs) — OperatorSpec compares the declared
-    * two-level and the exact-fallback assignments through this. */
-  private[graft] def testKmeansAssigned(s: SparkSession, d: String)
-      : DataFrame =
-    kmeansAssigned(s, Tables.embeddings(s, d))
+    * stored assignment), with the declared two-level assignment or the
+    * `exact` scan — OperatorSpec compares the two through this. */
+  private[graft] def testKmeansAssigned(s: SparkSession, d: String,
+      exact: Boolean): DataFrame =
+    kmeansAssigned(Tables.embeddings(s, d), exact)
 
   /** Test hook: total fixed-point reconstruction error of the corpus
     * under the seed vs the trained codebook — OperatorSpec asserts the

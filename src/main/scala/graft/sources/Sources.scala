@@ -10,33 +10,26 @@ import Det._
 /** Source/sink operators (SURVEY.md §2.1). Sample inputs are literal
   * constants materialized to fixed paths at query time — never derived
   * from nondeterministic state — so the DuckDB oracle can read the same
-  * bytes. All staging goes through [[graft.Stage]] (Hadoop FS API) so
-  * the fixtures are cluster-visible on a real deployment.
+  * bytes ([[graft.Stage.writeOnce]]); twins derived from a fixture
+  * table are built once per input snapshot ([[graft.Stage.stored]]).
+  * All staging goes through the Hadoop FS API so the files are
+  * cluster-visible on a real deployment.
   */
 object Sources {
   type Q = (SparkSession, String) => DataFrame
 
   /** The date-partitioned lineitem twin (ship_year directory layout),
-    * materialized once per scale dir. Shared by scan_partitioned
+    * stored once per lineitem snapshot. Shared by scan_partitioned
     * (static pruning), join_dpp (dynamic pruning), and
     * sink_parquet_partitioned's baseline. */
   def ensurePartitionedLineitem(s: SparkSession, d: String): String =
-    synchronized {
-      // All derived lineitem/orders twins fold Stage.inputStamp into the
-      // path: fixture regeneration rotates the cache instead of serving
-      // a stale _SUCCESS-marked copy.
-      val path = Stage.p(s, "graft_part_" +
-        d.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Stage.inputStamp(s, s"$d/lineitem.parquet"))
-      if (!Stage.exists(s, s"$path/_SUCCESS")) {
-        Tables.lineitem(s, d)
-          .withColumn("ship_year", year(col("l_shipdate")))
-          .write.mode("overwrite").partitionBy("ship_year").parquet(path)
-      }
-      path
+    Stage.stored(s, "part", d, "lineitem") {
+      Tables.lineitem(s, d)
+        .withColumn("ship_year", year(col("l_shipdate")))
+        .write.mode("overwrite").partitionBy("ship_year").parquet(_)
     }
 
-  /** Range-clustered lineitem twin, materialized once per scale dir:
+  /** Range-clustered lineitem twin, stored once per lineitem snapshot:
     * repartitionByRange(16, l_partkey) + sortWithinPartitions means
     * every output file covers a narrow, disjoint l_partkey range, so
     * the parquet row-group min/max stats let a selective scan decode
@@ -44,19 +37,15 @@ object Sources {
     * once at write time — is the difference between a point-range query
     * reading gigabytes and reading the whole table; PlanSpec proves the
     * pruning from the scan's runtime numOutputRows metric. */
-  def ensureSortedLineitem(s: SparkSession, d: String): String = {
-    val path = Stage.p(s, "graft_sorted_" +
-      d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Stage.inputStamp(s, s"$d/lineitem.parquet"))
-    Stage.materializeOnce(s, path) {
+  def ensureSortedLineitem(s: SparkSession, d: String): String =
+    Stage.stored(s, "sorted", d, "lineitem") {
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
           "l_extendedprice")
         .repartitionByRange(16, col("l_partkey"))
         .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite").parquet(_)
     }
-  }
 
   /** Z-ordered lineitem twin: both filter dimensions are quantized to a
     * shared 8-bit grid (bounds from a broadcast 1-row aggregate — no
@@ -66,11 +55,8 @@ object Sources {
     * prune selective scans on EITHER dimension — the property a plain
     * sort only provides for its leading column. The interleave is 16
     * codegen'd shift/and/or terms, no UDF. */
-  def ensureZorderLineitem(s: SparkSession, d: String): String = {
-    val path = Stage.p(s, "graft_zorder_" +
-      d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Stage.inputStamp(s, s"$d/lineitem.parquet"))
-    Stage.materializeOnce(s, path) {
+  def ensureZorderLineitem(s: SparkSession, d: String): String =
+    Stage.stored(s, "zorder", d, "lineitem") { path =>
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
           "l_extendedprice")
@@ -94,7 +80,6 @@ object Sources {
           "l_extendedprice")
         .write.mode("overwrite").parquet(path)
     }
-  }
 
   private val csvPath = "/tmp/graft_sample.csv"
   private val csvContent =
@@ -112,7 +97,7 @@ object Sources {
     StructField("note", StringType)))
 
   private def ensureCsv(s: SparkSession): String =
-    Stage.write(s, csvPath, csvContent.getBytes(StandardCharsets.UTF_8))
+    Stage.writeOnce(s, csvPath, csvContent.getBytes(StandardCharsets.UTF_8))
 
   private def bz2Path(s: SparkSession): String =
     Stage.p(s, "graft_dump.txt.bz2")
@@ -126,12 +111,12 @@ object Sources {
   /** Write the fake dump through Hadoop's BZip2 codec — the same codec
     * Spark uses to split real .bz2 dumps across tasks (unlike the
     * reference's single-process `bzcat` pipe). */
-  private def ensureBz2(s: SparkSession): String = synchronized {
-    val out = Stage.createBz2(s, bz2Path(s))
-    try out.write(dumpLines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    bz2Path(s)
-  }
+  private def ensureBz2(s: SparkSession): String =
+    Stage.writeOnce(s, bz2Path(s)) {
+      val out = Stage.createBz2(s, bz2Path(s))
+      try out.write(dumpLines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+    }
 
   private def badJsonPath(s: SparkSession): String =
     Stage.p(s, "graft_bad.ndjson")
@@ -143,7 +128,7 @@ object Sources {
     """{broken json line""")
 
   private def ensureBadJson(s: SparkSession): String =
-    Stage.write(s, badJsonPath(s),
+    Stage.writeOnce(s, badJsonPath(s),
       badJsonLines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
 
   val queries: Map[String, Q] = Map(
@@ -178,15 +163,12 @@ object Sources {
       // the raw line, good rows parse to the exact decimal. Per-row
       // malformedness quarantines; the scan never dies — the 100 TB
       // ingest posture.
-      val path = Stage.p(s, "graft_csv_malformed_" +
-        d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        graft.Stage.inputStamp(s, s"$d/supplier.parquet"))
-      graft.Stage.materializeOnce(s, path) {
+      val path = Stage.stored(s, "csv_malformed", d, "supplier") {
         Tables.supplier(s, d)
           .select(concat_ws(",", col("s_suppkey"), col("s_name"),
             when(pmod(col("s_suppkey"), lit(7)) === 0, lit("notanumber"))
               .otherwise(col("s_acctbal").cast(StringType))).as("value"))
-          .write.mode("overwrite").text(path)
+          .write.mode("overwrite").text(_)
       }
       val schema = StructType(Seq(
         StructField("k", LongType),
@@ -237,22 +219,20 @@ object Sources {
       // over years by evolving jobs — newer files carry columns older
       // ones lack. mergeSchema reconciles them at plan time (footer
       // union, no data rewrite); rows from pre-evolution files surface
-      // the new column as NULL. Two generations materialized once per
-      // sf dir: v1 (key, name), v2 adds r_len. mergeSchema is opt-in
+      // the new column as NULL. Two generations stored once per region
+      // snapshot: v1 (key, name), v2 adds r_len. mergeSchema is opt-in
       // because footer-merging 10⁶ files costs a driver pass — enable
       // it per-read like this, not globally.
-      val path = Stage.p(s,
-        "graft_schemamerge_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!Stage.exists(s, s"$path/v2/_SUCCESS")) {
+      val path = Stage.stored(s, "schemamerge", d, "region") { dir =>
         Tables.region(s, d)
           .select(lit(1).cast(IntegerType).as("v"),
             col("r_regionkey"), col("r_name"))
-          .write.mode("overwrite").parquet(s"$path/v1")
+          .write.mode("overwrite").parquet(s"$dir/v1")
         Tables.region(s, d)
           .select(lit(2).cast(IntegerType).as("v"),
             col("r_regionkey"), col("r_name"),
             length(col("r_name")).cast(IntegerType).as("r_len"))
-          .write.mode("overwrite").parquet(s"$path/v2")
+          .write.mode("overwrite").parquet(s"$dir/v2")
       }
       s.read.option("mergeSchema", "true").parquet(s"$path/v1", s"$path/v2")
         .orderBy("v", "r_regionkey")
@@ -261,13 +241,11 @@ object Sources {
     "scan_orc" -> ((s, d) => {
       // Second columnar format: vectorized ORC scan with predicate
       // pushdown — the same scan contract as parquet. The sample is
-      // materialized ONCE per sf dir (behind _SUCCESS, same policy as
+      // stored ONCE per nation snapshot (Stage.stored, as
       // scan_partitioned) so this key times the scan it names, not a
       // rewrite on every invocation.
-      val out = Stage.p(s, "graft_orc_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!Stage.exists(s, s"$out/_SUCCESS")) {
-        Tables.nation(s, d).write.mode("overwrite").orc(out)
-      }
+      val out = Stage.stored(s, "orc", d, "nation")(
+        Tables.nation(s, d).write.mode("overwrite").orc(_))
       s.read.orc(out)
         .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name")).agg(count(lit(1)).as("n_nations"))
@@ -278,17 +256,15 @@ object Sources {
       // Third text interchange format: Spark 4 ships a NATIVE XML
       // datasource (XmlFileFormat — no external package), so the XML
       // feeds/dumps a warehouse still receives scan in parallel tasks
-      // like CSV/JSON. Sample materialized once per sf dir (scan_orc
-      // policy); the read carries an explicit schema + rowTag —
+      // like CSV/JSON. Sample stored once per supplier snapshot
+      // (scan_orc policy); the read carries an explicit schema + rowTag —
       // inferSchema stays banned for the same determinism reasons as
       // CSV (SURVEY §1.3). Doubles survive the text round trip because
       // Spark writes the shortest round-tripping decimal.
-      val out = Stage.p(s, "graft_xml_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!Stage.exists(s, s"$out/_SUCCESS")) {
+      val out = Stage.stored(s, "xml", d, "supplier")(
         Tables.supplier(s, d)
           .write.mode("overwrite").format("xml")
-          .option("rowTag", "supplier").save(out)
-      }
+          .option("rowTag", "supplier").save(_))
       s.read.format("xml")
         .schema(StructType(Seq(
           StructField("s_suppkey", LongType),
@@ -349,20 +325,12 @@ object Sources {
       // repartition(): compaction must MERGE co-located files without
       // a shuffle (at 100 TB production would coalesce per partition
       // directory, or AQE-rebalance, and size by maxRecordsPerFile).
-      // Both stages materialize once per scale dir; the read-back
+      // Both stages are stored once per orders snapshot; the read-back
       // aggregate proves content survived the rewrite byte-exactly.
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        Stage.inputStamp(s, s"$d/orders.parquet")
-      val fragP = Stage.p(s, s"graft_frag_$tag")
-      val frag = Stage.materializeOnce(s, fragP) {
-        Tables.orders(s, d).repartition(128)
-          .write.mode("overwrite").parquet(fragP)
-      }
-      val compP = Stage.p(s, s"graft_compacted_$tag")
-      val compacted = Stage.materializeOnce(s, compP) {
-        s.read.parquet(frag).coalesce(4)
-          .write.mode("overwrite").parquet(compP)
-      }
+      val frag = Stage.stored(s, "frag", d, "orders")(
+        Tables.orders(s, d).repartition(128).write.mode("overwrite").parquet(_))
+      val compacted = Stage.stored(s, "compacted", d, "orders")(
+        s.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(_))
       s.read.parquet(compacted)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -379,18 +347,13 @@ object Sources {
       // repriced copy; read-back proves 1996 changed and its
       // neighbors didn't. The rewrite cost is one partition's data,
       // not the table — the property that makes daily refresh of a
-      // 100 TB table affordable. Baseline table materializes once per
-      // scale dir; the dynamic overwrite is idempotent (derived from
-      // the immutable source), so re-invocations converge.
+      // 100 TB table affordable. Baseline table is stored once per
+      // lineitem snapshot; the dynamic overwrite is idempotent (derived
+      // from the immutable source), so re-invocations converge.
       val base = ensurePartitionedLineitem(s, d)
-      val dynTag = d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        Stage.inputStamp(s, s"$d/lineitem.parquet")
-      val dynP = Stage.p(s, s"graft_dynpart_$dynTag")
-      val out = Stage.materializeOnce(s, dynP) {
+      val out = Stage.stored(s, "dynpart", d, "lineitem")(
         s.read.parquet(base).write.mode("overwrite")
-          .partitionBy("ship_year")
-          .parquet(dynP)
-      }
+          .partitionBy("ship_year").parquet(_))
       val repriced = s.read.parquet(base)
         .filter(col("ship_year") === 1996)
         .withColumn("l_extendedprice", col("l_extendedprice") * lit(0.9))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
 import org.apache.spark.sql.types._
 import graft.{Det, Tables}
 import Det._
@@ -122,7 +121,7 @@ object StreamingOps {
       // the round-2 formulation (rows.toSeq.sortBy inside a
       // flatMapGroupsWithState handler) OOMed exactly there. The
       // incremental variant of the same fold runs under
-      // flatMapGroupsWithState in StreamingSpec, where any in-handler
+      // transformWithState (TwsSessionizer), where any in-handler
       // sort is bounded by one micro-batch, not a user's history.
       import s.implicits._
       val rows = ev(s, d)
@@ -354,7 +353,8 @@ object StreamingOps {
   )
 }
 
-/** Session fold shared by the batch key and the streaming test.
+/** Session fold shared by the batch key and the streaming
+  * [[TwsSessionizer]].
   * State = (sessionCount, eventCount, currentSessionStart, lastSeen,
   * longestDur) — a constant-size tuple, never a row list.
   */
@@ -366,8 +366,7 @@ object StatefulSessionizer {
   private[graft] val zero: St = (0, 0L, Long.MinValue, Long.MinValue, 0L)
 
   /** Advance the state by one time-ordered event. Shared by the batch
-    * fold, the flatMapGroupsWithState handler, and the
-    * transformWithState processor in StreamingSpec. */
+    * fold and the transformWithState processor (TwsSessionizer). */
   private[graft] def step(st: St, sec: Long): St = {
     var (nSess, nEv, sessStart, last, longest) = st
     if (last == Long.MinValue || sec - last >= 1800L) {
@@ -405,20 +404,4 @@ object StatefulSessionizer {
         (user, st._1, st._2, st._5)
       }
     }
-
-  /** Incremental handler for the streaming (micro-batch) execution in
-    * StreamingSpec. The per-call sort is bounded by ONE micro-batch's
-    * rows for the key (arrival-order independence within the batch) —
-    * not by the user's full history, which lives only as the O(1)
-    * state tuple across batches.
-    */
-  def handle(userId: Long, rows: Iterator[Row],
-      state: GroupState[St]): Iterator[Out] = {
-    val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-    if (sorted.isEmpty) return Iterator.empty
-    var st = state.getOption.getOrElse(zero)
-    sorted.foreach { r => st = step(st, r._2) }
-    state.update(st)
-    Iterator.single((userId, st._1, st._2, st._5))
-  }
 }

@@ -43,8 +43,7 @@ object Wd {
     /** Stage the plain fixture at [[fixturePath]], once per JVM while
       * the staged file is unchanged ([[graft.Stage.writeOnce]]). */
     def stage(s: SparkSession): String =
-      graft.Stage.writeOnce(s, fixturePath)(
-        graft.Stage.write(s, fixturePath, bytes))
+      graft.Stage.writeOnce(s, fixturePath, bytes)
 
     /** Stage the fixture twice: the bz2 twin the composed ETL ingests,
       * and the plain copy the oracle reads — byte-identical content, so
@@ -104,11 +103,9 @@ object Wd {
   val dirtyArrayFixturePath = "/tmp/graft_wd_entities_array_dirty.json"
 
   def ensureArrayFixture(s: SparkSession): String =
-    graft.Stage.writeOnce(s, arrayFixturePath) {
-      val body = "[\n" + entityDump.lines.mkString(",\n") + "\n]\n"
-      graft.Stage.write(s, arrayFixturePath,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    graft.Stage.writeOnce(s, arrayFixturePath,
+      ("[\n" + entityDump.lines.mkString(",\n") + "\n]\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   def ensureDirtyArrayFixture(s: SparkSession): String =
     graft.Stage.writeOnce(s, dirtyArrayFixturePath) {

@@ -127,7 +127,20 @@ class HarnessSpec extends AnyFunSuite {
         .map(_.group(1))
     }.toSet
     assert(keys === Set("checkpointDir", "stage.dir", "wd.path", "wd.bz2",
-      "wd.lexemes", "wd.mediainfo", "wd.mediainfo.bz2", "kmeans.coarseAssign"))
+      "wd.lexemes", "wd.mediainfo", "wd.mediainfo.bz2"))
+  }
+
+  test("src/main guards stored artifacts only through Stage") {
+    // Stage.stored owns the artifact path, input stamp, lock and
+    // _SUCCESS marker; Stage.writeOnce owns literal fixtures
+    val stray = files(root, ".scala")
+      .filterNot(_.getFileName.toString == "Stage.scala")
+      .flatMap { f =>
+        val src = Files.readString(f)
+        Seq("_SUCCESS", "inputStamp(", "materializeOnce")
+          .filter(src.contains).map(n => s"${root.relativize(f)}: $n")
+      }
+    assert(stray.isEmpty, stray.mkString(", "))
   }
 
   test("tools scripts parse and every recipe names a main that exists") {

@@ -110,12 +110,7 @@ class PlanSpec extends AnyFunSuite {
     // The 100 TB layout (SURVEY §7.5): fact tables partitioned by date →
     // a date filter never touches irrelevant files.
     import org.apache.spark.sql.functions._
-    val path = "/tmp/graft_part_lineitem"
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      Tables.lineitem(spark, Spec.sf001)
-        .withColumn("ship_year", year(col("l_shipdate")))
-        .write.mode("overwrite").partitionBy("ship_year").parquet(path)
-    }
+    val path = graft.sources.Sources.ensurePartitionedLineitem(spark, Spec.sf001)
     val df = spark.read.parquet(path).filter(col("ship_year") === 1996)
       .groupBy(col("l_returnflag")).count()
     val p = df.queryExecution

@@ -380,9 +380,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState sessionizer matches the fMGWS fold across batches") {
-    // Spark 4's successor API running the SAME O(1) session fold
-    // (StatefulSessionizer.step): state survives between micro-batches,
-    // per-batch rows are sorted only within the bounded batch.
+    // Spark 4's arbitrary-state API running the batch key's O(1)
+    // session fold (StatefulSessionizer.step): state survives between
+    // micro-batches, per-batch rows are sorted only within the bounded
+    // batch, so out-of-order arrival within a batch cannot split a
+    // session.
     implicit val sqlCtx = spark.sqlContext
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -401,27 +403,18 @@ class StreamingSpec extends AnyFunSuite {
         q.processAllAvailable()
         in.addData((1L, 5000L, 3L)) // gap >= 1800 -> second session
         q.processAllAvailable()
-        val last = spark.sql(
-          """SELECT n_sessions, n_events, longest_s FROM tws_sess
-             WHERE user_id = 1 ORDER BY n_events DESC LIMIT 1""").head()
-        // same result the fMGWS test pins: 2 sessions, 3 events, 200 s
-        assert((last.getInt(0), last.getLong(1), last.getLong(2)) === ((2, 3L, 200L)))
+        def last(user: Long) = {
+          val r = spark.sql(
+            s"""SELECT n_sessions, n_events, longest_s FROM tws_sess
+                WHERE user_id = $user ORDER BY n_events DESC LIMIT 1""").head()
+          (r.getInt(0), r.getLong(1), r.getLong(2))
+        }
+        // user 1: gap 1000→1200 merges, 1200→5000 splits → 2 sessions
+        assert(last(1L) === ((2, 3L, 200L)))
+        assert(last(2L) === ((1, 1L, 0L)))
       } finally q.stop()
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("flatMapGroupsWithState sessionizer is arrival-order independent") {
-    val rows = Seq( // (user, sec, event_id) deliberately out of order
-      (1L, 5000L, 3L), (1L, 1000L, 1L), (1L, 1200L, 2L),
-      (2L, 100L, 4L))
-    import org.apache.spark.sql.streaming.{GroupStateTimeout}
-    val out = rows.toDS().groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        graft.streaming.StatefulSessionizer.handle)
-      .collect().sortBy(_._1)
-    // user 1: gap 1000→1200 merges, 1200→5000 splits → 2 sessions
-    assert(out === Array((1L, 2, 3L, 200L), (2L, 1, 1L, 0L)))
   }
 
   test("entity dump ingests as a file STREAM with batch-identical flatten") {

@@ -27,14 +27,16 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 
 # The components-family oracles close the near-dup pair graph with a
 # recursive CTE (all-pairs reachability) — quadratic in component size,
-# which OOMs single-node DuckDB at sf1 even though the Spark side is a
-# log-round pointer-jumping fixpoint. With GRAFT_ITER_CLOSURE=1 the
-# replay swaps ONLY the reach/comp block for the same iterative
-# min-label + pointer-jump algorithm DuckDB-side (mirroring
-# DedupOps.scala's fixpoint), keeping the simhash CTE chain and the
-# final per-key SELECT verbatim. This is an independent second
-# implementation of the closure, so a hash match is stronger evidence
-# than the recursive mirror, and it runs at sf1 in bounded memory.
+# which OOMs single-node DuckDB at sf1 (the Spark side labels by
+# union-find plus a FastSV-hooked merge, DedupOps.componentLabels).
+# With GRAFT_ITER_CLOSURE=1 the replay swaps ONLY the reach/comp block
+# for an iterative min-label + pointer-jump loop with no hooking,
+# keeping the simhash CTE chain and the final per-key SELECT verbatim.
+# This is an independent second implementation of the closure, so a
+# hash match is stronger evidence than the recursive mirror, and it
+# runs at sf1 in bounded memory. Its 50-round cap is the cap the
+# earlier Spark min-label loop hit, unconverged, on a shuffled
+# 20k-vertex path.
 _REACH_START = "reach(x, y) AS ("
 _REACH_END = "GROUP BY n.x)"
 
